@@ -45,7 +45,7 @@ SUPPORTED_WRITER_FEATURES = {
     "vacuumProtocolCheck",
     "generatedColumns",  # computed when absent, enforced when provided (writer.py)
     "changeDataFeed",  # DML writes _change_data + cdc actions (writer._write_cdc)
-    "inCommitTimestamp",  # monotonic commitInfo.inCommitTimestamp (writer._commit)
+    "inCommitTimestamp",  # monotonic commitInfo.inCommitTimestamp (transaction.py)
     "v2Checkpoint",  # sidecar checkpoints written by writer._checkpoint_v2
     "variantType",  # declared by create() when the schema has a variant column
     "variantType-preview",
@@ -57,7 +57,7 @@ SUPPORTED_WRITER_FEATURES = {
     "identityColumns",  # value allocation + HWM tracking in writer.append
     "allowColumnDefaults",  # CURRENT_DEFAULT fill on append (writer.set_default)
     "clustering",  # clustered tables: delta.clustering domain metadata; OPTIMIZE clusters
-    "rowTracking",  # baseRowId allocation + rowIdHighWaterMark (writer._assign_row_ids)
+    "rowTracking",  # baseRowId allocation + rowIdHighWaterMark (writer.assign_row_ids)
     # all-or-nothing history cleanup below requireCheckpointProtectionBeforeVersion
     # (writer.cleanup_expired_logs honors it; DROP FEATURE TRUNCATE HISTORY writes it)
     "checkpointProtection",
@@ -145,6 +145,11 @@ def _dv_unique_id(dv: dict | None) -> str | None:
     return f"{dv.get('storageType')}{dv.get('pathOrInlineDv')}@{dv.get('offset') or 0}"
 
 
+def _file_key(path: str, dv: dict | None) -> str:
+    """The add/remove primary key (path, deletionVector.uniqueId)."""
+    return path + "\x00" + (_dv_unique_id(dv) or "")
+
+
 class Snapshot:
     """Reconciled state of one Delta table at one version."""
 
@@ -191,17 +196,25 @@ class Snapshot:
 
         ``base``: a previously built snapshot of the same table; when its
         version ≤ target only the newer commits are read (incremental
-        refresh). A backward move ignores the base and rebuilds.
+        refresh), and a base already at the target is returned as is
+        (snapshots are immutable). A backward move ignores the base and
+        rebuilds.
 
         ``actions``: the TARGET commit's already-parsed actions — a
-        caller walking the log commit-by-commit (CDF) has just read the
-        JSON it is asking this build to apply; passing it here makes the
-        single-commit incremental refresh parse each commit exactly
-        once instead of twice. Only consulted for the target version
-        and never for a compaction-covered one.
+        caller walking the log commit-by-commit (CDF), or a transaction
+        that has just written the commit, holds the actions it is asking
+        this build to apply. With ``base`` at ``version - 1`` the build
+        then neither lists the log nor reads the commit; otherwise the
+        actions are only consulted for the target version and never for
+        a compaction-covered one.
         """
-        target = log.resolve_version(version)
-        if base is not None and base.log.table_path == log.table_path and base.version <= target:
+        same_table = base is not None and base.log.table_path == log.table_path
+        direct = (same_table and actions is not None and version is not None
+                  and version == base.version + 1)
+        target = version if direct else log.resolve_version(version)
+        if same_table and base.version == target:
+            snap, start = base, target + 1
+        elif same_table and base.version < target:
             snap = cls(log, target)
             snap.metadata = dict(base.metadata)
             snap.protocol = dict(base.protocol)
@@ -220,9 +233,14 @@ class Snapshot:
             snap.checkpoint_version = ckpt_version  # observability
             if ckpt_version is not None:
                 start = ckpt_version + 1
-        commits, _ = log.list_log_files()
-        segments = log.list_compacted_segments()
         v = start
+        if direct:
+            for action in actions:
+                snap._apply(action, target)
+            v = target + 1
+        elif start <= target:
+            commits, _ = log.list_log_files()
+            segments = log.list_compacted_segments()
         while v <= target:
             seg = segments.get(v)
             if seg is not None and seg[0] <= target:
@@ -386,7 +404,7 @@ class Snapshot:
                     None if drcvs[i] is None else int(drcvs[i])
                 ),
             )
-            files[f.path + "\x00" + (f.dv_unique_id() or "")] = f
+            files[_file_key(f.path, f.deletion_vector)] = f
             tombstones.pop(f.path, None)
 
     def _apply_removes_columnar(self, arr) -> None:
@@ -429,13 +447,13 @@ class Snapshot:
             )
             # same (path, dvId) replaces; a different dvId for the same path
             # coexists until its remove tombstone lands (spec reconciliation)
-            self.files[f.path + "\x00" + (f.dv_unique_id() or "")] = f
+            self.files[_file_key(f.path, f.deletion_vector)] = f
             self.tombstones.pop(f.path, None)
         elif "remove" in action and action["remove"]:
             r = action["remove"]
             path = r["path"]
             dv = r.get("deletionVector")
-            evicted = self.files.pop(path + "\x00" + (_dv_unique_id(dv) or ""), None)
+            evicted = self.files.pop(_file_key(path, dv), None)
             ts = int(r.get("deletionTimestamp") or 0)
             prev = self.tombstones.get(path)
             if prev is None or int(prev.get("deletionTimestamp") or 0) <= ts:

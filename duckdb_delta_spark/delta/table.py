@@ -246,26 +246,33 @@ class DeltaTable:
         expected_last: int | None = None,
     ) -> int:
         """Commit a bare ``txn`` action (idempotency bookmark) — the
-        ``delta_set_transaction_version`` analogue."""
+        ``delta_set_transaction_version`` analogue. ``expected_last`` is a
+        compare-and-set: the bookmark commits only while the app's last
+        version is still ``expected_last``, re-checked after every lost
+        race (IdempotencyError otherwise)."""
         import time
 
         from duckdb_delta_spark.delta.errors import IdempotencyError
+        from duckdb_delta_spark.delta.transaction import Transaction
         from duckdb_delta_spark.delta.writer import _commit_info
 
-        if expected_last is not None:
-            have = self.snapshot.transaction_version(app_id)
-            if have != expected_last:
+        def recheck(old, snap, actions):
+            have = snap.transaction_version(app_id)
+            if expected_last is not None and have != expected_last:
                 raise IdempotencyError(
                     f"app {app_id!r}: expected last version {expected_last}, found {have}"
                 )
-        actions = [
+            return actions
+
+        actions = recheck(None, self.snapshot, [
             {"commitInfo": _commit_info("SET TRANSACTION")},
             {"txn": {"appId": app_id, "version": int(version),
                      "lastUpdated": int(time.time() * 1000)}},
-        ]
-        v = self.log.latest_version() + 1
-        self.log.commit(v, actions)
-        return v
+        ])
+        # a state-free marker: it rebases past any racer that left the
+        # app's version alone
+        return Transaction(self.log, self.snapshot, retries=7,
+                           rebase=recheck).commit(actions)
 
     # ---------- introspection ----------
 

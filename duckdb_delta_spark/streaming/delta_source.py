@@ -1952,76 +1952,25 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
             "commitPrepareTimeMs": str(prepare_ms),
             "numStatsFallback": str(len(missing)),
         }
-        from duckdb_delta_spark.delta.errors import CommitConflictError
-        from duckdb_delta_spark.delta.writer import assign_row_ids
+        from duckdb_delta_spark.delta.transaction import ReadSet, Transaction
 
-        attempt = 0
-        while True:
-            version = snap.version + 1
-            # row tracking: allocate baseRowId/defaultRowCommitVersion
-            # for the batch's adds from the table's rowIdHighWaterMark
-            # (same allocator as the batch writer; re-run per ATTEMPT so
-            # a retry reallocates past the race winner's ranges — the
-            # function is retry-idempotent, it drops its stale watermark
-            # action)
-            assign_row_ids(version, actions, snap)
-            # in-commit timestamps (same invariant as writer._commit):
-            # once the table carries ICT, EVERY commit must — including
-            # streamed batches; monotonic vs the predecessor, re-stamped
-            # per attempt so a retry stays above the race winner's ICT
-            ict_on = (
-                snap.configuration.get(
-                    "delta.enableInCommitTimestamps", "").lower() == "true"
-            )
-            if not ict_on and "delta.enableInCommitTimestamps" \
-                    not in snap.configuration:
-                # predecessor probe ONLY when the protocol lists the
-                # feature — the common non-ICT table must not pay a
-                # commit-JSON read per batch
-                ict_on = (
-                    "inCommitTimestamp" in (
-                        snap.protocol.get("writerFeatures") or [])
-                    and log.read_ict(version - 1) is not None
-                )
-            if ict_on:
-                prev_ict = log.read_ict(version - 1) or 0
-                info["inCommitTimestamp"] = max(
-                    int(time.time() * 1000), prev_ict + 1)
-            else:
-                # a LOSING attempt may have stamped ICT against a
-                # predecessor that carried one; if the race winner's
-                # commit doesn't, the stale stamp must not leak into
-                # this attempt's commitInfo (non-monotonic otherwise)
-                info.pop("inCommitTimestamp", None)
-            try:
-                log.commit(version, actions)
-                break
-            except CommitConflictError:
-                # a racing writer (maintenance OPTIMIZE, another batch
-                # job) took this version. The sink is a blind append, so
-                # it commutes with anything that left the table's
-                # metadata/protocol intact — re-base and retry instead
-                # of failing the whole streaming query (Spark would call
-                # abort(), unlinking this batch's files).
-                attempt += 1
-                fresh = Snapshot.build(log, base=snap)
-                if attempt > 5 or fresh.metadata != snap.metadata \
-                        or fresh.protocol != snap.protocol:
-                    raise
-                snap = fresh
-                replayed = snap.transaction_version(self.app_id)
-                if replayed is not None and batchId <= replayed:
-                    # the racer was a twin of this very batch (duplicate
-                    # query on the same checkpoint): already committed
-                    for m in files:
-                        try:
-                            os.unlink(os.path.join(
-                                self.table_path, m.rel_path))
-                        except OSError:
-                            pass
-                    _SINK_SNAP_CACHE[self.table_path] = snap
-                    return
-        _SINK_SNAP_CACHE[self.table_path] = snap
+        def twin(old, fresh, acts):
+            # the racer was a twin of this very batch (duplicate query on
+            # the same checkpoint): already committed
+            replayed = fresh.transaction_version(self.app_id)
+            return None if replayed is not None and batchId <= replayed \
+                else acts
+
+        # a blind append: it commutes with any racer (maintenance
+        # OPTIMIZE, another batch job) that left metadata and protocol
+        # intact — rebase instead of failing the whole streaming query
+        txn = Transaction(log, snap, retries=5,
+                          read=ReadSet(metadata=True, protocol=True),
+                          staged=[m.rel_path for m in files], rebase=twin)
+        version = txn.commit(actions)
+        _SINK_SNAP_CACHE[self.table_path] = txn.snapshot
+        if version is None:
+            return
         from duckdb_delta_spark.delta.logging import emit
 
         emit(
