@@ -186,14 +186,15 @@ def _walk_changes(
     derives the row changes, and a metadata-only boundary commit is
     known row-free by construction, so no probe job is ever issued
     for it."""
-    end = log.resolve_version(ending_version)
+    # one directory listing for the whole walk — commit_timestamp would
+    # otherwise re-list per version, making CDF O(versions × listdir)
+    segment = log.list_log_files()
+    end = log.resolve_version(ending_version, segment)
     if starting_version > end:
         raise ValueError(f"starting_version {starting_version} > end {end}")
     from duckdb_delta_spark.delta.errors import SchemaError
 
-    # one directory listing for the whole walk — commit_timestamp would
-    # otherwise re-list per version, making CDF O(versions × listdir)
-    commit_paths, _ = log.list_log_files()
+    commit_paths = segment.commits
     parts: list[DataFrame] = []
     if starting_version < 0:
         # pre-table baseline (timestamp bound before the first commit):

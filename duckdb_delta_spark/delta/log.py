@@ -9,6 +9,18 @@ Log JSON files are small relative to the data they describe (even a 100 TB
 table has a log in the low GBs, and checkpoints collapse it), so they are
 read driver-side with ``json``/``pyarrow`` — the same placement as the
 reference, whose kernel runs on the client. Nothing here touches executors.
+
+One listing per resolution, as in delta-kernel-rs's ``LogSegment``:
+:meth:`DeltaLog.list_log_files` makes the single ``os.listdir`` and
+returns a :class:`LogSegment` — commits, validated checkpoint parts,
+minor-compacted segments and the latest version. Version resolution,
+checkpoint choice and replay all read that one value;
+:meth:`LogSegment.replay` turns it into the :class:`Replay` of one
+version: the checkpoint a snapshot starts from and the JSON files applied
+on top, in order. Two snapshots with equal replays applied the same
+files in the same order, which is what the snapshot cache's hit rule
+(delta/snapshot.py) compares. A ``log_tail`` log (CCv2) lists nothing:
+its segment is the tail plus the ``_last_checkpoint`` hint.
 """
 
 from __future__ import annotations
@@ -17,6 +29,7 @@ import json
 import os
 import re
 import tempfile
+from dataclasses import dataclass, field
 from typing import Iterable
 
 from duckdb_delta_spark.delta.errors import (
@@ -45,6 +58,100 @@ _CHECKPOINT_V2_RE = re.compile(
 )
 
 ACTION_KEYS = ("metaData", "protocol", "add", "remove", "txn", "domainMetadata", "commitInfo", "cdc")
+
+
+@dataclass(frozen=True)
+class Replay:
+    """How the snapshot at ``version`` is rebuilt: the checkpoint it
+    starts from (``checkpoint_parts`` empty: from version 0) and the JSON
+    files applied on top, in order, as ``(lo, hi, path)`` steps — the
+    commit ``lo == hi``, or a minor-compacted segment (its path ends in
+    ``.compacted.json``) covering ``[lo, hi]``."""
+
+    version: int
+    checkpoint: int | None
+    checkpoint_parts: tuple[str, ...]
+    steps: tuple[tuple[int, int, str], ...]
+
+    def extends(self, base: "Replay") -> bool:
+        """True when ``base`` replays a prefix of this replay: the same
+        checkpoint, and its steps are the first of these."""
+        return (base.version <= self.version
+                and base.checkpoint_parts == self.checkpoint_parts
+                and self.steps[:len(base.steps)] == base.steps)
+
+    def then(self, version: int, path: str) -> "Replay":
+        """This replay followed by the commit ``version`` at ``path``."""
+        return Replay(version, self.checkpoint, self.checkpoint_parts,
+                      self.steps + ((version, version, path),))
+
+
+#: the replay of the empty table before version 0
+EMPTY_REPLAY = Replay(-1, None, (), ())
+
+
+@dataclass
+class LogSegment:
+    """One listing of ``_delta_log`` (delta-kernel-rs ``LogSegment``).
+
+    Unpacks as ``(commits, checkpoints)``: version → commit JSON path,
+    and version → the one complete checkpoint part set. ``compacted``:
+    minor-compacted segments, lo → (hi, path), widest hi per lo."""
+
+    table_path: str
+    commits: dict[int, str]
+    checkpoints: dict[int, list[str]]
+    compacted: dict[int, tuple[int, str]] = field(default_factory=dict)
+
+    def __iter__(self):
+        return iter((self.commits, self.checkpoints))
+
+    @property
+    def latest(self) -> int:
+        """The newest version the listing shows. A minor-compacted
+        segment may be the only surviving record of its range (the
+        per-commit JSONs can be cleaned under it)."""
+        versions = set(self.commits) | set(self.checkpoints)
+        versions |= {hi for hi, _ in self.compacted.values()}
+        if not versions:
+            raise MalformedLogError(f"empty _delta_log at {self.table_path}")
+        return max(versions)
+
+    def replay(self, target: int) -> Replay:
+        """The replay of version ``target``: the newest complete
+        checkpoint at or below it, then each later version's commit — or
+        the widest compacted segment starting there that ends at or below
+        ``target``, which stands in for its commits (retention may
+        already have deleted them)."""
+        ckpt = max((v for v in self.checkpoints if v <= target), default=None)
+        steps = []
+        v = 0 if ckpt is None else ckpt + 1
+        while v <= target:
+            seg = self.compacted.get(v)
+            if seg is not None and seg[0] <= target:
+                steps.append((v, seg[0], seg[1]))
+                v = seg[0] + 1
+                continue
+            path = self.commits.get(v)
+            if path is None:
+                # distinguish an expired prefix (log retention cleanup
+                # removed commits 0..k and no checkpoint ≤ target
+                # survives) from genuine log corruption: the former is a
+                # version-unavailable condition, not a malformed log
+                if self.commits and v < min(self.commits):
+                    raise InvalidTableVersionError(
+                        f"version {target} predates retained history at "
+                        f"{self.table_path}: earliest retained commit is "
+                        f"{min(self.commits)} and no checkpoint covers "
+                        f"{target} (log retention cleanup)"
+                    )
+                raise MalformedLogError(
+                    f"log has a gap: commit {v} missing (target {target})"
+                )
+            steps.append((v, v, path))
+            v += 1
+        parts = tuple(self.checkpoints[ckpt]) if ckpt is not None else ()
+        return Replay(target, ckpt, parts, tuple(steps))
 
 
 class LogStore:
@@ -115,56 +222,32 @@ class DeltaLog:
         self.log_tail = list(log_tail) if log_tail else None
         self.store = store or LocalLogStore()
         self.commit_fn = commit_fn
-        if self.log_tail is None and not os.path.isdir(self.log_path):
+        #: version → commit path of a log_tail log (entries may live
+        #: OUTSIDE _delta_log: CCv2 staged commits)
+        self._tail: dict[int, str] | None = None
+        if self.log_tail is not None:
+            self._tail = {}
+            for p in self.log_tail:
+                name = os.path.basename(p)
+                m = _COMMIT_RE.match(name) or _STAGED_COMMIT_RE.match(name)
+                if not m:
+                    raise MalformedLogError(f"log_tail entry is not a commit file: {p}")
+                self._tail[int(m.group(1))] = p
+        elif not os.path.isdir(self.log_path):
             raise InvalidTableLocationError(
                 f"no Delta table found at {table_path!r} (missing _delta_log)"
             )
 
     # ---------- listing ----------
 
-    def list_log_files(self) -> tuple[dict[int, str], dict[int, list[str]]]:
-        """Return ``(commits, checkpoints)``: version → json path, and
-        version → checkpoint part paths (sorted)."""
+    def list_log_files(self) -> LogSegment:
+        """The one listing of the log, as a :class:`LogSegment` (unpacks
+        as ``(commits, checkpoints)``)."""
+        if self._tail is not None:
+            return LogSegment(self.table_path, dict(self._tail),
+                              self._hinted_checkpoint())
         commits: dict[int, str] = {}
-        checkpoints: dict[int, list[str]] = {}
-        if self.log_tail is not None:
-            for p in self.log_tail:
-                name = os.path.basename(p)
-                m = _COMMIT_RE.match(name) or _STAGED_COMMIT_RE.match(name)
-                if not m:
-                    raise MalformedLogError(f"log_tail entry is not a commit file: {p}")
-                commits[int(m.group(1))] = p
-            hint = self.last_checkpoint_hint()
-            if hint and "version" in hint:
-                v = int(hint["version"])
-                n = int(hint.get("parts") or 0)
-                if n:
-                    parts = [
-                        os.path.join(
-                            self.log_path,
-                            f"{v:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet",
-                        )
-                        for i in range(n)
-                    ]
-                    if all(os.path.isfile(p) for p in parts):
-                        checkpoints[v] = parts
-                else:
-                    part = os.path.join(self.log_path, f"{v:020d}.checkpoint.parquet")
-                    if os.path.isfile(part):
-                        checkpoints[v] = [part]
-                    else:
-                        import glob as _glob
-
-                        v2 = [
-                            p
-                            for p in _glob.glob(
-                                os.path.join(self.log_path, f"{v:020d}.checkpoint.*")
-                            )
-                            if _CHECKPOINT_V2_RE.match(os.path.basename(p))
-                        ]
-                        if v2:
-                            checkpoints[v] = [sorted(v2)[-1]]
-            return commits, checkpoints
+        compacted: dict[int, tuple[int, str]] = {}
         raw: dict[int, list[str]] = {}
         for name in os.listdir(self.log_path):
             m = _COMMIT_RE.match(name)
@@ -176,11 +259,48 @@ class DeltaLog:
                 raw.setdefault(int(m.group(1)), []).append(
                     os.path.join(self.log_path, name)
                 )
+                continue
+            m = _COMPACTED_RE.match(name)
+            if m:
+                lo, hi = int(m.group(1)), int(m.group(2))
+                cur = compacted.get(lo)
+                if cur is None or hi > cur[0]:
+                    compacted[lo] = (hi, os.path.join(self.log_path, name))
+        checkpoints: dict[int, list[str]] = {}
         for v, parts in raw.items():
             usable = self._validate_checkpoint_parts(v, parts)
             if usable:
                 checkpoints[v] = usable
-        return commits, checkpoints
+        return LogSegment(self.table_path, commits, checkpoints, compacted)
+
+    def _hinted_checkpoint(self) -> dict[int, list[str]]:
+        """A ``log_tail`` log's checkpoint: the one ``_last_checkpoint``
+        names, when all of its parts exist."""
+        hint = self.last_checkpoint_hint()
+        if not hint or "version" not in hint:
+            return {}
+        v = int(hint["version"])
+        n = int(hint.get("parts") or 0)
+        if n:
+            parts = [
+                os.path.join(
+                    self.log_path,
+                    f"{v:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet",
+                )
+                for i in range(n)
+            ]
+            return {v: parts} if all(os.path.isfile(p) for p in parts) else {}
+        part = os.path.join(self.log_path, f"{v:020d}.checkpoint.parquet")
+        if os.path.isfile(part):
+            return {v: [part]}
+        import glob as _glob
+
+        v2 = [
+            p
+            for p in _glob.glob(os.path.join(self.log_path, f"{v:020d}.checkpoint.*"))
+            if _CHECKPOINT_V2_RE.match(os.path.basename(p))
+        ]
+        return {v: [sorted(v2)[-1]]} if v2 else {}
 
     @staticmethod
     def _validate_checkpoint_parts(version: int, paths: list[str]) -> list[str] | None:
@@ -211,15 +331,9 @@ class DeltaLog:
             return [v2[-1]]  # any one manifest is self-complete
         return None
 
-    def latest_version(self) -> int:
-        commits, checkpoints = self.list_log_files()
-        versions = set(commits) | set(checkpoints)
-        # a minor-compacted segment may be the only surviving record of
-        # its range (the per-commit JSONs can be cleaned under it)
-        versions |= {hi for hi, _ in self.list_compacted_segments().values()}
-        if not versions:
-            raise MalformedLogError(f"empty _delta_log at {self.table_path}")
-        return max(versions)
+    def latest_version(self, segment: LogSegment | None = None) -> int:
+        """HEAD, from ``segment`` or a fresh listing."""
+        return (segment or self.list_log_files()).latest
 
     def last_checkpoint_hint(self) -> dict | None:
         """Parse ``_last_checkpoint`` (a pointer so clients can avoid a full
@@ -240,21 +354,7 @@ class DeltaLog:
         ``<lo>.<hi>.compacted.json``): lo → (hi, path), widest hi per lo.
         Segments substitute for the per-commit JSONs of their range
         during replay — the individual commits may even be deleted."""
-        out: dict[int, tuple[int, str]] = {}
-        if self.log_tail is not None:
-            return out
-        try:
-            names = os.listdir(self.log_path)
-        except OSError:
-            return out
-        for name in names:
-            m = _COMPACTED_RE.match(name)
-            if m:
-                lo, hi = int(m.group(1)), int(m.group(2))
-                cur = out.get(lo)
-                if cur is None or hi > cur[0]:
-                    out[lo] = (hi, os.path.join(self.log_path, name))
-        return out
+        return self.list_log_files().compacted
 
     @staticmethod
     def _parse_action_text(text: str) -> list[dict] | None:
@@ -299,39 +399,24 @@ class DeltaLog:
                 if parsed is not None:
                     return parsed
                 raise MalformedLogError(
-                    f"bad JSON at {path}:{lineno}: {e}"
+                    f"{path}:{lineno}: invalid JSON ({e})"
                 ) from None
         return actions
 
     def read_commit(self, version: int) -> list[dict]:
-        path = os.path.join(self.log_path, f"{version:020d}.json")
-        if self.log_tail is not None:
-            # log_tail entries may live OUTSIDE _delta_log (CCv2 staged
-            # commits) — resolve through the same map listing produced
-            commits, _ = self.list_log_files()
-            path = commits.get(version, path)
-        actions: list[dict] = []
+        """Actions of commit ``version``."""
         try:
-            with open(path, "r", encoding="utf-8") as f:
-                text = f.read()
+            return self.read_actions_file(self._commit_path(version))
         except FileNotFoundError:
             raise MissingVersionError(
                 f"commit {version} missing from log at {self.table_path}"
             ) from None
-        for lineno, line in enumerate(text.splitlines(), 1):
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                actions.append(json.loads(line))
-            except json.JSONDecodeError as e:
-                parsed = self._parse_action_text(text)
-                if parsed is not None:
-                    return parsed
-                raise MalformedLogError(
-                    f"{path}:{lineno}: invalid JSON ({e})"
-                ) from None
-        return actions
+
+    def _commit_path(self, version: int) -> str:
+        """Where commit ``version`` lives: the path a listing finds it
+        at, without listing."""
+        path = os.path.join(self.log_path, f"{version:020d}.json")
+        return self._tail.get(version, path) if self._tail is not None else path
 
     def read_checkpoint(self, paths: list[str]) -> list[dict]:
         """Read checkpoint parquet part(s) into action dicts (same shape as
@@ -347,23 +432,26 @@ class DeltaLog:
                     actions.append({key: _normalize_maps(val)})
         return actions
 
-    def read_checkpoint_table(self, paths: list[str]):
+    def read_checkpoint_table(self, paths: list[str],
+                              sidecars: list[str] | None = None):
         """Checkpoint part(s) as one concatenated pyarrow Table.
 
         v2 (UUID-named manifest): sidecar references resolve against
         ``_delta_log/_sidecars/``; a missing sidecar is a loud
-        MalformedLogError, never a silently truncated snapshot."""
+        MalformedLogError, never a silently truncated snapshot. The
+        sidecar paths read are appended to ``sidecars`` when given."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if len(paths) == 1 and _CHECKPOINT_V2_RE.match(os.path.basename(paths[0])):
-            return self._read_checkpoint_v2(paths[0])
+            return self._read_checkpoint_v2(
+                paths[0], sidecars if sidecars is not None else [])
         tables = [pq.read_table(p) for p in paths]
         return tables[0] if len(tables) == 1 else pa.concat_tables(
             tables, promote_options="permissive"
         )
 
-    def _read_checkpoint_v2(self, manifest_path: str):
+    def _read_checkpoint_v2(self, manifest_path: str, read: list[str]):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -376,6 +464,7 @@ class DeltaLog:
                     f"v2 checkpoint sidecar missing: {full} "
                     f"(manifest {manifest_path})"
                 )
+            read.append(full)
             return pq.read_table(full)
 
         if manifest_path.endswith(".parquet"):
@@ -512,10 +601,7 @@ class DeltaLog:
         even for thousand-add-file commits."""
         if version < 0:
             return None
-        path = os.path.join(self.log_path, f"{version:020d}.json")
-        if self.log_tail is not None:
-            commits, _ = self.list_log_files()
-            path = commits.get(version, path)
+        path = self._commit_path(version)
         try:
             with open(path, "r", encoding="utf-8") as f:
                 for line in f:
@@ -655,8 +741,11 @@ class DeltaLog:
             )
         return best
 
-    def resolve_version(self, version: int | None) -> int:
-        latest = self.latest_version()
+    def resolve_version(self, version: int | None,
+                        segment: LogSegment | None = None) -> int:
+        """``version`` checked against HEAD (default HEAD), from
+        ``segment`` or a fresh listing."""
+        latest = self.latest_version(segment)
         if version is None:
             return latest
         if version < 0 or version > latest:

@@ -29,7 +29,7 @@ _SINKS: list[Callable[[dict], None]] = []
 
 #: event names emitted by the engine (stable surface, tests match on these)
 EVENTS = (
-    "snapshot.build",      # table_path, version, n_files, from_checkpoint
+    "snapshot.build",      # table_path, version, n_files, incremental, replay_start, cached
     "scan.plan",           # table_path, version, skip report fields
     "scan.dv_route",       # table_path, n_descriptors, cardinality, path
     "commit.write",        # table_path, version, operation, n_actions

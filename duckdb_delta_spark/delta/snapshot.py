@@ -7,6 +7,34 @@ per-file metadata (reference: src/functions/delta_scan/delta_multi_file_list.hpp
 delta_multi_file_list.cpp:706-718: moving *forward* replays only the new log
 tail on top of a cached snapshot; moving backward rebuilds.
 
+Snapshots are immutable once built, so one process-wide cache keyed by
+``(table_path, version)`` serves every caller (``DeltaTable``,
+``DeltaWriter``, catalogs, ``changes()``, the streaming source and sink) —
+the reference's ``PIN_SNAPSHOT`` entry cache, and delta-kernel-rs's
+``Snapshot::try_new_from`` refresh. :meth:`Snapshot.build` lists the log
+once (a :class:`~duckdb_delta_spark.delta.log.LogSegment`) and derives the
+target version's :class:`~duckdb_delta_spark.delta.log.Replay`:
+
+* **hit** — a cached snapshot at the target is returned only when its
+  replay equals the fresh one (same checkpoint files, same compacted
+  ranges, same commits) and the last file it replayed, plus any v2
+  sidecar it read, still has the same ``(st_ino, st_mtime_ns,
+  st_size)``. A hit therefore returns exactly what a cold build returns,
+  and a table recreated at the same path, an unlinked sidecar or history
+  removed by ``cleanup_expired_logs`` fall through to a build that raises
+  where a cold build raises;
+* **miss** — replay from the nearest cached snapshot at or below the
+  target whose replay is a prefix of the fresh one and whose files pass
+  the same stat check, else from the checkpoint.
+
+The cache is bounded by file entries (:data:`_CACHE_TABLE_ENTRIES` per
+table, least recently used versions first; :data:`_CACHE_TOTAL_ENTRIES`
+and :data:`_CACHE_TABLES` across tables, least recently used whole tables
+first); tables whose ``_delta_log`` is gone are dropped. ``log_tail`` logs
+bypass it. Only builds from the log are cached: a transaction's
+post-commit snapshot serves its own writer as a ``base``, while the next
+open elsewhere replays the commit from the newest cached version.
+
 The Delta ``metaData.schemaString`` is Spark's own ``StructType.json()``
 format, so schema decoding is exact via ``StructType.fromJson`` — a material
 simplification vs. the reference's FFI schema visitor
@@ -17,7 +45,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import urllib.parse
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql.types import StructType
@@ -27,7 +57,8 @@ from duckdb_delta_spark.delta.errors import (
     SchemaError,
     UnsupportedFeatureError,
 )
-from duckdb_delta_spark.delta.log import DeltaLog
+from duckdb_delta_spark.delta.log import EMPTY_REPLAY, DeltaLog, Replay
+from duckdb_delta_spark.delta.logging import emit
 
 #: reader features this engine implements; anything else in protocol.readerFeatures fails
 #: writer features this engine honors when committing; a table listing
@@ -175,14 +206,28 @@ class Snapshot:
         #: drives delta.setTransactionRetentionDuration expiry at checkpoint
         self.app_txn_updated: dict[str, int | None] = {}
         self.domain_metadata: dict[str, str] = {}
-        self.commit_timestamps: dict[int, int] = {}
         self._stats_manifest = None
         self._stats_manifest_built = False
         self._sorted_files: list[AddFile] | None = None
         self._partition_arrays: dict[str, object] = {}
         #: version of the checkpoint replay started from (None = full
-        #: commit walk, or incremental build from a base snapshot)
+        #: commit walk)
         self.checkpoint_version: int | None = None
+        #: the replay this snapshot was built by (None: not a listing's
+        #: replay, never cached), and the stat stamps a hit re-checks: of
+        #: the last file replayed, and of the v2 sidecars read
+        self._replay: Replay | None = None
+        self._last: tuple | None = None
+        self._sidecars: tuple[tuple | None, ...] = ()
+
+    def __copy__(self) -> "Snapshot":
+        """A shallow copy a caller may alter (e.g. a metadata overlay to
+        plan under): it is never served from the cache or replayed
+        forward as a base."""
+        snap = Snapshot.__new__(Snapshot)
+        snap.__dict__.update(self.__dict__)
+        snap._replay = None
+        return snap
 
     # ---------- construction ----------
 
@@ -192,122 +237,101 @@ class Snapshot:
         base: "Snapshot | None" = None,
         actions: "list[dict] | None" = None,
     ) -> "Snapshot":
-        """Replay the log up to ``version`` (default HEAD).
+        """Replay the log up to ``version`` (default HEAD), from one
+        listing, the process-wide snapshot cache (module docstring) or
+        ``base``.
 
-        ``base``: a previously built snapshot of the same table; when its
-        version ≤ target only the newer commits are read (incremental
-        refresh), and a base already at the target is returned as is
-        (snapshots are immutable). A backward move ignores the base and
-        rebuilds.
+        ``base``: a previously built snapshot of the same table; it
+        serves like a cache entry — returned when it is the target's
+        snapshot, replayed forward when its replay is a prefix of the
+        target's.
 
         ``actions``: the TARGET commit's already-parsed actions — a
         caller walking the log commit-by-commit (CDF), or a transaction
         that has just written the commit, holds the actions it is asking
         this build to apply. With ``base`` at ``version - 1`` the build
-        then neither lists the log nor reads the commit; otherwise the
-        actions are only consulted for the target version and never for
-        a compaction-covered one.
+        then neither lists the log nor reads the commit; otherwise they
+        are ignored.
         """
         same_table = base is not None and base.log.table_path == log.table_path
-        direct = (same_table and actions is not None and version is not None
-                  and version == base.version + 1)
-        target = version if direct else log.resolve_version(version)
-        if same_table and base.version == target:
-            snap, start = base, target + 1
-        elif same_table and base.version < target:
-            snap = cls(log, target)
-            snap.metadata = dict(base.metadata)
-            snap.protocol = dict(base.protocol)
-            snap.files = dict(base.files)
-            snap.tombstones = dict(base.tombstones)
-            snap.dv_tombstones = dict(base.dv_tombstones)
-            snap.app_transactions = dict(base.app_transactions)
-            snap.app_txn_updated = dict(base.app_txn_updated)
-            snap.domain_metadata = dict(base.domain_metadata)
-            snap.commit_timestamps = dict(base.commit_timestamps)
-            start = base.version + 1
+        if (same_table and actions is not None and version is not None
+                and version == base.version + 1):
+            snap = base._successor(log, version)
+            for action in actions:
+                snap._apply(action)
+            snap._validate()
+            return snap._built(version, incremental=version > 0)
+        segment = log.list_log_files()
+        target = log.resolve_version(version, segment)
+        replay = segment.replay(target)
+        shared = log.log_tail is None  # log_tail logs bypass the cache
+        found = _nearest(log.table_path, replay,
+                         base if same_table else None, shared)
+        if found is not None and found.version == target:
+            return found._built(target + 1, incremental=True, cached=True)
+        if found is not None:
+            snap = found._successor(log, target)
+            done = len(found._replay.steps)
         else:
             snap = cls(log, target)
-            start = 0
-            ckpt_version = snap._maybe_apply_checkpoint(target)
-            snap.checkpoint_version = ckpt_version  # observability
-            if ckpt_version is not None:
-                start = ckpt_version + 1
-        v = start
-        if direct:
-            for action in actions:
-                snap._apply(action, target)
-            v = target + 1
-        elif start <= target:
-            commits, _ = log.list_log_files()
-            segments = log.list_compacted_segments()
-        while v <= target:
-            seg = segments.get(v)
-            if seg is not None and seg[0] <= target:
-                # minor-compacted segment covers [v, hi]: apply its
-                # reconciled actions instead of the per-commit JSONs
-                # (which retention may already have deleted)
-                hi, seg_path = seg
-                for action in log.read_actions_file(seg_path):
-                    snap._apply(action, hi)
-                v = hi + 1
-                continue
-            if v == target and actions is not None:
-                for action in actions:
-                    snap._apply(action, v)
-                v += 1
-                continue
-            if v not in commits:
-                # distinguish an expired prefix (log retention cleanup
-                # removed commits 0..k and no checkpoint ≤ target
-                # survives) from genuine log corruption: the former is a
-                # version-unavailable condition, not a malformed log
-                if commits and v < min(commits):
-                    from duckdb_delta_spark.delta.errors import (
-                        InvalidTableVersionError,
-                    )
-
-                    raise InvalidTableVersionError(
-                        f"version {target} predates retained history at "
-                        f"{log.table_path}: earliest retained commit is "
-                        f"{min(commits)} and no checkpoint covers "
-                        f"{target} (log retention cleanup)"
-                    )
-                raise MalformedLogError(
-                    f"log has a gap: commit {v} missing (target {target})"
-                )
-            for action in log.read_commit(v):
-                snap._apply(action, v)
-            v += 1
+            done = 0
+        # stamped before reading: a file replaced after this stat fails
+        # the next hit's check instead of passing it
+        snap._last = _stamp(replay.steps[-1][2] if replay.steps
+                            else replay.checkpoint_parts[0])
+        if found is None and replay.checkpoint is not None:
+            sidecars: list[str] = []
+            snap._apply_checkpoint_columnar(log.read_checkpoint_table(
+                list(replay.checkpoint_parts), sidecars))
+            snap.checkpoint_version = replay.checkpoint
+            snap._sidecars = tuple(_stamp(p) for p in sidecars)
+        for lo, hi, path in replay.steps[done:]:
+            if path.endswith(".compacted.json"):
+                # minor-compacted segment covers [lo, hi]: its reconciled
+                # actions stand in for the per-commit JSONs
+                acts = log.read_actions_file(path)
+            else:
+                acts = log.read_commit(lo)
+            for action in acts:
+                snap._apply(action)
         snap._validate()
-        from duckdb_delta_spark.delta.logging import emit
+        start = (found.version + 1 if found is not None
+                 else 0 if replay.checkpoint is None else replay.checkpoint + 1)
+        snap._replay = replay
+        if shared:
+            _remember(snap)
+        return snap._built(start, incremental=found is not None)
 
-        emit(
-            "snapshot.build",
-            table_path=log.table_path,
-            version=target,
-            n_files=len(snap.files),
-            incremental=base is not None and start > 0,
-            replay_start=start,
-        )
+    def _successor(self, log: DeltaLog, version: int) -> "Snapshot":
+        """A new snapshot at ``version`` holding this one's state, for
+        the commits after this one to be applied onto."""
+        snap = Snapshot(log, version)
+        snap.metadata = dict(self.metadata)
+        snap.protocol = dict(self.protocol)
+        snap.files = dict(self.files)
+        snap.tombstones = dict(self.tombstones)
+        snap.dv_tombstones = dict(self.dv_tombstones)
+        snap.app_transactions = dict(self.app_transactions)
+        snap.app_txn_updated = dict(self.app_txn_updated)
+        snap.domain_metadata = dict(self.domain_metadata)
+        snap.checkpoint_version = self.checkpoint_version
+        snap._sidecars = self._sidecars
         return snap
 
-    def _maybe_apply_checkpoint(self, target: int) -> int | None:
-        commits, checkpoints = self.log.list_log_files()
-        hint = self.log.last_checkpoint_hint()
-        candidates = [v for v in checkpoints if v <= target]
-        if not candidates:
-            return None
-        best = max(candidates)
-        # prefer the hinted checkpoint when it's usable (≤ target and listed)
-        if hint and hint.get("version") in candidates:
-            best = max(best, int(hint["version"]))
-        self._apply_checkpoint_columnar(
-            self.log.read_checkpoint_table(checkpoints[best]), best
+    def _built(self, replay_start: int, incremental: bool,
+               cached: bool = False) -> "Snapshot":
+        emit(
+            "snapshot.build",
+            table_path=self.log.table_path,
+            version=self.version,
+            n_files=len(self.files),
+            incremental=incremental,
+            replay_start=replay_start,
+            cached=cached,
         )
-        return best
+        return self
 
-    def _apply_checkpoint_columnar(self, table, version: int) -> None:
+    def _apply_checkpoint_columnar(self, table) -> None:
         """Replay a checkpoint from pyarrow columns.
 
         The add manifest is the bulk of a checkpoint (1M rows for a 1M-file
@@ -330,7 +354,7 @@ class Snapshot:
             if col.null_count == len(col):
                 continue
             for val in pc.drop_null(col).to_pylist():
-                self._apply({key: _normalize_maps(val)}, version)
+                self._apply({key: _normalize_maps(val)})
 
         for key, bulk in (("add", self._apply_adds_columnar),
                           ("remove", self._apply_removes_columnar)):
@@ -417,11 +441,9 @@ class Snapshot:
             self._apply(
                 {"remove": {"path": paths[i],
                             "deletionTimestamp": tss[i],
-                            "deletionVector": dvs[i]}},
-                0,
-            )
+                            "deletionVector": dvs[i]}})
 
-    def _apply(self, action: dict, version: int) -> None:
+    def _apply(self, action: dict) -> None:
         if "metaData" in action and action["metaData"]:
             self.metadata = action["metaData"]
         elif "protocol" in action and action["protocol"]:
@@ -475,10 +497,6 @@ class Snapshot:
                 self.domain_metadata.pop(d["domain"], None)
             else:
                 self.domain_metadata[d["domain"]] = d.get("configuration", "")
-        elif "commitInfo" in action and action["commitInfo"]:
-            ts = action["commitInfo"].get("timestamp")
-            if ts is not None:
-                self.commit_timestamps[version] = int(ts)
 
     def _validate(self) -> None:
         if not self.metadata:
@@ -626,11 +644,11 @@ class Snapshot:
         types across files, exotic layouts) — callers fall back to
         ``AddFile.parsed_stats``."""
         if not self._stats_manifest_built:
-            self._stats_manifest_built = True
             import io
 
             import pyarrow.json as pj
 
+            manifest = None
             files = self.add_files()
             if files and any(f.stats for f in files):
                 payload = b"\n".join(
@@ -642,9 +660,16 @@ class Snapshot:
                         parse_options=pj.ParseOptions(newlines_in_values=True),
                     )
                     if tbl.num_rows == len(files):
-                        self._stats_manifest = tbl.combine_chunks()
+                        manifest = tbl.combine_chunks()
                 except Exception:  # noqa: BLE001 - fallback path is exact
-                    self._stats_manifest = None
+                    pass
+            # the flag goes up only after the manifest is stored, and the
+            # first thread to publish wins: a snapshot shared across
+            # threads hands every caller the same table
+            with _manifest_lock:
+                if not self._stats_manifest_built:
+                    self._stats_manifest = manifest
+                    self._stats_manifest_built = True
         return self._stats_manifest
 
     def num_records_estimate(self) -> int | None:
@@ -664,3 +689,106 @@ class Snapshot:
         """Latest committed txn version for an app (reference:
         src/functions/delta_transaction_utils/idempotency_helpers.cpp:41-145)."""
         return self.app_transactions.get(app_id)
+
+
+# ---------- the process-wide snapshot cache (module docstring) ----------
+
+#: file entries (live files + tombstones) one table's cached snapshots
+#: may hold before its least recently used versions are dropped
+_CACHE_TABLE_ENTRIES = 20_000
+#: file entries, and tables, all cached snapshots may hold before the
+#: least recently used whole tables are dropped
+_CACHE_TOTAL_ENTRIES = 100_000
+_CACHE_TABLES = 64
+
+_cache_lock = threading.Lock()
+_manifest_lock = threading.Lock()
+#: table path → [file entries, version → snapshot], both levels in LRU order
+_cache: "OrderedDict[str, list]" = OrderedDict()
+
+
+def clear_snapshot_cache() -> None:
+    """Forget every cached snapshot (the next build of any table is cold)."""
+    with _cache_lock:
+        _cache.clear()
+
+
+def record_commit(post: Snapshot, base: Snapshot, path: str) -> None:
+    """Give ``post`` — the snapshot a transaction built by applying the
+    commit it wrote at ``path`` to ``base`` — the replay (``base``'s, then
+    that commit) and stamp that let the writer's next build reuse it as
+    its ``base``. It is not put in the shared cache: it holds the
+    writer's in-memory actions, while every other open gets what the log
+    says."""
+    prev = base._replay or (EMPTY_REPLAY if base.version < 0 else None)
+    if prev is not None:
+        post._replay = prev.then(post.version, path)
+        post._last = _stamp(path)
+
+
+def _stamp(path: str) -> tuple | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _unchanged(snap: Snapshot) -> bool:
+    return all(s is not None and _stamp(s[0]) == s
+               for s in (snap._last, *snap._sidecars))
+
+
+def _nearest(table_path: str, replay: Replay, base: Snapshot | None,
+             shared: bool) -> Snapshot | None:
+    """The newest snapshot — ``base`` or, when ``shared``, a cached one —
+    at or below ``replay.version`` whose replay is a prefix of
+    ``replay`` and whose stamped files are unchanged."""
+    candidates = [base] if base is not None and base._replay is not None else []
+    if shared:
+        with _cache_lock:
+            entry = _cache.get(table_path)
+            if entry is not None:
+                candidates += [s for v, s in entry[1].items()
+                               if v <= replay.version]
+    for snap in sorted(candidates, key=lambda s: s.version, reverse=True):
+        if replay.extends(snap._replay) and _unchanged(snap):
+            if shared:
+                with _cache_lock:
+                    entry = _cache.get(table_path)
+                    if entry is not None and entry[1].get(snap.version) is snap:
+                        entry[1].move_to_end(snap.version)
+                        _cache.move_to_end(table_path)
+            return snap
+    return None
+
+
+def _entries(snap: Snapshot) -> int:
+    return len(snap.files) + len(snap.tombstones) + 1
+
+
+def _remember(snap: Snapshot) -> None:
+    if snap._last is None or None in snap._sidecars:
+        return  # a file vanished while building: nothing to re-check
+    path = snap.log.table_path
+    with _cache_lock:
+        entry = _cache.get(path)
+        if entry is None:
+            # a new table: first forget tables whose log is gone
+            for p in [p for p in _cache
+                      if not os.path.isdir(os.path.join(p, "_delta_log"))]:
+                del _cache[p]
+            entry = _cache[path] = [0, OrderedDict()]
+        versions = entry[1]
+        old = versions.pop(snap.version, None)
+        if old is not None:
+            entry[0] -= _entries(old)
+        versions[snap.version] = snap
+        entry[0] += _entries(snap)
+        _cache.move_to_end(path)
+        while entry[0] > _CACHE_TABLE_ENTRIES and len(versions) > 1:
+            entry[0] -= _entries(versions.popitem(last=False)[1])
+        while len(_cache) > 1 and (
+                len(_cache) > _CACHE_TABLES
+                or sum(e[0] for e in _cache.values()) > _CACHE_TOTAL_ENTRIES):
+            _cache.popitem(last=False)

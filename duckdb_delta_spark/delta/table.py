@@ -55,11 +55,8 @@ class DeltaTable:
             if version is not None:
                 raise ValueError("pass either version or timestamp, not both")
             version = self.log.version_at_timestamp(_to_epoch_ms(timestamp))
-        if snapshot is not None and snapshot.version == self.log.resolve_version(version):
-            self.snapshot = snapshot
-        else:
-            # incremental forward refresh when a base snapshot is supplied
-            self.snapshot = Snapshot.build(self.log, version, base=snapshot)
+        # ``snapshot`` serves as a base: reused or replayed forward
+        self.snapshot = Snapshot.build(self.log, version, base=snapshot)
         self.version = self.snapshot.version
 
     # ---------- read ----------

@@ -15,6 +15,9 @@ owns everything a commit does, once:
 * retries within the budget the caller passes, each gated by ONE conflict
   check of the winning commits against the operation's :class:`ReadSet`;
 * rollback of the operation's staged files when it gives up;
+* the post-commit snapshot, built from the actions without reading the
+  log back, which the writer's next refresh reuses while the log still
+  ends at that commit (delta/snapshot.py);
 * the post-commit hooks: ``<version>.crc``, auto-checkpoint
   (``delta.checkpointInterval``), auto log compaction
   (``delta.compactLog.interval``) and expired-log cleanup.
@@ -62,7 +65,7 @@ from typing import Callable, Iterable
 from duckdb_delta_spark.delta.errors import CommitConflictError
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.logging import emit
-from duckdb_delta_spark.delta.snapshot import Snapshot, _file_key
+from duckdb_delta_spark.delta.snapshot import Snapshot, _file_key, record_commit
 
 
 @dataclass(frozen=True)
@@ -129,7 +132,7 @@ class Transaction:
             assign_row_ids(version, actions, snap, self.preserve_row_ids)
             self._stamp_ict(actions, snap, caller_ict)
             try:
-                self.log.commit(version, actions)
+                path = self.log.commit(version, actions)
                 break
             except CommitConflictError:
                 attempt += 1
@@ -151,6 +154,7 @@ class Transaction:
                     return None
         self.snapshot = Snapshot.build(self.log, version, base=snap,
                                        actions=actions)
+        record_commit(self.snapshot, snap, path)
         self._post_commit(version)
         return version
 

@@ -2334,7 +2334,7 @@ class DeltaWriter:
 
         from duckdb_delta_spark.delta.scan import DeltaScanBuilder
 
-        snap = self._snapshot
+        snap = read_snap = self._snapshot
         self._assert_writable(
             "MERGE", removes_rows=bool(when_matched_update) or when_matched_delete
         )
@@ -2692,10 +2692,12 @@ class DeltaWriter:
             )
 
         # MERGE's read set is the source join, not a predicate: any
-        # concurrently added data file could flip a not-matched decision
+        # concurrently added data file could flip a not-matched decision.
+        # The commit rests on the snapshot read from the log, not on the
+        # overlay: the widened metaData travels in the actions
         undo = moved + self._dv_moved(results)
         version = self._commit(
-            snap, actions, retries=3, staged=[rel for rel, _ in undo],
+            read_snap, actions, retries=3, staged=[rel for rel, _ in undo],
             read=ReadSet(metadata=True, protocol=True, any_data=True))
         from duckdb_delta_spark.delta.logging import emit
 
@@ -5096,7 +5098,8 @@ class DeltaWriter:
         sweep that strands versions in [h, V) behind a deleted prefix is
         refused (returns [] untouched). A sweep whose aged-out horizon
         reaches V proceeds normally."""
-        commits, checkpoints = self.log.list_log_files()
+        segment = self.log.list_log_files()
+        commits, checkpoints = segment
         if not checkpoints:
             return []
         ckpt = max(checkpoints)
@@ -5188,7 +5191,7 @@ class DeltaWriter:
         # nothing (time travel there is already unavailable); segments
         # straddling the floor stay — replay keyed at lo never consults
         # them, but a still-pinned incremental base might
-        for lo, (hi, seg_path) in self.log.list_compacted_segments().items():
+        for lo, (hi, seg_path) in segment.compacted.items():
             if hi <= last_deleted:
                 try:
                     os.unlink(seg_path)

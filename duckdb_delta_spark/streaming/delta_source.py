@@ -1331,13 +1331,6 @@ class _WrittenFiles(WriterCommitMessage):
     rows: int = 0
 
 
-#: driver-side snapshot cache for streaming sinks, keyed by table path —
-#: deliberately MODULE level: the writer object itself is pickled to
-#: executors for write(), and a Snapshot on self would ship the whole
-#: file manifest with every task
-_SINK_SNAP_CACHE: dict = {}
-
-
 class DeltaStreamWriter(DataSourceStreamArrowWriter):
     """``writeStream.format("delta_py")`` — every micro-batch is one Delta
     commit, made EXACTLY-ONCE by the transaction-version machinery: the
@@ -1419,7 +1412,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         )
 
         snap = Snapshot.build(DeltaLog(self.table_path))
-        _SINK_SNAP_CACHE[self.table_path] = snap
         self.partition_columns = list(snap.partition_columns)
         missing = [c for c in self.partition_columns
                    if c not in self.schema.fieldNames()]
@@ -1453,7 +1445,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                     self.table_path, SparkSession.getActiveSession()
                 ).merge_schema_with(self.schema)
                 snap = Snapshot.build(DeltaLog(self.table_path))
-                _SINK_SNAP_CACHE[self.table_path] = snap
                 snap_by = {f.name: f for f in snap.schema.fields}
             else:
                 raise UnsupportedFeatureError(
@@ -1861,10 +1852,11 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         )
 
         log = DeltaLog(self.table_path)
-        # incremental refresh from the cached snapshot: replays only the
-        # commits since the previous batch — a long-lived stream must not
-        # pay O(log length) driver replay per batch (O(n²) cumulative)
-        snap = Snapshot.build(log, base=_SINK_SNAP_CACHE.get(self.table_path))
+        # the snapshot cache (delta/snapshot.py) holds the snapshot the
+        # previous batch started from: this replays only the commits
+        # since — a long-lived stream must not pay O(log length) driver
+        # replay per batch (O(n²) cumulative)
+        snap = Snapshot.build(log)
         last = snap.transaction_version(self.app_id)
         if last is None and getattr(self, "_legacy_app_id", None):
             # opt-in upgrade path: no transaction yet under the
@@ -1881,7 +1873,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                     os.unlink(os.path.join(self.table_path, m.rel_path))
                 except OSError:
                     pass
-            _SINK_SNAP_CACHE[self.table_path] = snap
             return
         if not files:
             # empty micro-batch: an idle stream must not grow the log
@@ -1892,7 +1883,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
             # re-plans the same (empty) offset range and skips again.
             from duckdb_delta_spark.delta.logging import emit
 
-            _SINK_SNAP_CACHE[self.table_path] = snap
             emit("stream.sink.skip_empty", table_path=self.table_path,
                  batch_id=int(batchId))
             return
@@ -1968,7 +1958,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                           read=ReadSet(metadata=True, protocol=True),
                           staged=[m.rel_path for m in files], rebase=twin)
         version = txn.commit(actions)
-        _SINK_SNAP_CACHE[self.table_path] = txn.snapshot
         if version is None:
             return
         from duckdb_delta_spark.delta.logging import emit
