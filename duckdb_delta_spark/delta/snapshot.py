@@ -169,6 +169,20 @@ class AddFile:
     def dv_unique_id(self) -> str | None:
         return _dv_unique_id(self.deletion_vector)
 
+    def remove_action(self, now_ms: int, data_change: bool = True) -> dict:
+        """The ``remove`` action retiring this file. It carries the file's
+        deletion vector, so readers reconcile the (path, dvId) key."""
+        remove = {
+            "path": self.path,
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            "partitionValues": dict(self.partition_values),
+            "size": self.size,
+        }
+        if self.deletion_vector:
+            remove["deletionVector"] = self.deletion_vector
+        return {"remove": remove}
+
 
 def _dv_unique_id(dv: dict | None) -> str | None:
     if not dv:

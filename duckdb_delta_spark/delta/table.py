@@ -247,11 +247,9 @@ class DeltaTable:
         compare-and-set: the bookmark commits only while the app's last
         version is still ``expected_last``, re-checked after every lost
         race (IdempotencyError otherwise)."""
-        import time
-
         from duckdb_delta_spark.delta.errors import IdempotencyError
         from duckdb_delta_spark.delta.transaction import Transaction
-        from duckdb_delta_spark.delta.writer import _commit_info
+        from duckdb_delta_spark.delta.writer import _commit_info, _txn_action
 
         def recheck(old, snap, actions):
             have = snap.transaction_version(app_id)
@@ -263,8 +261,7 @@ class DeltaTable:
 
         actions = recheck(None, self.snapshot, [
             {"commitInfo": _commit_info("SET TRANSACTION")},
-            {"txn": {"appId": app_id, "version": int(version),
-                     "lastUpdated": int(time.time() * 1000)}},
+            _txn_action(app_id, version),
         ])
         # a state-free marker: it rebases past any racer that left the
         # app's version alone

@@ -253,6 +253,11 @@ def _hive_escape(v: str | None) -> str:
     return urllib.parse.quote(str(v), safe="")
 
 
+def _log_path(rel_path: str) -> str:
+    """Relative file path → the url-encoded ``path`` of an add/cdc action."""
+    return urllib.parse.quote(rel_path.replace(os.sep, "/"), safe="/=-_.~")
+
+
 def _truncate_min(s: str) -> str:
     return s[:_STATS_TRUNC]
 
@@ -273,7 +278,16 @@ def _truncate_max(s: str) -> str | None:
 class DeltaWriter:
     """Writer for one table: create, append, DML, schema/property changes
     and maintenance. Each call plans its actions on the pinned snapshot
-    and commits them through one :class:`Transaction`."""
+    and commits them through one :class:`Transaction`.
+
+    Every data write takes one path from rows to files to actions, as the
+    reference's insert does (delta_insert.cpp:304-408): conform the rows
+    to the table schema (:func:`_conform_rows`), enforce CHECK constraints
+    and generated columns, stage the parquet under physical column names
+    and promote it into the table (:meth:`_stage`), then build the add
+    actions from footer stats (:meth:`_write_data`) or the cdc actions
+    (:meth:`_write_cdc`). Files leave the table through
+    :meth:`AddFile.remove_action`."""
 
     def __init__(self, table_path: str, spark: SparkSession, store=None,
                  commit_fn=None, log_tail: list[str] | None = None):
@@ -823,109 +837,18 @@ class DeltaWriter:
         schema = snapshot.schema
         parts = snapshot.partition_columns
 
-        # conform input columns to table schema (order + types)
-        from pyspark.sql import functions as F
-
         self._assert_writable("WRITE")
         schema_widened = False
         widened_config: dict | None = None
-        computed: list[str] = []
         if merge_schema:
-            by_df = {f.name: f for f in df.schema.fields}
             merged, cfg, changed = _merged_table_schema(snapshot, df.schema)
             if changed:
                 widened_config = cfg
                 schema = merged
                 schema_widened = True
-            gen = _generated_exprs(schema)
-            dflt = _default_exprs(schema)
-            ident_exprs = self._identity_value_exprs(schema, df)
-            computed = [f.name for f in schema.fields
-                        if f.name not in df.columns and f.name in gen]
-            sel = [
-                (
-                    # struct shapes that differ (widened/old-shape/
-                    # reordered input) conform BY NAME — a positional
-                    # cast would fail or silently swap values
-                    _conform_nested_expr(
-                        F.col(f.name), by_df[f.name].dataType, f.dataType
-                    )
-                    if f.name in by_df and _needs_nested_conform(
-                        by_df[f.name].dataType, f.dataType
-                    )
-                    else (
-                        F.col(f.name)
-                        if f.name in df.columns
-                        else (
-                            F.expr(gen[f.name])
-                            if f.name in gen
-                            else ident_exprs.get(
-                                f.name,
-                                F.expr(dflt[f.name])
-                                if f.name in dflt
-                                else F.lit(None),
-                            )
-                        )
-                    ).cast(_nullable_type(f.dataType))
-                ).alias(f.name)
-                for f in schema.fields
-            ]
-        else:
-            gen = _generated_exprs(schema)
-            dflt = _default_exprs(schema)
-            ident_exprs = self._identity_value_exprs(schema, df)
-            missing = [f.name for f in schema.fields if f.name not in df.columns]
-            computed = [c for c in missing if c in gen]
-            defaulted = [c for c in missing
-                         if c not in gen and c not in ident_exprs and c in dflt]
-            missing = [c for c in missing
-                       if c not in gen and c not in ident_exprs and c not in dflt]
-            if missing:
-                raise SchemaError(f"input missing table columns: {missing}")
-            # nested schema ENFORCEMENT (non-merge): input struct fields
-            # the table lacks, or table struct fields the input lacks,
-            # refuse — evolution and null-filling need merge_schema=True
-            by_df = {f.name: f for f in df.schema.fields}
-            for f in schema.fields:
-                if f.name not in by_df:
-                    continue
-                extra, lacking = _nested_name_diffs(
-                    by_df[f.name].dataType, f.dataType
-                )
-                if extra or lacking:
-                    raise SchemaError(
-                        f"column {f.name!r}: nested shape mismatch "
-                        f"(input-only fields {extra}, table-only fields "
-                        f"{lacking}); pass merge_schema=True to evolve "
-                        "the table / null-fill old-shape input"
-                    )
-            # cast to the nullable shape — Spark refuses to cast a nullable
-            # value into a non-nullable struct field, and NOT NULL
-            # enforcement is ours (stats-based, post-write) anyway
-            sel = [
-                (
-                    # same-name-set struct in a DIFFERENT field order:
-                    # conform by name (a positional cast would silently
-                    # swap same-typed fields)
-                    _conform_nested_expr(
-                        F.col(f.name), by_df[f.name].dataType, f.dataType
-                    )
-                    if f.name in by_df and _needs_nested_conform(
-                        by_df[f.name].dataType, f.dataType
-                    )
-                    else (
-                        F.expr(gen[f.name])
-                        if f.name in computed
-                        else F.expr(dflt[f.name])
-                        if f.name in defaulted
-                        else ident_exprs.get(f.name, F.col(f.name))
-                        if f.name not in df.columns
-                        else F.col(f.name)
-                    ).cast(_nullable_type(f.dataType))
-                ).alias(f.name)
-                for f in schema.fields
-            ]
-        df = df.select(*sel)
+        ident_exprs = self._identity_value_exprs(schema, df)
+        df, computed = _conform_rows(df, schema, fill=ident_exprs,
+                                     null_fill=merge_schema)
         self._enforce_check_constraints(df)
         # generated columns the caller provided must MATCH their expression
         # (Delta spec: writers enforce generation exprs as invariants);
@@ -958,15 +881,6 @@ class DeltaWriter:
                     )
                 df = shred_variant_column(df, colname, fieldmap)
 
-        # Column mapping (name/id mode): write under PHYSICAL names with
-        # parquet.field.id so both name- and id-resolving readers work
-        # (reference reads ids from footers: delta_utils.hpp:300-311).
-        # Stats / partitionValues below are keyed by these physical names,
-        # as the Delta spec requires on mapped tables.
-        logical_schema = schema
-        if snapshot.column_mapping_mode != "none":
-            schema, parts, df = self._to_physical(df, schema, parts)
-
         if txn_app_id is not None and txn_expected_last is not None:
             have = snapshot.transaction_version(txn_app_id)
             if have != txn_expected_last:
@@ -998,8 +912,8 @@ class DeltaWriter:
         # passes), fold into the schema metadata, and ship the metaData
         # update in the SAME commit as the rows it covers
         ident_meta = self._identity_hwm_meta(
-            logical_schema, adds, snapshot, widened=schema_widened,
-            widened_schema=logical_schema if schema_widened else None,
+            schema, adds, snapshot, widened=schema_widened,
+            widened_schema=schema if schema_widened else None,
         )
         if ident_meta is not None:
             if widened_config is not None:
@@ -1007,17 +921,12 @@ class DeltaWriter:
             actions.append({"metaData": ident_meta})
         elif schema_widened:
             meta = dict(snapshot.metadata)
-            # the LOGICAL schema (with mapping metadata) is what the log
-            # records; `schema` is physical on mapped tables here
-            meta["schemaString"] = logical_schema.json()
+            meta["schemaString"] = schema.json()
             if widened_config is not None:
                 meta["configuration"] = widened_config
             actions.append({"metaData": meta})
         if txn_app_id is not None and txn_version is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version),
-                         "lastUpdated": int(time.time() * 1000)}}
-            )
+            actions.append(_txn_action(txn_app_id, txn_version))
         actions.extend({"add": a} for a in adds)
 
         def rebase(old: Snapshot, fresh: Snapshot, acts: list[dict]):
@@ -1319,26 +1228,13 @@ class DeltaWriter:
     def _write_data(
         self, df: DataFrame, schema: T.StructType, parts: list[str]
     ) -> tuple[list[tuple[str, dict]], list[dict]]:
-        """Write ``df`` as table data files (hive layout for partitioned
-        tables): ONE distributed write job, then driver-side promote +
-        footer stats + NOT NULL enforcement. Returns (moved, add_actions)
-        — nothing is committed."""
-        staging = os.path.join(self.table_path, f"_staging_{uuid.uuid4().hex}")
-        # INT96 (Spark's legacy default) carries no parquet min/max stats —
-        # write modern TIMESTAMP_MICROS so timestamp columns are skippable
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        writer = df.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(staging)
-
-        try:
-            moved = self._promote_staged_files(staging, parts)
-            adds = self._build_add_actions(moved, schema, parts)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        """Write ``df`` (logical ``schema``) as table data files: ONE
+        distributed write job (:meth:`_stage`), then footer stats (a
+        Spark job only for footers pyarrow cannot read) + NOT NULL
+        enforcement. Returns (moved, add_actions) —
+        nothing is committed."""
+        moved, schema, parts = self._stage(df, parts, schema=schema)
+        adds = self._build_add_actions(moved, schema, parts)
 
         # Spark's parquet committer emits a zero-row part file when a
         # task's partition is empty (a 1-row df repartitioned to 8 tasks
@@ -1422,57 +1318,16 @@ class DeltaWriter:
         Column-mapped tables: data columns are written under their
         PHYSICAL names with parquet field ids (the spec requires cdc
         files to mirror data files); ``_change_type`` stays literal."""
-        snap = self._snapshot
-        if snap.column_mapping_mode != "none":
-            _, parts, df = self._to_physical(
-                df, snap.schema, parts, extra_cols=("_change_type",)
-            )
-        staging = os.path.join(self.table_path, f"_staging_cdc_{uuid.uuid4().hex}")
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        writer = df.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(staging)
-        moved: list[tuple[str, dict]] = []
-        actions: list[dict] = []
-        try:
-            for root, _dirs, names in os.walk(staging):
-                for name in sorted(names):
-                    if not name.endswith(".parquet"):
-                        continue
-                    rel_dir = os.path.relpath(root, staging)
-                    pvals: dict[str, str | None] = {}
-                    if rel_dir != ".":
-                        for comp in rel_dir.split(os.sep):
-                            k, _, v = comp.partition("=")
-                            pvals[k] = (
-                                None
-                                if v == "__HIVE_DEFAULT_PARTITION__"
-                                else urllib.parse.unquote(v)
-                            )
-                    rel_path = os.path.join(
-                        "_change_data",
-                        name if rel_dir == "." else os.path.join(rel_dir, name),
-                    )
-                    dest = os.path.join(self.table_path, rel_path)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    shutil.move(os.path.join(root, name), dest)
-                    moved.append((rel_path, {p: pvals.get(p) for p in parts}))
-                    actions.append({"cdc": {
-                        "path": urllib.parse.quote(
-                            rel_path.replace(os.sep, "/"), safe="/=-_.~"
-                        ),
-                        "partitionValues": {
-                            p: (None if pvals.get(p) is None else str(pvals[p]))
-                            for p in parts
-                        },
-                        "size": os.path.getsize(dest),
-                        "dataChange": False,
-                    }})
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        moved, _, _ = self._stage(
+            df, parts, schema=self._snapshot.schema, prefix="_change_data",
+            extra_cols=("_change_type",))
+        actions = [{"cdc": {
+            "path": _log_path(rel),
+            "partitionValues": {
+                p: (None if v is None else str(v)) for p, v in pvals.items()},
+            "size": os.path.getsize(os.path.join(self.table_path, rel)),
+            "dataChange": False,
+        }} for rel, pvals in moved]
         return moved, actions
 
     def _to_physical(
@@ -1519,30 +1374,59 @@ class DeltaWriter:
             phys_parts.append(md.get("delta.columnMapping.physicalName", p))
         return T.StructType(phys_fields), phys_parts, df.select(*sel)
 
-    def _promote_staged_files(self, staging: str, parts: list[str]) -> list[tuple[str, dict]]:
-        """Move staged parquet into the table dir (hive layout preserved).
-        Returns [(relative_path, partitionValues)]."""
+    def _stage(
+        self, df: DataFrame, parts: list[str], schema: T.StructType | None = None,
+        prefix: str = "", extra_cols: tuple[str, ...] = (),
+    ) -> tuple[list[tuple[str, dict]], T.StructType | None, list[str]]:
+        """Stage ``df`` as parquet and promote it into the table: ONE
+        distributed write job into a fresh ``_staging_*`` directory, then
+        every file moves to ``prefix/<hive dirs>/<Spark's task-uuid
+        name>`` (``prefix``: ``""`` for data, ``_change_data`` for cdc, a
+        partition directory for compact). ``schema`` is ``df``'s logical
+        schema; on a column-mapped table the columns are written under
+        their physical names with parquet field ids (``extra_cols`` pass
+        through unrenamed). Compact passes no schema: its frame is
+        physical already. Returns (moved as [(relative path,
+        partitionValues)], write schema, write partition columns)."""
+        if schema is not None and self._snapshot.column_mapping_mode != "none":
+            # the reference reads field ids from footers
+            # (delta_utils.hpp:300-311); stats and partitionValues are
+            # keyed by physical names, as the spec requires
+            schema, parts, df = self._to_physical(df, schema, parts,
+                                                  extra_cols)
+        staging = os.path.join(self.table_path, f"_staging_{uuid.uuid4().hex}")
+        # INT96 (Spark's legacy default) carries no parquet min/max stats —
+        # write modern TIMESTAMP_MICROS so timestamp columns are skippable
+        self.spark.conf.set(
+            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        )
+        writer = df.write.mode("overwrite")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(staging)
         moved: list[tuple[str, dict]] = []
-        for root, _dirs, names in os.walk(staging):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
+        try:
+            for root, _dirs, names in os.walk(staging):
                 rel_dir = os.path.relpath(root, staging)
                 pvals: dict[str, str | None] = {}
                 if rel_dir != ".":
                     for comp in rel_dir.split(os.sep):
                         k, _, v = comp.partition("=")
-                        pvals[k] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__" else urllib.parse.unquote(v)
-                        )
-                # keep Spark's task-uuid basename — globally unique already
-                rel_path = name if rel_dir == "." else os.path.join(rel_dir, name)
-                dest = os.path.join(self.table_path, rel_path)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                shutil.move(os.path.join(root, name), dest)
-                ordered = {p: pvals.get(p) for p in parts}
-                moved.append((rel_path, ordered))
-        return moved
+                        pvals[k] = (None if v == "__HIVE_DEFAULT_PARTITION__"
+                                    else urllib.parse.unquote(v))
+                for name in sorted(names):
+                    if not name.endswith(".parquet"):
+                        continue
+                    rel_path = os.path.join(
+                        prefix, name if rel_dir == "." else
+                        os.path.join(rel_dir, name))
+                    dest = os.path.join(self.table_path, rel_path)
+                    os.makedirs(os.path.dirname(dest), exist_ok=True)
+                    shutil.move(os.path.join(root, name), dest)
+                    moved.append((rel_path, {p: pvals.get(p) for p in parts}))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return moved, schema, parts
 
     def _stats_allowlist(self, write_schema, parts) -> set[str] | None:
         """Resolve the stats-selection config against the current snapshot
@@ -1578,7 +1462,7 @@ class DeltaWriter:
                 no_footer.append(i)
             adds.append(
                 {
-                    "path": urllib.parse.quote(rel_path.replace(os.sep, "/"), safe="/=-_.~"),
+                    "path": _log_path(rel_path),
                     "partitionValues": {
                         k: (None if v is None else str(v)) for k, v in pvals.items()
                     },
@@ -1795,12 +1679,8 @@ class DeltaWriter:
 
         snap = self._snapshot
         self._assert_writable("DELETE", removes_rows=True)
-        if txn_app_id is not None and txn_version is not None:
-            # idempotent foreachBatch DELETE (same contract as merge's
-            # txn args): a replayed batch is recognized and skipped
-            last = snap.transaction_version(txn_app_id)
-            if last is not None and txn_version <= last:
-                return None
+        if _replayed(snap, txn_app_id, txn_version):
+            return None
         if isinstance(condition, str):
             condition = F.expr(condition)
 
@@ -1850,10 +1730,7 @@ class DeltaWriter:
         actions.extend(self._dv_actions(snap, results))
         actions.extend(cdc_actions)
         if txn_app_id is not None and txn_version is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version),
-                         "lastUpdated": int(time.time() * 1000)}}
-            )
+            actions.append(_txn_action(txn_app_id, txn_version))
 
         undo = cdc_moved + self._dv_moved(results)
         version = self._commit(
@@ -2100,16 +1977,7 @@ class DeltaWriter:
                 actions.append(proto_action)
         for r in results:
             f = by_uri[r["f"]]
-            remove = {
-                "path": f.path,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": dict(f.partition_values),
-                "size": f.size,
-            }
-            if f.deletion_vector:
-                remove["deletionVector"] = f.deletion_vector
-            actions.append({"remove": remove})
+            actions.append(f.remove_action(now_ms))
             if not r["full"]:
                 actions.append(
                     {
@@ -2153,12 +2021,8 @@ class DeltaWriter:
 
         snap = self._snapshot
         self._assert_writable("UPDATE", removes_rows=True)
-        if txn_app_id is not None and txn_version is not None:
-            # idempotent foreachBatch UPDATE (same contract as merge's
-            # txn args): a replayed batch is recognized and skipped
-            last = snap.transaction_version(txn_app_id)
-            if last is not None and txn_version <= last:
-                return None
+        if _replayed(snap, txn_app_id, txn_version):
+            return None
         if isinstance(condition, str):
             condition = F.expr(condition)
         schema = snap.schema
@@ -2216,14 +2080,8 @@ class DeltaWriter:
             self._enforce_generated_columns(
                 new_rows, schema, skip={c for c in gen if c not in assigned_tops}
             )
-            w_schema, w_parts, w_rows = (
-                schema, snap.partition_columns, new_rows
-            )
-            if snap.column_mapping_mode != "none":
-                w_schema, w_parts, w_rows = self._to_physical(
-                    new_rows, schema, snap.partition_columns
-                )
-            moved, adds_new = self._write_data(w_rows, w_schema, w_parts)
+            moved, adds_new = self._write_data(
+                new_rows, schema, snap.partition_columns)
             cdc_actions: list[dict] = []
             if self._cdf_enabled(snap):
                 data_cols = [F.col(f.name) for f in schema.fields]
@@ -2248,10 +2106,7 @@ class DeltaWriter:
             {"commitInfo": _commit_info("UPDATE", {"numUpdatedRows": str(n_updated)})}
         ]
         if txn_app_id is not None and txn_version is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version),
-                         "lastUpdated": int(time.time() * 1000)}}
-            )
+            actions.append(_txn_action(txn_app_id, txn_version))
         actions.extend(self._dv_actions(snap, results))
         actions.extend({"add": a} for a in adds_new)
         actions.extend(cdc_actions)
@@ -2349,6 +2204,8 @@ class DeltaWriter:
             when_not_matched_by_source_delete
         if touch_by_source:
             self._assert_writable("MERGE", removes_rows=True)
+        if _replayed(snap, txn_app_id, txn_version):
+            return None
         pending_meta: dict | None = None
         if merge_schema:
             # withSchemaEvolution: widen to the union with the source
@@ -2376,6 +2233,16 @@ class DeltaWriter:
         scan = DeltaScanBuilder(snap, self.spark).with_virtual_columns()
         t = scan.to_df().alias("t")
         s = source.alias("s")
+        # the insert frame conforms before any file (DV or data) is
+        # written, so a source that cannot conform leaves nothing behind
+        ins = None
+        ins_skip: list = []
+        if when_not_matched_insert:
+            ins = s.join(t, on_expr, "left_anti")
+            if when_not_matched_condition is not None:
+                ins = ins.where(_cond(when_not_matched_condition))
+            ins, ins_skip = _conform_rows(
+                ins, schema, col=lambda n: F.col("s." + n))
 
         # matched-clause frame (condition may reference s.*, so a
         # conditional clause joins inner instead of left_semi). An
@@ -2532,47 +2399,9 @@ class DeltaWriter:
             new_parts.append(
                 (bys_upd, {c for c in gen if c not in bys_tops})
             )
-        ins = None
-        ins_skip: set = set()
-        if when_not_matched_insert:
-            dflt = _default_exprs(schema)
-            missing = [f.name for f in schema.fields if f.name not in source.columns]
-            computable = [c for c in missing if c in gen]
-            defaulted = [c for c in missing if c not in gen and c in dflt]
-            missing = [c for c in missing if c not in gen and c not in dflt]
-            if missing:
-                raise SchemaError(f"merge source missing table columns: {missing}")
-            ins_skip = set(computable)
-            ins = s.join(t, on_expr, "left_anti")
-            if when_not_matched_condition is not None:
-                ins = ins.where(_cond(when_not_matched_condition))
-            ins = ins.select(
-                *[
-                    (
-                        F.expr(gen[f.name])
-                        if f.name in ins_skip
-                        else F.expr(dflt[f.name])
-                        if f.name in defaulted
-                        else F.col("s." + f.name)
-                    )
-                    .cast(_nullable_type(f.dataType))
-                    .alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-
         # ONE write job per branch, each frame computed exactly once —
         # n_inserted comes from the written files' footer numRecords
         # instead of a separate count() job re-running the anti-join
-        def _write_images(frame):
-            """Branch write under column-mapping physical names if mapped."""
-            if snap.column_mapping_mode != "none":
-                ws, wp, wf = self._to_physical(
-                    frame, schema, snap.partition_columns
-                )
-                return self._write_data(wf, ws, wp)
-            return self._write_data(frame, schema, snap.partition_columns)
-
         cdf_on = self._cdf_enabled(snap)
         pinned: list = []
         if cdf_on:
@@ -2598,13 +2427,13 @@ class DeltaWriter:
             for branch, gen_skip in new_parts:
                 self._enforce_check_constraints(branch)
                 self._enforce_generated_columns(branch, schema, skip=gen_skip)
-                m, a = _write_images(branch)
+                m, a = self._write_data(branch, schema, snap.partition_columns)
                 moved.extend(m)
                 adds_new.extend(a)
             if ins is not None:
                 self._enforce_check_constraints(ins)
-                self._enforce_generated_columns(ins, schema, skip=ins_skip)
-                m, a = _write_images(ins)
+                self._enforce_generated_columns(ins, schema, skip=set(ins_skip))
+                m, a = self._write_data(ins, schema, snap.partition_columns)
                 n_inserted = sum(
                     int(json.loads(ad.get("stats") or "{}").get("numRecords") or 0)
                     for ad in a
@@ -2684,12 +2513,7 @@ class DeltaWriter:
         actions.extend({"add": a} for a in adds_new)
         actions.extend(cdc_actions)
         if txn_app_id is not None and txn_version is not None:
-            # idempotent streaming upserts (foreachBatch MERGE): the commit
-            # carries the app-transaction version exactly like append's
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version),
-                         "lastUpdated": int(time.time() * 1000)}}
-            )
+            actions.append(_txn_action(txn_app_id, txn_version))
 
         # MERGE's read set is the source join, not a predicate: any
         # concurrently added data file could flip a not-matched decision.
@@ -2769,12 +2593,8 @@ class DeltaWriter:
         # a stale predicate/count from the previous commit
         self.last_overwrite_predicate: str | None = None
         self.last_overwrite_added_files: int | None = None
-        if txn_app_id is not None and txn_version is not None:
-            # idempotent foreachBatch OVERWRITE/replaceWhere (same
-            # contract as merge's txn args): replayed batches skip
-            last = snap.transaction_version(txn_app_id)
-            if last is not None and txn_version <= last:
-                return None
+        if _replayed(snap, txn_app_id, txn_version):
+            return None
         cdf = self._cdf_enabled(snap)
         if overwrite_schema:
             if where is not None:
@@ -2788,28 +2608,7 @@ class DeltaWriter:
 
         schema = snap.schema
         parts = snap.partition_columns
-        gen = _generated_exprs(schema)
-        dflt = _default_exprs(schema)
-        missing = [f.name for f in schema.fields if f.name not in df.columns]
-        computed = [c for c in missing if c in gen]
-        defaulted = [c for c in missing if c not in gen and c in dflt]
-        missing = [c for c in missing if c not in gen and c not in dflt]
-        if missing:
-            raise SchemaError(f"input missing table columns: {missing}")
-        df = df.select(
-            *[
-                (
-                    F.expr(gen[f.name])
-                    if f.name in computed
-                    else F.expr(dflt[f.name])
-                    if f.name in defaulted
-                    else F.col(f.name)
-                )
-                .cast(_nullable_type(f.dataType))
-                .alias(f.name)
-                for f in schema.fields
-            ]
-        )
+        df, computed = _conform_rows(df, schema)
         self._enforce_check_constraints(df)
         self._enforce_generated_columns(df, schema, skip=set(computed))
 
@@ -2835,11 +2634,7 @@ class DeltaWriter:
                 # micro-batch pays no isEmpty()/count() probe job, and
                 # an empty one skips the commit so an idle stream never
                 # grows the log (or truncates in full-overwrite mode)
-                w_schema, w_parts, wdf = schema, parts, df
-                if snap.column_mapping_mode != "none":
-                    w_schema, w_parts, wdf = self._to_physical(
-                        df, schema, parts)
-                pre_written = self._write_data(wdf, w_schema, w_parts)
+                pre_written = self._write_data(df, schema, parts)
                 if not pre_written[1]:
                     self._rollback(pre_written[0])
                     from duckdb_delta_spark.delta.logging import emit
@@ -2883,17 +2678,7 @@ class DeltaWriter:
             removes: list[dict] = []
             rows = None
             if where is None:
-                for f in snap.add_files():
-                    r = {
-                        "path": f.path,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": dict(f.partition_values),
-                        "size": f.size,
-                    }
-                    if f.deletion_vector:
-                        r["deletionVector"] = f.deletion_vector
-                    removes.append({"remove": r})
+                removes = [f.remove_action(now_ms) for f in snap.add_files()]
                 # no cdc pre-images: a full overwrite is whole-file
                 # removes + adds, which readers derive CDF from directly
                 # (see below)
@@ -2936,15 +2721,7 @@ class DeltaWriter:
                 ))
                 cdc_moved, cdc_actions = self._write_cdc(cdc, parts)
 
-            if pre_written is not None:
-                moved, adds = pre_written
-            else:
-                write_schema, write_parts, wdf = schema, parts, df
-                if snap.column_mapping_mode != "none":
-                    write_schema, write_parts, wdf = self._to_physical(
-                        df, schema, parts)
-                moved, adds = self._write_data(
-                    wdf, write_schema, write_parts)
+            moved, adds = pre_written or self._write_data(df, schema, parts)
         except BaseException:
             # write-first mode: a post-write failure (contract violation,
             # callable error, DV-build failure) must not leak the staged
@@ -2967,10 +2744,7 @@ class DeltaWriter:
         actions.extend({"add": a} for a in adds)
         actions.extend(cdc_actions)
         if txn_app_id is not None and txn_version is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version),
-                         "lastUpdated": int(time.time() * 1000)}}
-            )
+            actions.append(_txn_action(txn_app_id, txn_version))
 
         # replaceWhere reads the replaced region; a FULL overwrite's read
         # set is the whole manifest, so it only rebases past state-free
@@ -3063,24 +2837,8 @@ class DeltaWriter:
         meta["partitionColumns"] = parts
 
         now_ms = int(time.time() * 1000)
-        removes = []
-        for f in snap.add_files():
-            r = {
-                "path": f.path,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": dict(f.partition_values),
-                "size": f.size,
-            }
-            if f.deletion_vector:
-                r["deletionVector"] = f.deletion_vector
-            removes.append({"remove": r})
-
-        write_schema, write_parts, wdf = new_schema, parts, df
-        if snap.column_mapping_mode != "none":
-            write_schema, write_parts, wdf = self._to_physical(
-                df, new_schema, parts)
-        moved, adds = self._write_data(wdf, write_schema, write_parts)
+        removes = [f.remove_action(now_ms) for f in snap.add_files()]
+        moved, adds = self._write_data(df, new_schema, parts)
 
         actions: list[dict] = [
             {"commitInfo": _commit_info(
@@ -3204,17 +2962,7 @@ class DeltaWriter:
                     f.default_row_commit_version
                 )
             actions.append({"add": add})
-        for f in drop:
-            remove = {
-                "path": f.path,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-                "partitionValues": dict(f.partition_values),
-                "size": f.size,
-            }
-            if f.deletion_vector:
-                remove["deletionVector"] = f.deletion_vector
-            actions.append({"remove": remove})
+        actions.extend(f.remove_action(now_ms) for f in drop)
 
         # the diff is against the whole manifest: rebase only past
         # state-free racers (VACUUM START/END logging, app-txn markers)
@@ -3782,13 +3530,8 @@ class DeltaWriter:
             [f.path for f in dv_files]
         )
         df = sb.to_df()  # DV-masked live rows of exactly those files
-        if snap.column_mapping_mode != "none":
-            ws, wp, wf = self._to_physical(df, snap.schema,
-                                           snap.partition_columns)
-            moved, adds = self._write_data(wf, ws, wp)
-        else:
-            moved, adds = self._write_data(df, snap.schema,
-                                           snap.partition_columns)
+        moved, adds = self._write_data(df, snap.schema,
+                                       snap.partition_columns)
         now_ms = int(time.time() * 1000)
         for a in adds:
             a["dataChange"] = False
@@ -3798,16 +3541,8 @@ class DeltaWriter:
                           "numRemovedFiles": str(len(dv_files)),
                           "numAddedFiles": str(len(adds))})},
         ]
-        for f in dv_files:
-            remove = {
-                "path": f.path,
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-                "partitionValues": dict(f.partition_values),
-                "size": f.size,
-                "deletionVector": f.deletion_vector,
-            }
-            actions.append({"remove": remove})
+        actions.extend(f.remove_action(now_ms, data_change=False)
+                       for f in dv_files)
         actions.extend({"add": a} for a in adds)
         return self._commit(snap, actions, staged=[rel for rel, _ in moved])
 
@@ -4507,28 +4242,17 @@ class DeltaWriter:
             groups.setdefault(key, []).append(f)
 
         now_ms = int(time.time() * 1000)
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
 
         def _compact_group(files):
             """Rewrite one partition group. Returns (removes, adds, written)."""
-            g_removes: list[dict] = []
-            g_adds: list[dict] = []
-            g_written: list[str] = []
             total = sum(f.size for f in files)
             n_out = max(1, -(-total // target_file_bytes))
             if n_out >= len(files) and not sort_cols and not z_cols:
                 # without clustering there is nothing to gain from a
                 # rewrite that doesn't shrink the file count
-                return g_removes, g_adds, g_written
+                return [], [], []
             n_out = min(n_out, len(files))
-            # new files live in the same (hive) directory as the old ones
-            part_dir = os.path.dirname(urllib.parse.unquote(files[0].path))
             paths = [f.absolute_path(self.table_path) for f in files]
-            staging = os.path.join(
-                self.table_path, f"_staging_{uuid.uuid4().hex}"
-            )
             src = self.spark.read.schema(read_schema).parquet(*paths)
             if row_tracked:
                 from pyspark.sql import functions as F
@@ -4613,74 +4337,20 @@ class DeltaWriter:
                         + [T.StructField(mat_id, T.LongType()),
                            T.StructField(mat_ver, T.LongType())])
                 src = src.to(id_schema)
-            src.write.mode("overwrite").parquet(staging)
-            try:
-                rels: list[tuple[str, str]] = []
-                for name in sorted(os.listdir(staging)):
-                    if not name.endswith(".parquet"):
-                        continue
-                    rel = os.path.join(part_dir, name) if part_dir else name
-                    dest = os.path.join(self.table_path, rel)
-                    shutil.move(os.path.join(staging, name), dest)
-                    g_written.append(rel)
-                    rels.append((rel, dest))
-                # phys_schema matches the parquet column names (logical
-                # == physical on unmapped tables); footer reads pooled
-                results = _footer_stats_many(
-                    [d for _, d in rels], phys_schema, set(),
-                    allow=self._stats_allowlist(phys_schema, parts),
-                )
-                if any(st is None for st, _ in results):
-                    # variant tables: footer unreadable → one Spark job
-                    by_uri = _spark_stats_fallback(
-                        self.spark,
-                        [d for (_, d), (st, _) in zip(rels, results)
-                         if st is None],
-                        phys_schema, set(),
-                        self._stats_allowlist(phys_schema, parts),
-                    )
-                    from duckdb_delta_spark.delta.scan import (
-                        DeltaScanBuilder,
-                    )
-
-                    results = [
-                        (st, size) if st is not None else (
-                            by_uri.get(
-                                DeltaScanBuilder._spark_file_uri(dest)),
-                            size,
-                        )
-                        for (st, size), (_, dest) in zip(results, rels)
-                    ]
-                for (rel, dest), (stats, size) in zip(rels, results):
-                    g_adds.append(
-                        {
-                            "path": urllib.parse.quote(
-                                rel.replace(os.sep, "/"), safe="/=-_.~"
-                            ),
-                            "partitionValues": dict(files[0].partition_values),
-                            "size": size,
-                            "modificationTime": now_ms,
-                            "dataChange": False,
-                            "stats": None if stats is None else json.dumps(
-                                stats, separators=(",", ":")
-                            ),
-                        }
-                    )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-            g_removes.extend(
-                {
-                    "remove": {
-                        "path": f.path,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                        "partitionValues": dict(f.partition_values),
-                        "size": f.size,
-                    }
-                }
-                for f in files
-            )
-            return g_removes, g_adds, g_written
+            # new files live in the same (hive) directory as the old ones;
+            # phys_schema matches the parquet column names (logical ==
+            # physical on unmapped tables)
+            moved, _, _ = self._stage(
+                src, [], prefix=os.path.dirname(
+                    urllib.parse.unquote(files[0].path)))
+            pvals = dict(files[0].partition_values)
+            adds = self._build_add_actions(
+                [(rel, pvals) for rel, _ in moved], phys_schema, parts)
+            for a in adds:
+                a["dataChange"] = False
+            removes = [f.remove_action(now_ms, data_change=False)
+                       for f in files]
+            return removes, adds, [rel for rel, _ in moved]
 
         # Submit group rewrites CONCURRENTLY: Spark's scheduler interleaves
         # the jobs across executors, so 10k partitions is a pool-bounded
@@ -5640,6 +5310,23 @@ def _commit_info(operation: str, params: dict | None = None) -> dict:
     }
 
 
+def _txn_action(app_id: str, txn_version: int) -> dict:
+    """The app-transaction (``txn``) action recording ``txn_version`` as
+    ``app_id``'s last committed version (idempotency_helpers.cpp:41-145)."""
+    return {"txn": {"appId": app_id, "version": int(txn_version),
+                    "lastUpdated": int(time.time() * 1000)}}
+
+
+def _replayed(snap: Snapshot, app_id: str | None,
+              txn_version: int | None) -> bool:
+    """True when ``snap`` already holds ``txn_version`` (or a later one)
+    for ``app_id``: a replayed idempotent write that must be skipped."""
+    if app_id is None or txn_version is None:
+        return False
+    last = snap.transaction_version(app_id)
+    return last is not None and int(txn_version) <= last
+
+
 def assign_row_ids(version: int, actions: list[dict], snap: Snapshot,
                    preserve_existing: bool = False) -> None:
     """Row tracking (Delta spec "Row Tracking"): on tables with the
@@ -5990,6 +5677,65 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
         # conform above left untouched (e.g. int keys → long keys)
         return out.cast(_nullable_type(dst_dt))
     return col.cast(_nullable_type(dst_dt))
+
+
+def _conform_rows(df: DataFrame, schema: T.StructType, col=None,
+                  fill: dict | None = None, null_fill: bool = False):
+    """Project input rows onto the table ``schema``: the one conform step
+    of every data write (append, overwrite / replaceWhere, MERGE insert).
+
+    A present column whose struct/array/map shape differs from the
+    table's conforms BY NAME (struct casts are positional: they would
+    fail or silently swap same-typed fields); every other column casts to
+    the nullable table type (Spark refuses to cast a nullable value into
+    a non-nullable field, and NOT NULL is enforced from footer stats
+    after the write). An absent column fills from its generation
+    expression, then ``fill`` (append's identity expressions), then its
+    default. With ``null_fill`` (mergeSchema append) anything else is
+    NULL; without it an unfillable column or a nested shape mismatch
+    raises SchemaError. ``col(name)`` resolves an input column (MERGE
+    passes the source alias). Returns the conformed frame and the
+    columns computed from their generation expression."""
+    from pyspark.sql import functions as F
+
+    col = col or F.col
+    fill = fill or {}
+    gen = _generated_exprs(schema)
+    dflt = _default_exprs(schema)
+    by_df = {f.name: f.dataType for f in df.schema.fields}
+    missing = [f.name for f in schema.fields
+               if f.name not in by_df and f.name not in gen
+               and f.name not in fill and f.name not in dflt]
+    if missing and not null_fill:
+        raise SchemaError(f"input missing table columns: {missing}")
+    sel, computed = [], []
+    for f in schema.fields:
+        src = by_df.get(f.name)
+        if src is not None and not null_fill:
+            extra, lacking = _nested_name_diffs(src, f.dataType)
+            if extra or lacking:
+                raise SchemaError(
+                    f"column {f.name!r}: nested shape mismatch (input-only "
+                    f"fields {extra}, table-only fields {lacking}); evolve "
+                    "the table first (merge_schema=True on append or merge)"
+                )
+        if src is not None and _needs_nested_conform(src, f.dataType):
+            sel.append(_conform_nested_expr(col(f.name), src, f.dataType)
+                       .alias(f.name))
+            continue
+        if src is not None:
+            e = col(f.name)
+        elif f.name in gen:
+            e = F.expr(gen[f.name])
+            computed.append(f.name)
+        elif f.name in fill:
+            e = fill[f.name]
+        elif f.name in dflt:
+            e = F.expr(dflt[f.name])
+        else:
+            e = F.lit(None)
+        sel.append(e.cast(_nullable_type(f.dataType)).alias(f.name))
+    return df.select(*sel), computed
 
 
 def _indexed_stat_leaves(

@@ -1849,6 +1849,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         from duckdb_delta_spark.delta.writer import (
             _commit_info,
             _footer_stats_many,
+            _txn_action,
         )
 
         log = DeltaLog(self.table_path)
@@ -1891,8 +1892,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         info = _commit_info("STREAMING UPDATE", {"epochId": str(batchId)})
         actions = [
             {"commitInfo": info},
-            {"txn": {"appId": self.app_id, "version": int(batchId),
-                     "lastUpdated": now_ms}},
+            _txn_action(self.app_id, batchId),
         ]
         pcols = set(self.partition_columns)
         # stats normally arrive in the commit messages (computed by the

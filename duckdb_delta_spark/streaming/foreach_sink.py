@@ -27,6 +27,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _writer_for_batch(state: dict, table_path: str, batch_df: DataFrame,
+                      app_id: str, batch_id: int, replay_event: str):
+    """The sink's cached :class:`DeltaWriter`, refreshed incrementally to
+    HEAD (other writers may have committed), or None when ``batch_id`` is
+    already committed for ``app_id`` — a replayed batch, reported as
+    ``replay_event``."""
+    from duckdb_delta_spark.delta.logging import emit
+    from duckdb_delta_spark.delta.snapshot import Snapshot
+    from duckdb_delta_spark.delta.writer import DeltaWriter, _replayed
+
+    w: DeltaWriter | None = state.get("writer")
+    if w is None:
+        w = state["writer"] = DeltaWriter(table_path, batch_df.sparkSession)
+    else:
+        w._snapshot = Snapshot.build(w.log, base=w._snapshot)
+    if _replayed(w._snapshot, app_id, batch_id):
+        emit(replay_event, table_path=table_path,
+             batch_id=int(batch_id),
+             last_committed=w._snapshot.transaction_version(app_id))
+        return None
+    return w
+
+
 def delta_foreach_batch(
     table_path: str,
     txn_app_id: str | None = None,
@@ -59,25 +82,11 @@ def delta_foreach_batch(
         import time as _time
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
-        from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
-        w: DeltaWriter | None = state.get("writer")
+        w = _writer_for_batch(state, table_path, batch_df, app_id, batch_id,
+                              "stream.foreach.skip_replayed")
         if w is None:
-            w = state["writer"] = DeltaWriter(
-                table_path, batch_df.sparkSession)
-        else:
-            # refresh incrementally: other writers may have committed
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
-        last = w._snapshot.transaction_version(app_id)
-        if last is not None and int(batch_id) <= last:
-            emit(
-                "stream.foreach.skip_replayed",
-                table_path=table_path,
-                batch_id=int(batch_id),
-                last_committed=last,
-            )
             return
         version = w.append(
             batch_df,
@@ -138,20 +147,11 @@ def delta_foreach_merge(
         from pyspark.sql import functions as F
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
-        from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
-        w: DeltaWriter | None = state.get("writer")
+        w = _writer_for_batch(state, table_path, batch_df, app_id, batch_id,
+                              "stream.merge.skip_replayed")
         if w is None:
-            w = state["writer"] = DeltaWriter(
-                table_path, batch_df.sparkSession)
-        else:
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
-        last = w._snapshot.transaction_version(app_id)
-        if last is not None and int(batch_id) <= last:
-            emit("stream.merge.skip_replayed", table_path=table_path,
-                 batch_id=int(batch_id), last_committed=last)
             return
         src = batch_df
         if dedup_keys:
@@ -240,20 +240,11 @@ def delta_foreach_replace_where(
         import time as _time
 
         from duckdb_delta_spark.delta.logging import emit
-        from duckdb_delta_spark.delta.snapshot import Snapshot
-        from duckdb_delta_spark.delta.writer import DeltaWriter
 
         _t0 = _time.time()
-        w: DeltaWriter | None = state.get("writer")
+        w = _writer_for_batch(state, table_path, batch_df, app_id, batch_id,
+                              "stream.replace.skip_replayed")
         if w is None:
-            w = state["writer"] = DeltaWriter(
-                table_path, batch_df.sparkSession)
-        else:
-            w._snapshot = Snapshot.build(w.log, base=w._snapshot)
-        last = w._snapshot.transaction_version(app_id)
-        if last is not None and int(batch_id) <= last:
-            emit("stream.replace.skip_replayed", table_path=table_path,
-                 batch_id=int(batch_id), last_committed=last)
             return
         # the callable predicate is resolved INSIDE overwrite, after the
         # skip_if_empty decision — it never runs against an empty batch
