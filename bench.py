@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -140,10 +141,11 @@ def main() -> int:
     # "suspect_cpus_ignored" from ≈1 timing ratios (which is also what a
     # constant-bound suite at this SF looks like). Additions-only: the
     # timing methodology and every existing field are unchanged.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = int(cpus_env or 0) or os.cpu_count() or 4
+    # The count is read from the session's ``local[N]`` master, so it is
+    # the one the session actually runs with.
+    m = re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)
     scaling_evidence = {
-        "cpus": cpus,
+        "cpus": int(m.group(1)) if m else None,
         "spark_master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),

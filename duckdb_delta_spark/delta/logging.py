@@ -30,8 +30,8 @@ _SINKS: list[Callable[[dict], None]] = []
 #: event names emitted by the engine (stable surface, tests match on these)
 EVENTS = (
     "snapshot.build",      # table_path, version, n_files, incremental, replay_start, cached
-    "scan.plan",           # table_path, version, skip report fields
-    "scan.dv_route",       # table_path, n_descriptors, cardinality, path
+    "scan.plan",           # table_path, version, route (local|spark), skip report fields
+    "scan.dv_route",       # table_path, n_descriptors, cardinality, route (anti_join|executor_decode|local)
     "commit.write",        # table_path, version, operation, n_actions
     "commit.conflict",     # table_path, version
     "checkpoint.write",    # table_path, version, n_rows

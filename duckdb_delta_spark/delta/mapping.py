@@ -90,6 +90,21 @@ def physical_path_map(schema: T.StructType) -> dict[str, str]:
     return out
 
 
+def contains_type(dt: T.DataType, *kinds: type) -> bool:
+    """True when an instance of one of ``kinds`` appears anywhere in the
+    (nested) type."""
+    if isinstance(dt, kinds):
+        return True
+    if isinstance(dt, T.StructType):
+        return any(contains_type(f.dataType, *kinds) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return contains_type(dt.elementType, *kinds)
+    if isinstance(dt, T.MapType):
+        return (contains_type(dt.keyType, *kinds)
+                or contains_type(dt.valueType, *kinds))
+    return False
+
+
 def nullable_type(dt: T.DataType) -> T.DataType:
     """Deep copy with every nested field nullable (Spark refuses to cast
     into non-nullable struct fields); metadata preserved."""

@@ -24,6 +24,15 @@ Scale design:
   descriptors broadcast, each executor decodes the DV files behind its own
   splits inside an Arrow-batched pandas UDF (process-cached,
   ``searchsorted`` per batch) — driver work stays O(#descriptors).
+* Metadata-bound scans skip the file-scan job: when pruning keeps at
+  most 1/16 of the table's files and they hold at most 1 MiB, both on
+  disk and decoded, ``pyarrow`` reads them on the driver (DVs and
+  partition constants applied there) and the scan becomes a local
+  relation that Catalyst answers without a Spark job. This route is
+  EAGER — the files are read inside ``to_df``, not at action time.
+  Anything outside what it reads exactly like Spark's parquet reader (id
+  mapping, row ids, timestamps, pre-Gregorian dates, evolved files,
+  non-local paths) keeps the file scan.
 * Exceeds the reference's pushdown type matrix: timestamps and IN() do prune
   here (the reference can't push those, delta-kernel-rs#1002;
   src/delta_utils.cpp:1064-1065) — we own the stats evaluation.
@@ -59,6 +68,35 @@ def pv_string_to_col(raw, typ):
     if isinstance(typ, T.BinaryType):
         return F.encode(raw, "utf-8")
     return raw.cast(typ)
+
+
+def _pv_strings(f: AddFile, keys: list[str]) -> list[str | None]:
+    """``f``'s partition values under the log ``keys`` as the strings the
+    scan converts; null and ``""`` both read as None."""
+    return [None if (v := f.partition_values.get(k)) in (None, "") else str(v)
+            for k in keys]
+
+
+#: from 1582-10-15 on, Spark's hybrid (Julian) calendar and the proleptic
+#: Gregorian one pyarrow reads agree on every day
+_GREGORIAN_CUTOVER = _dt.date(1582, 10, 15)
+
+
+def _dates_before_cutover(md) -> bool:
+    """Whether the parquet footer ``md`` may hold a DATE before the
+    Gregorian cutover. Spark's reader rebases such days from the hybrid
+    calendar or refuses them, depending on the writer's footer and the
+    session; pyarrow takes them as stored. A date leaf without min/max
+    statistics counts as one."""
+    for j in range(md.num_columns):
+        if md.schema.column(j).logical_type.type != "DATE":
+            continue
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(j).statistics
+            if st is None or not st.has_min_max or st.min < _GREGORIAN_CUTOVER:
+                return True
+    return False
+
 
 #: per-worker-process decoded-DV cache (uri-keyed); lives for the Python
 #: worker's lifetime so repeated batches of the same split decode once
@@ -429,6 +467,11 @@ class DeltaScanBuilder:
 
     #: below this many total deleted rows, DV filtering is a pure-JVM anti-join
     DV_ANTI_JOIN_MAX = 5_000_000
+    #: a scan keeping at most this share of the table's files, whose kept
+    #: files hold at most this many add-file bytes and decode to at most
+    #: this many Arrow bytes, is read on the driver (``_read_local``)
+    LOCAL_SCAN_MAX_SHARE = 1 / 16
+    LOCAL_SCAN_MAX_BYTES = 1 << 20
 
     def __init__(self, snapshot: Snapshot, spark: SparkSession, pushdown: str = "all"):
         if pushdown not in ("all", "none", "constant_only", "dynamic_only"):
@@ -575,9 +618,8 @@ class DeltaScanBuilder:
             ):
                 arr = self.snapshot.partition_array(p.column)  # cached
             else:
-                raw = [f.partition_values.get(p.column) for f in files]
                 arr = pa.array(
-                    [None if v in (None, "") else str(v) for v in raw],
+                    [_pv_strings(f, [p.column])[0] for f in files],
                     type=pa.string(),
                 )
         except (pa.ArrowInvalid, pa.ArrowTypeError):
@@ -947,12 +989,11 @@ class DeltaScanBuilder:
         snap = self.snapshot
         spark = self.spark
         files = self._prune()
-        emit(
-            "scan.plan",
-            table_path=snap.log.table_path,
-            version=snap.version,
-            **self._report,
-        )
+
+        def plan(route: str) -> None:
+            emit("scan.plan", table_path=snap.log.table_path,
+                 version=snap.version, route=route, **self._report)
+
         fields, mode = self._physical_fields()
         pcols = snap.partition_columns
         ptypes = {f.name: f.dataType for f in snap.schema.fields if f.name in pcols}
@@ -966,6 +1007,7 @@ class DeltaScanBuilder:
         need_file_col = bool(pcols) or has_dv or self._virtual or self._row_ids
 
         if not files:
+            plan("spark")
             extra = []
             if self._virtual:
                 # requested virtual columns must exist on the empty frame
@@ -1035,9 +1077,12 @@ class DeltaScanBuilder:
             if extra:
                 phys_schema = T.StructType(list(phys_schema.fields) + extra)
 
-        paths = [f.absolute_path(snap.log.table_path) for f in files]
-        reader = spark.read.schema(phys_schema)
-        df = reader.parquet(*paths)
+        df = self._read_local(files, pcols, phys_schema)
+        local = df is not None
+        plan("local" if local else "spark")
+        if not local:
+            paths = [f.absolute_path(snap.log.table_path) for f in files]
+            df = spark.read.schema(phys_schema).parquet(*paths)
 
         sel = []
         for logical, phys, t, _ in fields:
@@ -1048,6 +1093,12 @@ class DeltaScanBuilder:
                 # shape IS the rename, executed codegen-side (no UDF)
                 col = col.cast(nullable_type(t))
             sel.append(col.alias(logical))
+        if local:
+            # the local table already dropped DV-deleted rows; partition
+            # values take the same string → type conversion as the join
+            sel += [pv_string_to_col(F.col(f"__pv_{p}"), ptypes[p]).alias(p)
+                    for p in pcols]
+            pcols, has_dv, need_file_col = [], False, False
         if need_file_col:
             sel.append(F.col("_metadata.file_path").alias(FILE_COL))
         if has_dv or self._virtual or self._row_ids:
@@ -1147,6 +1198,87 @@ class DeltaScanBuilder:
 
     # ---------- helpers ----------
 
+    def _read_local(self, files, pcols, phys_schema) -> DataFrame | None:
+        """The kept files read on the driver into a local relation, or None
+        when the scan takes the Spark file scan.
+
+        The relation holds ``phys_schema``'s columns without the rows the
+        files' deletion vectors delete, plus one ``__pv_<col>`` string
+        column per partition column from the log; ``to_df`` applies the
+        same renames, casts and filters to it as to the Spark scan.
+        ``LOCAL_SCAN_MAX_BYTES`` bounds both the kept add-file bytes and
+        the decoded Arrow bytes (checked batch by batch, so a small but
+        highly compressed file cannot fill the driver).
+        Spark's parquet reader stays the reference: anything whose reading
+        could differ (a column missing from a file under its exact name,
+        an Arrow cast that fails, types that need time-zone handling, a
+        date before the Gregorian cutover) or that needs file metadata goes
+        there."""
+        from duckdb_delta_spark.delta.mapping import contains_type
+
+        snap = self.snapshot
+        left = self.LOCAL_SCAN_MAX_BYTES
+        if (self._virtual or self._row_ids
+                or snap.column_mapping_mode == "id"
+                or not phys_schema.fields
+                or len(files) > self.LOCAL_SCAN_MAX_SHARE * self._report["files_total"]
+                or sum(f.size for f in files) > left
+                or contains_type(phys_schema, T.TimestampType,
+                                 T.TimestampNTZType, T.VariantType)):
+            return None
+        table_path = snap.log.table_path
+        paths = [f.absolute_path(table_path) for f in files]
+        if any("://" in p or p.startswith("file:") for p in paths):
+            return None
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from duckdb_delta_spark.delta.dv import read_dv_from_descriptor
+        from duckdb_delta_spark.delta.mapping import nullable_type
+
+        names = phys_schema.names
+        keys = self._pv_keys(pcols)
+        dates = contains_type(phys_schema, T.DateType)
+        parts = []
+        try:
+            target = to_arrow_schema(nullable_type(phys_schema))
+            for f, path in zip(files, paths):
+                with pq.ParquetFile(path) as pf:
+                    if (not set(names) <= set(pf.schema_arrow.names)
+                            or dates and _dates_before_cutover(pf.metadata)):
+                        return None
+                    batches = []
+                    for b in pf.iter_batches(columns=names):
+                        left -= b.nbytes
+                        if left < 0:
+                            return None
+                        batches.append(b)
+                    t = (pa.Table.from_batches(batches) if batches
+                         else pf.schema_arrow.empty_table()).select(names)
+                if f.deletion_vector:
+                    keep = np.ones(t.num_rows, dtype=bool)
+                    keep[read_dv_from_descriptor(
+                        f.deletion_vector, table_path).astype(np.int64)] = False
+                    t = t.filter(pa.array(keep))
+                t = t.cast(target)
+                for p, v in zip(pcols, _pv_strings(f, keys)):
+                    t = t.append_column(
+                        f"__pv_{p}", pa.array([v] * t.num_rows, pa.string()))
+                parts.append(t)
+        except (pa.ArrowException, OSError, ValueError, TypeError,
+                IndexError):
+            # the Spark scan reads it instead, or raises the same error
+            return None
+        self._report_dvs(files, "local")
+        # one chunk: createDataFrame drops every batch after an empty one
+        # (a file whose rows a DV all deletes, or a 0-row file)
+        return self.spark.createDataFrame(
+            pa.concat_tables(parts).combine_chunks(), nullable_type(T.StructType(
+                list(phys_schema.fields)
+                + [T.StructField(f"__pv_{p}", T.StringType()) for p in pcols])))
+
     @staticmethod
     def _spark_file_uri(path: str) -> str:
         """Format a disk path the way ``_metadata.file_path`` renders it
@@ -1168,15 +1300,12 @@ class DeltaScanBuilder:
     ) -> DataFrame:
         """Partition constants from the log, via a broadcast map join
         (reference: ``FinalizeBind``, delta_multi_file_reader.cpp:193-230)."""
-        phys = self._phys_name_map()
-        keys = [phys.get(p, p) for p in pcols]  # log keys are physical names
-        rows = []
-        for f in files:
-            vals = [
-                None if (v := f.partition_values.get(k)) in (None, "") else str(v)
-                for k in keys
-            ]
-            rows.append((self._spark_file_uri(f.absolute_path(self.snapshot.log.table_path)), *vals))
+        keys = self._pv_keys(pcols)
+        rows = [
+            (self._spark_file_uri(f.absolute_path(self.snapshot.log.table_path)),
+             *_pv_strings(f, keys))
+            for f in files
+        ]
         schema = T.StructType(
             [T.StructField(FILE_COL, T.StringType())]
             + [T.StructField(f"__pv_{p}", T.StringType()) for p in pcols]
@@ -1189,30 +1318,43 @@ class DeltaScanBuilder:
             ).drop(f"__pv_{p}")
         return df
 
+    def _pv_keys(self, pcols: list[str]) -> list[str]:
+        """The log's partition-value keys of ``pcols`` (physical names)."""
+        phys = self._phys_name_map()
+        return [phys.get(p, p) for p in pcols]
+
+    def _report_dvs(self, files: list[AddFile], route: str | None = None) -> int:
+        """Emit ``scan.dv_route`` for the DV-carrying ``files`` and return
+        their total deleted-row cardinality, read from the descriptors (no
+        decode needed to route). ``route`` None names the Spark route the
+        cardinality picks."""
+        from duckdb_delta_spark.delta.logging import emit
+
+        dvs = [f.deletion_vector for f in files if f.deletion_vector]
+        total = sum(int(d.get("cardinality") or 0) for d in dvs)
+        if dvs:
+            emit(
+                "scan.dv_route",
+                table_path=self.snapshot.log.table_path,
+                n_descriptors=len(dvs),
+                cardinality=total,
+                route=route or ("anti_join" if total <= self.DV_ANTI_JOIN_MAX
+                                else "executor_decode"),
+            )
+        return total
+
     def _apply_deletion_vectors(self, df: DataFrame, files: list[AddFile]) -> DataFrame:
         from duckdb_delta_spark.delta.dv import read_dv_from_descriptor
 
         table_path = self.snapshot.log.table_path
-        descriptors: dict[str, dict] = {}
-        total = 0  # descriptor cardinality — no decode needed to route
-        for f in files:
-            if not f.deletion_vector:
-                continue
-            uri = self._spark_file_uri(f.absolute_path(table_path))
-            descriptors[uri] = f.deletion_vector
-            total += int(f.deletion_vector.get("cardinality") or 0)
-
+        descriptors = {
+            self._spark_file_uri(f.absolute_path(table_path)): f.deletion_vector
+            for f in files
+            if f.deletion_vector
+        }
         if not descriptors:
             return df
-        from duckdb_delta_spark.delta.logging import emit
-
-        emit(
-            "scan.dv_route",
-            table_path=table_path,
-            n_descriptors=len(descriptors),
-            cardinality=total,
-            route="anti_join" if total <= self.DV_ANTI_JOIN_MAX else "executor_decode",
-        )
+        total = self._report_dvs(files)
         if total <= self.DV_ANTI_JOIN_MAX:
             # small: decode on the driver, pure-JVM broadcast anti-join
             pairs = [

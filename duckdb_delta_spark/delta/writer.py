@@ -46,6 +46,7 @@ from duckdb_delta_spark.delta.errors import (
     UnsupportedFeatureError,
 )
 from duckdb_delta_spark.delta.log import DeltaLog
+from duckdb_delta_spark.delta.mapping import contains_type
 from duckdb_delta_spark.delta.snapshot import SUPPORTED_WRITER_FEATURES, Snapshot
 from duckdb_delta_spark.delta.transaction import (
     ReadSet,
@@ -218,19 +219,6 @@ def _ensure_mapping_metadata(
     return walk(schema), max_id
 
 
-def _contains_variant(dt: T.DataType) -> bool:
-    """True when a VariantType appears anywhere in the (nested) type."""
-    if isinstance(dt, T.VariantType):
-        return True
-    if isinstance(dt, T.StructType):
-        return any(_contains_variant(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return _contains_variant(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _contains_variant(dt.keyType) or _contains_variant(dt.valueType)
-    return False
-
-
 def _json_stat_value(v):
     if isinstance(v, bytes):
         return None  # binary: no stats (reference skips blobs too)
@@ -400,7 +388,7 @@ class DeltaWriter:
             }
             if proto["minReaderVersion"] >= 3:
                 proto["readerFeatures"] = sorted(r_implied)
-        if _contains_variant(schema):
+        if contains_type(schema, T.VariantType):
             # variant is a v3/v7 table feature (Delta spec "Variant Data
             # Type"): a table with a variant column must LIST variantType
             # in both feature sets or spec-compliant engines reject it
@@ -964,12 +952,18 @@ class DeltaWriter:
                         self._enforce_check_constraints(df)
                 schema_changed = (fresh.metadata.get("schemaString")
                                   != old.metadata.get("schemaString"))
-                if schema_changed and fresh.column_mapping_mode != "none":
+                remerge = schema_changed or (schema_widened and meta_changed)
+                if remerge and fresh.column_mapping_mode != "none":
+                    # the re-merge below adds bare fields: no mapping id,
+                    # no physical name, no maxColumnId bump — and our files
+                    # hold the physical names, so they would read as NULL
                     raise SchemaError(
                         "concurrent schema change on a column-mapped table "
-                        "during commit retry"
+                        "during commit retry" if schema_changed else
+                        "concurrent metadata change on a column-mapped "
+                        "table during a schema-widening commit retry"
                     )
-                if schema_changed or (schema_widened and meta_changed):
+                if remerge:
                     fresh_fields = {f.name: f for f in fresh.schema.fields}
                     old_names = {f.name for f in old.schema.fields}
                     # every column our files carry must still exist with
@@ -2050,12 +2044,10 @@ class DeltaWriter:
             def _assigned(name):
                 return assigned_exprs.get(name, F.col(name))
 
-            new_rows = matched.select(
-                *[
-                    _assigned(f.name).cast(_nullable_type(f.dataType)).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
+            # a whole-struct assignment conforms by name, like an insert
+            new_rows, _ = _conform_rows(matched.select(
+                *[_assigned(f.name).alias(f.name) for f in schema.fields]
+            ), schema)
             # generated columns not explicitly assigned are RE-COMPUTED
             # (sources may have changed); explicitly assigned ones are
             # enforced against their expression
@@ -2366,14 +2358,10 @@ class DeltaWriter:
             upd = t.join(s, on_expr, "inner")
             if when_matched_condition is not None:
                 upd = upd.where(_cond(when_matched_condition))
-            upd = upd.select(
-                *[
-                    upd_exprs.get(f.name, F.col("t." + f.name))
-                    .cast(_nullable_type(f.dataType))
-                    .alias(f.name)
-                    for f in schema.fields
-                ]
-            )
+            upd, _ = _conform_rows(upd.select(
+                *[upd_exprs.get(f.name, F.col("t." + f.name)).alias(f.name)
+                  for f in schema.fields]
+            ), schema)
             # recompute generated columns the assignments didn't set
             # (their sources may have changed); enforce the assigned ones
             upd = _apply_generated(upd, schema, keep=upd_tops)
@@ -2387,14 +2375,10 @@ class DeltaWriter:
                 lambda n: F.col("t." + n)
             )
             bys_tops = set(bys_exprs)
-            bys_upd = bys.select(
-                *[
-                    bys_exprs.get(f.name, F.col("t." + f.name))
-                    .cast(_nullable_type(f.dataType))
-                    .alias(f.name)
-                    for f in schema.fields
-                ]
-            )
+            bys_upd, _ = _conform_rows(bys.select(
+                *[bys_exprs.get(f.name, F.col("t." + f.name)).alias(f.name)
+                  for f in schema.fields]
+            ), schema)
             bys_upd = _apply_generated(bys_upd, schema, keep=bys_tops)
             new_parts.append(
                 (bys_upd, {c for c in gen if c not in bys_tops})
@@ -2802,7 +2786,7 @@ class DeltaWriter:
         proto = snap.protocol
         declared = set(proto.get("readerFeatures") or []) | set(
             proto.get("writerFeatures") or [])
-        if any(_contains_variant(f.dataType) for f in new_schema.fields) \
+        if contains_type(new_schema, T.VariantType) \
                 and not ({"variantType", "variantType-preview"} & declared):
             raise UnsupportedFeatureError(
                 "overwriteSchema introduces VARIANT but the protocol "
@@ -3487,7 +3471,7 @@ class DeltaWriter:
         The table must have a variant column (feature without one is
         meaningless and delta-spark refuses likewise)."""
         snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
-        if not _contains_variant(snap.schema):
+        if not contains_type(snap.schema, T.VariantType):
             raise SchemaError(
                 "enable_variant_shredding: table has no variant column")
         proto = snap.protocol
@@ -5682,7 +5666,8 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
 def _conform_rows(df: DataFrame, schema: T.StructType, col=None,
                   fill: dict | None = None, null_fill: bool = False):
     """Project input rows onto the table ``schema``: the one conform step
-    of every data write (append, overwrite / replaceWhere, MERGE insert).
+    of every data write (append, overwrite / replaceWhere, MERGE insert,
+    and the new images of UPDATE and MERGE's update clauses).
 
     A present column whose struct/array/map shape differs from the
     table's conforms BY NAME (struct casts are positional: they would

@@ -12,8 +12,10 @@ and results are bit-identical.
 
 Exactness: ``repr(float)`` is the shortest decimal that round-trips to
 the same IEEE-754 double, and Spark's parser reads ``...D`` literals with
-``Double.parseDouble`` — bit-identical to ``F.lit(x)``. Strings are
-escaped for Spark's default backslash-escaped literal syntax.
+``Double.parseDouble`` — bit-identical to ``F.lit(x)``. Strings have
+their quotes doubled; a backslash is never rendered, because its reading
+depends on the session's parser mode: :func:`sql_string` refuses such a
+string and :func:`lit_strings` builds that array with ``F.lit`` instead.
 """
 
 from __future__ import annotations
@@ -33,10 +35,10 @@ def sql_double(x: float) -> str:
 
 def sql_string(s: str) -> str:
     """SQL string literal. Quotes are escaped by doubling (``''``), which
-    both of Spark's parser modes accept; backslashes are doubled for the
-    default ``spark.sql.parser.escapedStringLiterals=false`` mode — a
-    session running the legacy mode would read them literally, so such a
-    string refuses to render rather than silently corrupt."""
+    both of Spark's parser modes accept. A backslash reads as an escape in
+    the default ``spark.sql.parser.escapedStringLiterals=false`` mode and
+    literally in the legacy one, so a string holding one raises
+    ValueError rather than render one way and be read the other."""
     if "\\" in s:
         raise ValueError(
             "sql_string is only exact under the default "
@@ -60,5 +62,9 @@ def lit_double_matrix(rows) -> Column:
 
 
 def lit_strings(vals) -> Column:
-    """``array<string>`` literal in one round-trip."""
+    """``array<string>`` literal in one round-trip; with ``F.lit`` per
+    element when any value holds a backslash (see :func:`sql_string`)."""
+    vals = list(vals)
+    if any("\\" in v for v in vals):
+        return F.array(*map(F.lit, vals))
     return F.expr("array(" + ",".join(sql_string(v) for v in vals) + ")")

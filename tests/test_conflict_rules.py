@@ -34,7 +34,11 @@ import pytest
 from pyspark.sql import types as T
 
 from duckdb_delta_spark import DeltaWriter
-from duckdb_delta_spark.delta.errors import CommitConflictError, IdempotencyError
+from duckdb_delta_spark.delta.errors import (
+    CommitConflictError,
+    IdempotencyError,
+    SchemaError,
+)
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.snapshot import Snapshot
 from duckdb_delta_spark.delta.writer import _commit_info
@@ -67,7 +71,11 @@ def bases(spark, tmp_path_factory):
     ident = str(root / "identity")
     w = DeltaWriter.create(spark, ident, IDENT_SCHEMA)
     w.append(spark.createDataFrame([(1,), (2,)], "v long").coalesce(1))
-    return {"plain": plain, "identity": ident}
+    mapped = str(root / "mapped")
+    w = DeltaWriter.create(spark, mapped, SCHEMA, configuration={
+        "delta.columnMapping.mode": "name"})
+    w.append(_rows(spark, 0, 10).coalesce(1))
+    return {"plain": plain, "identity": ident, "mapped": mapped}
 
 
 # ---------------------------------------------------------------- racers
@@ -192,6 +200,12 @@ def op_append_identity(spark, tdir):
         max_retries=1)
 
 
+def op_append_widen(spark, tdir):
+    df = spark.createDataFrame([(500, 0, "x")], "k long, v long, w string")
+    return DeltaWriter(tdir, spark).append(df.coalesce(1), merge_schema=True,
+                                           max_retries=1)
+
+
 def op_sink(spark, tdir):
     from duckdb_delta_spark.streaming.delta_source import (
         DeltaStreamWriter,
@@ -274,6 +288,9 @@ CASES += [
     (op_append_txn, racer_txn, IDEM, "plain"),
     (op_append_identity, racer_hwm, CCE, "identity"),
     (op_sink, racer_sink_twin, NOOP, "plain"),
+    # a widened column re-merged after a metadata-only racer would carry
+    # no column-mapping id or physical name
+    (op_append_widen, racer_metadata, SchemaError, "mapped"),
 ]
 
 
