@@ -29,8 +29,6 @@ filter for large ones.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -277,7 +275,6 @@ def _walk_changes(
         adds: dict[str, dict] = {}
         removes: dict[str, dict] = {}
         cdcs: list[dict] = []
-        commit_info: dict | None = None
         for action in actions:
             if action.get("cdc"):
                 cdcs.append(action["cdc"])
@@ -285,8 +282,6 @@ def _walk_changes(
                 adds[action["add"]["path"]] = action["add"]
             elif action.get("remove") and action["remove"].get("dataChange", True):
                 removes[action["remove"]["path"]] = action["remove"]
-            elif commit_info is None and action.get("commitInfo") is not None:
-                commit_info = action["commitInfo"]
         if split and schema_changed and schema_versions and \
                 _non_additive_changes(schema_versions[-1][1].fields,
                                       snap.schema.fields):
@@ -311,16 +306,9 @@ def _walk_changes(
             schema_versions.append((v, snap.schema))
         if not adds and not removes and not cdcs:
             continue
-        # commit clock from the actions already in hand (ICT of the
-        # FIRST commitInfo, read_ict's rule), mtime fallback from the
-        # one up-front listing — no per-version re-open of the JSON
-        ict = (commit_info or {}).get("inCommitTimestamp")
-        if ict is not None:
-            ts_ms = int(ict)
-        elif commit_paths.get(v):
-            ts_ms = int(os.path.getmtime(commit_paths[v]) * 1000)
-        else:
-            ts_ms = log.commit_timestamp(v, commits=commit_paths)
+        # commit clock from the actions already in hand and the one
+        # up-front listing — no per-version re-open of the JSON
+        ts_ms = log.commit_time(v, actions, commit_paths)
         if cdcs:
             # Delta spec: when a commit carries cdc actions, readers use
             # the _change_data files EXCLUSIVELY for that commit — richer

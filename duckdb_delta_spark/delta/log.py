@@ -629,6 +629,21 @@ class DeltaLog:
             return None
         return None
 
+    def commit_time(self, version: int, actions: list[dict],
+                    commits: dict[int, str]) -> int:
+        """:meth:`commit_timestamp` from the commit's already-read
+        ``actions`` (the ICT of its first commitInfo, read_ict's rule)
+        and one listing's ``commits`` (the mtime fallback), for walks
+        that must not re-open or re-list per version."""
+        info = next((a["commitInfo"] for a in actions
+                     if a.get("commitInfo") is not None), None)
+        ict = (info or {}).get("inCommitTimestamp")
+        if ict is not None:
+            return int(ict)
+        if commits.get(version):
+            return int(os.path.getmtime(commits[version]) * 1000)
+        return self.commit_timestamp(version, commits=commits)
+
     def commit_timestamp(
         self, version: int, commits: dict[int, str] | None = None
     ) -> int:

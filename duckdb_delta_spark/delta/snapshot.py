@@ -57,7 +57,12 @@ from duckdb_delta_spark.delta.errors import (
     SchemaError,
     UnsupportedFeatureError,
 )
-from duckdb_delta_spark.delta.log import EMPTY_REPLAY, DeltaLog, Replay
+from duckdb_delta_spark.delta.log import (
+    EMPTY_REPLAY,
+    DeltaLog,
+    LogSegment,
+    Replay,
+)
 from duckdb_delta_spark.delta.logging import emit
 
 #: reader features this engine implements; anything else in protocol.readerFeatures fails
@@ -250,6 +255,7 @@ class Snapshot:
         cls, log: DeltaLog, version: int | None = None,
         base: "Snapshot | None" = None,
         actions: "list[dict] | None" = None,
+        segment: "LogSegment | None" = None,
     ) -> "Snapshot":
         """Replay the log up to ``version`` (default HEAD), from one
         listing, the process-wide snapshot cache (module docstring) or
@@ -266,6 +272,9 @@ class Snapshot:
         this build to apply. With ``base`` at ``version - 1`` the build
         then neither lists the log nor reads the commit; otherwise they
         are ignored.
+
+        ``segment``: a listing the caller already holds, used instead of
+        listing again.
         """
         same_table = base is not None and base.log.table_path == log.table_path
         if (same_table and actions is not None and version is not None
@@ -275,7 +284,8 @@ class Snapshot:
                 snap._apply(action)
             snap._validate()
             return snap._built(version, incremental=version > 0)
-        segment = log.list_log_files()
+        if segment is None:
+            segment = log.list_log_files()
         target = log.resolve_version(version, segment)
         replay = segment.replay(target)
         shared = log.log_tail is None  # log_tail logs bypass the cache

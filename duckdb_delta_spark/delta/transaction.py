@@ -10,6 +10,9 @@ snapshot, plans its actions and calls :meth:`Transaction.commit`, which
 owns everything a commit does, once:
 
 * row-id assignment and the in-commit timestamp (ICT);
+* protocol widened for what the ``metaData`` requires
+  (delta/protocol.py), so no metadata or protocol commit can forget a
+  table feature;
 * put-if-absent through :meth:`DeltaLog.commit`, so the ``LogStore`` and
   catalog ``commit_fn`` seams apply to every write;
 * retries within the budget the caller passes, each gated by ONE conflict
@@ -51,7 +54,7 @@ in protocol and metadata, so an operation that aborts on those changes
 cannot see the gate flip underneath it. The first deletion vector a DML
 writes on a legacy ``(1, 2)`` table upgrades the protocol, so it aborts
 every in-flight concurrent DML once; enabling ``deletionVectors`` when the
-table is set up avoids that.
+table is set up (``create`` or ``set_properties``) avoids that.
 """
 
 from __future__ import annotations
@@ -62,6 +65,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
+from duckdb_delta_spark.delta import protocol
 from duckdb_delta_spark.delta.errors import CommitConflictError
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.logging import emit
@@ -131,8 +135,9 @@ class Transaction:
             version = snap.version + 1
             assign_row_ids(version, actions, snap, self.preserve_row_ids)
             self._stamp_ict(actions, snap, caller_ict)
+            committed = _with_required_features(actions, snap)
             try:
-                path = self.log.commit(version, actions)
+                path = self.log.commit(version, committed)
                 break
             except CommitConflictError:
                 attempt += 1
@@ -153,7 +158,7 @@ class Transaction:
                     self.snapshot = snap
                     return None
         self.snapshot = Snapshot.build(self.log, version, base=snap,
-                                       actions=actions)
+                                       actions=committed)
         record_commit(self.snapshot, snap, path)
         self._post_commit(version)
         return version
@@ -300,6 +305,29 @@ class Transaction:
         from duckdb_delta_spark.delta.writer import DeltaWriter
 
         return DeltaWriter._at(self.log, self.snapshot, self.spark)
+
+
+def _with_required_features(actions: list[dict],
+                            snap: Snapshot) -> list[dict]:
+    """``actions`` with the protocol widened for what the table's
+    metadata requires (delta/protocol.py): the commit's own ``metaData``,
+    else — for a protocol-only commit — the attempt snapshot's. Widened
+    is the commit's own protocol action when it has one, else the
+    snapshot's protocol in a new action ahead of the ``metaData``.
+    Derived afresh on every attempt."""
+    i = next((i for i, a in enumerate(actions) if "metaData" in a), None)
+    j = next((j for j, a in enumerate(actions) if "protocol" in a), None)
+    if i is None and j is None:
+        return actions
+    grown = protocol.with_features(
+        snap.protocol if j is None else actions[j]["protocol"],
+        protocol.required(snap.metadata if i is None
+                          else actions[i]["metaData"]))
+    if grown is None:
+        return actions
+    if j is None:
+        return actions[:i] + [{"protocol": grown}] + actions[i:]
+    return actions[:j] + [{"protocol": grown}] + actions[j + 1:]
 
 
 def remove_staged(table_path: str, rels: Iterable[str]) -> None:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from duckdb_delta_spark.localrel import local_df as _local_df
+from duckdb_delta_spark.delta import protocol
 from duckdb_delta_spark.delta.errors import (
     CommitConflictError,
     ConstraintViolationError,
@@ -47,7 +48,7 @@ from duckdb_delta_spark.delta.errors import (
 )
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.mapping import contains_type
-from duckdb_delta_spark.delta.snapshot import SUPPORTED_WRITER_FEATURES, Snapshot
+from duckdb_delta_spark.delta.snapshot import Snapshot
 from duckdb_delta_spark.delta.transaction import (
     ReadSet,
     Transaction,
@@ -114,51 +115,6 @@ def _plan_all_deterministic(df: DataFrame) -> bool | None:
                    for i in range(exprs.size()))
     except Exception:
         return None
-
-# Delta spec (table features appendix): legacy protocol versions imply
-# feature sets; a (3,7) upgrade must list EVERY implied feature explicitly
-# or spec-compliant readers/writers (delta-spark, kernel) reject the table.
-_READER_LEGACY_FEATURES = {1: frozenset(), 2: frozenset({"columnMapping"})}
-_WRITER_LEGACY_FEATURES = {
-    1: frozenset(),
-    2: frozenset({"appendOnly", "invariants"}),
-    3: frozenset({"appendOnly", "invariants", "checkConstraints"}),
-    4: frozenset({"appendOnly", "invariants", "checkConstraints",
-                  "changeDataFeed", "generatedColumns"}),
-    5: frozenset({"appendOnly", "invariants", "checkConstraints",
-                  "changeDataFeed", "generatedColumns", "columnMapping"}),
-    6: frozenset({"appendOnly", "invariants", "checkConstraints",
-                  "changeDataFeed", "generatedColumns", "columnMapping",
-                  "identityColumns"}),
-}
-
-
-def _legacy_features(proto: dict) -> tuple[set[str], set[str]]:
-    """(readerFeatures, writerFeatures) a protocol carries — explicit
-    lists for (3,7) tables, the spec's implied sets for legacy versions.
-    Shared by every (3,7) upgrade path so no upgrade drops columnMapping /
-    changeDataFeed / etc. Refuses loudly on versions the spec doesn't
-    define rather than silently dropping features."""
-    r_ver = int(proto.get("minReaderVersion", 1))
-    w_ver = int(proto.get("minWriterVersion", 2))
-    if r_ver >= 3:
-        r = set(proto.get("readerFeatures") or [])
-    elif r_ver in _READER_LEGACY_FEATURES:
-        r = set(_READER_LEGACY_FEATURES[r_ver])
-    else:
-        raise UnsupportedFeatureError(
-            f"unknown legacy minReaderVersion {r_ver}"
-        )
-    if w_ver >= 7:
-        w = set(proto.get("writerFeatures") or [])
-    elif w_ver in _WRITER_LEGACY_FEATURES:
-        w = set(_WRITER_LEGACY_FEATURES[w_ver])
-    else:
-        raise UnsupportedFeatureError(
-            f"unknown legacy minWriterVersion {w_ver}"
-        )
-    return r, w
-
 
 def _ensure_mapping_metadata(
     schema: T.StructType, start_id: int = 0,
@@ -370,87 +326,22 @@ class DeltaWriter:
             "configuration": configuration or {},
             "createdTime": int(time.time() * 1000),
         }
-        proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-        if _generated_exprs(schema):
-            # generated columns are a writer concern (Delta spec: legacy
-            # minWriterVersion 4); readers are unaffected
-            proto = {"minReaderVersion": 1, "minWriterVersion": 4}
-        if (configuration or {}).get("delta.columnMapping.mode", "none") != "none":
-            proto = {"minReaderVersion": 2, "minWriterVersion": 5}
-        if _identity_columns(schema):
-            # identity columns are a writer-only concern (legacy v6 /
-            # the identityColumns v7 feature); readers are unaffected
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(w_implied | {"identityColumns"}),
-            }
-            if proto["minReaderVersion"] >= 3:
-                proto["readerFeatures"] = sorted(r_implied)
-        if contains_type(schema, T.VariantType):
-            # variant is a v3/v7 table feature (Delta spec "Variant Data
-            # Type"): a table with a variant column must LIST variantType
-            # in both feature sets or spec-compliant engines reject it
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(r_implied | {"variantType"}),
-                "writerFeatures": sorted(w_implied | {"variantType"}),
-            }
-        if _default_exprs(schema):
-            # column defaults are a writer-only table feature (Delta spec
-            # "Default Columns": allowColumnDefaults); readers unaffected
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(w_implied | {"allowColumnDefaults"}),
-            }
-            if proto["minReaderVersion"] >= 3:
-                proto["readerFeatures"] = sorted(r_implied)
+        _identity_columns(schema)  # refuses a malformed identity spec
+        # clustering, row tracking and in-commit timestamps also need
+        # actions of their own; every other feature follows from ``meta``
+        own = set()
         if cluster_by:
-            # clustered tables are writer-only: the clustering feature
-            # DEPENDS on domainMetadata (the column list lives there)
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    w_implied | {"clustering", "domainMetadata"}
-                ),
-            }
-            if proto["minReaderVersion"] >= 3:
-                proto["readerFeatures"] = sorted(r_implied)
+            own |= {"clustering", "domainMetadata"}
         if (configuration or {}).get(
-            "delta.enableRowTracking", ""
-        ).lower() == "true":
-            # rowTracking is a writer feature that DEPENDS on
-            # domainMetadata (the rowIdHighWaterMark lives there)
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    w_implied | {"rowTracking", "domainMetadata"}
-                ),
-            }
-            if proto["minReaderVersion"] >= 3:
-                proto["readerFeatures"] = sorted(r_implied)
-        if (configuration or {}).get(
-            "delta.enableInCommitTimestamps", ""
-        ).lower() == "true":
-            # inCommitTimestamp is a v7 table feature: list it alongside
-            # the features the legacy writer version implied
-            r_implied, w_implied = _legacy_features(proto)
-            proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(w_implied | {"inCommitTimestamp"}),
-            }
-            if proto["minReaderVersion"] >= 3:
-                proto["readerFeatures"] = sorted(r_implied)
+                "delta.enableRowTracking", "").lower() == "true":
+            own |= {"rowTracking", "domainMetadata"}
+        ict = (configuration or {}).get(
+            "delta.enableInCommitTimestamps", "").lower() == "true"
+        if ict:
+            own.add("inCommitTimestamp")
+        base = {"minReaderVersion": 1, "minWriterVersion": 2}
+        proto = protocol.with_features(
+            base, own | protocol.required(meta)) or base
         actions = [
             {"commitInfo": _commit_info("CREATE TABLE")},
             {"protocol": proto},
@@ -471,7 +362,7 @@ class DeltaWriter:
                 ),
                 "removed": False,
             }})
-        if proto.get("writerFeatures") and "inCommitTimestamp" in proto["writerFeatures"]:
+        if ict:
             # the enablement commit itself carries the first ICT
             actions[0]["commitInfo"]["inCommitTimestamp"] = int(
                 time.time() * 1000
@@ -1053,13 +944,7 @@ class DeltaWriter:
         """Writer-protocol gate (Delta spec: a writer must not commit to a
         table whose writer features/config it cannot honor)."""
         snap = self._snapshot
-        proto = snap.protocol
-        if int(proto.get("minWriterVersion", 2)) >= 7:
-            unsupported = set(proto.get("writerFeatures") or []) - SUPPORTED_WRITER_FEATURES
-            if unsupported:
-                raise UnsupportedFeatureError(
-                    f"writer features not supported: {sorted(unsupported)}"
-                )
+        protocol.check_writable(snap.protocol)
         conf = snap.configuration
         # delta.enableChangeDataFeed is honored: DELETE/UPDATE/MERGE write
         # _change_data files + cdc actions (_write_cdc); appends need none
@@ -1357,7 +1242,9 @@ class DeltaWriter:
             phys_fields.append(T.StructField(phys, p_dt, f.nullable, meta))
             col = F.col(f.name)
             if p_dt != f.dataType:
-                col = col.cast(p_dt)
+                # the conformed frame is all-nullable; NOT NULL is
+                # enforced before this rename, which must not re-assert it
+                col = col.cast(_nullable_type(p_dt))
             sel.append(col.alias(phys, metadata=meta))
         for c in extra_cols:
             sel.append(F.col(c))
@@ -1847,28 +1734,6 @@ class DeltaWriter:
                 out.append((os.path.relpath(full, self.table_path), {}))
         return out
 
-    def _dv_protocol_upgrade(self, snap: Snapshot) -> dict | None:
-        """First DV write upgrades to (3,7) + deletionVectors feature.
-        Carries over EVERY feature the legacy versions implied (a
-        column-mapped (2,5) table keeps columnMapping in readerFeatures,
-        changeDataFeed/checkConstraints stay in writerFeatures) — dropping
-        them would make spec-compliant external readers reject the table
-        even though this engine derives mapping from metadata."""
-        proto = snap.protocol
-        if int(proto.get("minReaderVersion", 1)) >= 3 and "deletionVectors" in (
-            proto.get("readerFeatures") or []
-        ):
-            return None
-        r, w = _legacy_features(proto)
-        return {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(r | {"deletionVectors"}),
-                "writerFeatures": sorted(w | {"deletionVectors"}),
-            }
-        }
-
     def _dv_diff_preimages(self, snap: Snapshot, results: list) -> DataFrame:
         """cdc 'delete' pre-images for a DV-masking DML, derived from the
         vectors just built instead of re-evaluating the predicate:
@@ -1966,9 +1831,11 @@ class DeltaWriter:
         now_ms = int(time.time() * 1000)
         actions: list[dict] = []
         if any(not r["full"] for r in results):
-            proto_action = self._dv_protocol_upgrade(snap)
-            if proto_action:
-                actions.append(proto_action)
+            # the first DV lists deletionVectors, carrying every feature
+            # the legacy versions implied
+            grown = protocol.with_features(snap.protocol, {"deletionVectors"})
+            if grown:
+                actions.append({"protocol": grown})
         for r in results:
             f = by_uri[r["f"]]
             actions.append(f.remove_action(now_ms))
@@ -2761,12 +2628,13 @@ class DeltaWriter:
         Guards (each refused loudly rather than silently mishandled):
         CDF (pre/post images would straddle two schemas — delta-spark's
         batch CDF readers refuse such ranges; enable-after-replace
-        instead), CHECK constraints / generated columns / column defaults
-        / identity columns (their expressions reference the OLD schema),
-        and new-schema types whose table features the protocol lacks.
-        Column-mapped tables work: every new column gets a fresh id +
-        physical name strictly past the current ``maxColumnId`` (old ids
-        are never reused, per spec)."""
+        instead) and CHECK constraints / generated columns / column
+        defaults / identity columns (their expressions reference the OLD
+        schema). The commit lists the features the new schema needs
+        (VARIANT, TIMESTAMP_NTZ) like any metaData commit. Column-mapped
+        tables work: every new column gets a fresh id + physical name
+        strictly past the current ``maxColumnId`` (old ids are never
+        reused, per spec)."""
         cfg = dict(snap.configuration)
         if cdf:
             raise UnsupportedFeatureError(
@@ -2783,21 +2651,6 @@ class DeltaWriter:
                 "overwriteSchema with generated/default/identity columns "
                 "present — their expressions bind to the old schema")
         new_schema = df.schema
-        proto = snap.protocol
-        declared = set(proto.get("readerFeatures") or []) | set(
-            proto.get("writerFeatures") or [])
-        if contains_type(new_schema, T.VariantType) \
-                and not ({"variantType", "variantType-preview"} & declared):
-            raise UnsupportedFeatureError(
-                "overwriteSchema introduces VARIANT but the protocol "
-                "lacks variantType")
-        if any(isinstance(f.dataType, T.TimestampNTZType)
-               for f in new_schema.fields) \
-                and proto.get("minReaderVersion", 1) >= 3 \
-                and "timestampNtz" not in declared:
-            raise UnsupportedFeatureError(
-                "overwriteSchema introduces TIMESTAMP_NTZ but the "
-                "protocol lacks timestampNtz")
         parts = (list(partition_by) if partition_by is not None
                  else list(snap.partition_columns))
         for p in parts:
@@ -2973,30 +2826,10 @@ class DeltaWriter:
         implied, exactly like the automatic upgrade paths. Returns the
         committed version, or None when nothing changes."""
         snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
-        proto = snap.protocol
-        r_old = int(proto.get("minReaderVersion", 1))
-        w_old = int(proto.get("minWriterVersion", 2))
-        r_new, w_new = max(r_old, int(min_reader)), max(w_old, int(min_writer))
-        # Delta protocol spec: reader version 3 (readerFeatures) REQUIRES
-        # writer version 7 (writerFeatures) — a table cannot list reader
-        # features while its writer side stays legacy. delta-spark's
-        # upgradeTableProtocol validates the same way, so mirror it by
-        # forcing the writer side up rather than committing a protocol
-        # spec-compliant readers would reject.
-        if r_new >= 3:
-            w_new = max(w_new, 7)
-        if (r_new, w_new) == (r_old, w_old):
+        new_proto = protocol.with_versions(snap.protocol, min_reader,
+                                           min_writer)
+        if new_proto is None:
             return None
-        new_proto: dict = {"minReaderVersion": r_new,
-                           "minWriterVersion": w_new}
-        if r_new >= 3 or w_new >= 7:
-            r_implied, w_implied = _legacy_features(proto)
-            if w_new >= 7:
-                new_proto["minWriterVersion"] = 7
-                new_proto["writerFeatures"] = sorted(w_implied)
-            if r_new >= 3:
-                new_proto["minReaderVersion"] = 3
-                new_proto["readerFeatures"] = sorted(r_implied)
         actions = [
             {"commitInfo": _commit_info(
                 "UPGRADE PROTOCOL",
@@ -3007,36 +2840,20 @@ class DeltaWriter:
 
     def add_feature_support(self, feature: str) -> int | None:
         """delta-spark ``addFeatureSupport``: upgrade to the
-        table-features protocol (3,7) and list ``feature`` — in BOTH
-        lists for reader-writer features, writer-only otherwise. Unknown
-        features refuse (a feature this engine cannot honor must not be
-        advertised). Returns the committed version, or None when the
-        feature is already supported."""
-        from duckdb_delta_spark.delta.snapshot import (
-            SUPPORTED_READER_FEATURES,
-            SUPPORTED_WRITER_FEATURES,
-        )
-
-        if feature not in SUPPORTED_WRITER_FEATURES | \
-                SUPPORTED_READER_FEATURES:
+        table-features protocol and list ``feature`` — in BOTH lists
+        (reader version 3) for reader-writer features, in the writer list
+        only otherwise. Unknown features refuse (a feature this engine
+        cannot honor must not be advertised). Returns the committed
+        version, or None when the feature is already supported."""
+        if feature not in protocol.FEATURES:
             raise UnsupportedFeatureError(
                 f"cannot add support for unknown feature {feature!r}"
             )
         snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
-        proto = snap.protocol
-        r, w = _legacy_features(proto)
-        is_reader = feature in SUPPORTED_READER_FEATURES
-        if feature in w and (not is_reader or feature in r):
+        new_proto = protocol.with_features(snap.protocol, {feature},
+                                           table_features=True)
+        if new_proto is None:
             return None
-        new_proto = {
-            "minReaderVersion": 3 if is_reader else max(
-                int(proto.get("minReaderVersion", 1)), 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(w | {feature}),
-        }
-        if new_proto["minReaderVersion"] >= 3:
-            new_proto["readerFeatures"] = sorted(
-                r | ({feature} if is_reader else set()))
         actions = [
             {"commitInfo": _commit_info(
                 "UPGRADE PROTOCOL", {"newFeature": feature})},
@@ -3080,7 +2897,6 @@ class DeltaWriter:
         # disabling or switching an enabled mode is refused.
         old_mode = snap.column_mapping_mode
         new_mode = config.get("delta.columnMapping.mode", "none")
-        proto_action: dict | None = None
         extra_actions: list[dict] = []
         if new_mode != old_mode:
             if old_mode != "none":
@@ -3106,69 +2922,15 @@ class DeltaWriter:
                 snap.schema, start_id=start, physical_names="logical")
             config["delta.columnMapping.maxColumnId"] = str(max_id)
             meta["schemaString"] = mapped.json()
-            proto = snap.protocol
-            r_ver = int(proto.get("minReaderVersion", 1))
-            w_ver = int(proto.get("minWriterVersion", 2))
-            if r_ver >= 3 or w_ver >= 7:
-                r, w = _legacy_features(proto)
-                proto_action = {"protocol": {
-                    "minReaderVersion": 3, "minWriterVersion": 7,
-                    "readerFeatures": sorted(r | {"columnMapping"}),
-                    "writerFeatures": sorted(w | {"columnMapping"}),
-                }}
-            elif r_ver < 2 or w_ver < 5:
-                proto_action = {"protocol": {
-                    "minReaderVersion": 2,
-                    "minWriterVersion": max(w_ver, 5),
-                }}
 
         def _flag(c: dict, key: str) -> bool:
             return str(c.get(key, "false")).lower() == "true"
 
-        base_proto = (proto_action or {}).get("protocol") or snap.protocol
-
-        # enabling CDF is a WRITER-protocol event (Delta spec: legacy
-        # minWriterVersion 4 / the changeDataFeed feature): without the
-        # upgrade, a spec v2-writer would keep committing row-changing
-        # DML with no cdc files and the feed would silently lie
-        if _flag(config, "delta.enableChangeDataFeed") and not _flag(
-                snap.configuration, "delta.enableChangeDataFeed"):
-            r_ver = int(base_proto.get("minReaderVersion", 1))
-            w_ver = int(base_proto.get("minWriterVersion", 2))
-            if w_ver >= 7:
-                r, w = _legacy_features(base_proto)
-                if "changeDataFeed" not in w:
-                    p = dict(base_proto)
-                    p["writerFeatures"] = sorted(w | {"changeDataFeed"})
-                    proto_action = {"protocol": p}
-            elif w_ver < 4:
-                proto_action = {"protocol": {
-                    "minReaderVersion": r_ver, "minWriterVersion": 4}}
-            base_proto = (proto_action or {}).get("protocol") or base_proto
-
-        # enabling ROW TRACKING on an existing table is an upgrade +
-        # BACKFILL (delta-spark semantics): (3,7)-feature protocol, every
-        # already-live file re-committed with a freshly allocated
-        # baseRowId/defaultRowCommitVersion (dataChange=false — the bytes
-        # are untouched), and the rowIdHighWaterMark domain metadata in
-        # the same commit. O(#files) driver metadata, no data rewrite.
-        # delta.enableDeletionVectors=true requires the deletionVectors
-        # feature to be SUPPORTED from the moment the property is set
-        # (spec) — not only once our own first DV lands (an external
-        # writer could write the first DV before us)
-        if _flag(config, "delta.enableDeletionVectors") and not _flag(
-                snap.configuration, "delta.enableDeletionVectors"):
-            r_implied, w_implied = _legacy_features(base_proto)
-            if "deletionVectors" not in r_implied:
-                proto_action = {"protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(
-                        r_implied | {"deletionVectors"}),
-                    "writerFeatures": sorted(
-                        w_implied | {"deletionVectors"}),
-                }}
-                base_proto = proto_action["protocol"]
+        # the features the new metaData needs (column mapping, CDF, DVs,
+        # the v2 checkpoint policy, ...) follow from it; in-commit
+        # timestamps and row tracking are listed here, as they also need
+        # actions of their own
+        own: set[str] = set()
 
         # enabling IN-COMMIT TIMESTAMPS mid-life: writer-feature upgrade
         # plus the spec's provenance properties (enablementVersion /
@@ -3180,18 +2942,7 @@ class DeltaWriter:
         ict_stamp: int | None = None
         if _flag(config, "delta.enableInCommitTimestamps") and not _flag(
                 snap.configuration, "delta.enableInCommitTimestamps"):
-            r_implied, w_implied = _legacy_features(base_proto)
-            p = {
-                "minReaderVersion": int(
-                    base_proto.get("minReaderVersion", 1)),
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    w_implied | {"inCommitTimestamp"}),
-            }
-            if p["minReaderVersion"] >= 3:
-                p["readerFeatures"] = sorted(r_implied)
-            proto_action = {"protocol": p}
-            base_proto = p
+            own.add("inCommitTimestamp")
             prev_ict = self.log.read_ict(snap.version) or 0
             ict_stamp = max(int(time.time() * 1000), prev_ict + 1)
             config["delta.inCommitTimestampEnablementVersion"] = str(
@@ -3199,38 +2950,15 @@ class DeltaWriter:
             config["delta.inCommitTimestampEnablementTimestamp"] = str(
                 ict_stamp)
 
-        # delta.checkpointPolicy classic→v2 requires the v2Checkpoint
-        # READER feature before any v2 checkpoint exists — upgrade in the
-        # same commit, exactly what the lazy checkpoint-time upgrade does
-        if config.get("delta.checkpointPolicy", "classic") == "v2" and \
-                snap.configuration.get(
-                    "delta.checkpointPolicy", "classic") != "v2":
-            r_implied, w_implied = _legacy_features(base_proto)
-            if any(isinstance(f.dataType, T.TimestampNTZType)
-                   for f in snap.schema.fields):
-                r_implied = r_implied | {"timestampNtz"}
-                w_implied = w_implied | {"timestampNtz"}
-            proto_action = {"protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(r_implied | {"v2Checkpoint"}),
-                "writerFeatures": sorted(w_implied | {"v2Checkpoint"}),
-            }}
-            base_proto = proto_action["protocol"]
-
+        # enabling ROW TRACKING on an existing table is an upgrade +
+        # BACKFILL (delta-spark semantics): the rowTracking feature, every
+        # already-live file re-committed with a freshly allocated
+        # baseRowId/defaultRowCommitVersion (dataChange=false — the bytes
+        # are untouched), and the rowIdHighWaterMark domain metadata in
+        # the same commit. O(#files) driver metadata, no data rewrite.
         if _flag(config, "delta.enableRowTracking") and not _flag(
                 snap.configuration, "delta.enableRowTracking"):
-            r_implied, w_implied = _legacy_features(base_proto)
-            p = {
-                "minReaderVersion": int(
-                    base_proto.get("minReaderVersion", 1)),
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    w_implied | {"rowTracking", "domainMetadata"}),
-            }
-            if p["minReaderVersion"] >= 3:
-                p["readerFeatures"] = sorted(r_implied)
-            proto_action = {"protocol": p}
+            own |= {"rowTracking", "domainMetadata"}
             try:
                 rt_conf = json.loads(
                     snap.domain_metadata.get(self.ROW_TRACKING_DOMAIN)
@@ -3272,6 +3000,8 @@ class DeltaWriter:
                 "removed": False,
             }})
 
+        grown = protocol.with_features(
+            snap.protocol, own | protocol.required(meta))
         actions: list[dict] = [
             {
                 "commitInfo": _commit_info(
@@ -3280,7 +3010,7 @@ class DeltaWriter:
                      "unset": json.dumps(unset or [])},
                 )
             },
-            *([proto_action] if proto_action else []),
+            *([{"protocol": grown}] if grown else []),
             {"metaData": meta},
             *extra_actions,
         ]
@@ -3452,14 +3182,9 @@ class DeltaWriter:
                                         {"column": name,
                                          "to": new_type.jsonValue()})},
         ]
-        proto = snap.protocol
-        if "typeWidening" not in (proto.get("readerFeatures") or []):
-            r, w = _legacy_features(proto)
-            actions.append({"protocol": {
-                "minReaderVersion": 3, "minWriterVersion": 7,
-                "readerFeatures": sorted(r | {"typeWidening"}),
-                "writerFeatures": sorted(w | {"typeWidening"}),
-            }})
+        grown = protocol.with_features(snap.protocol, {"typeWidening"})
+        if grown:
+            actions.append({"protocol": grown})
         actions.append({"metaData": meta})
         return self._commit(snap, actions)
 
@@ -3474,20 +3199,14 @@ class DeltaWriter:
         if not contains_type(snap.schema, T.VariantType):
             raise SchemaError(
                 "enable_variant_shredding: table has no variant column")
-        proto = snap.protocol
-        if "variantShredding" in (proto.get("writerFeatures") or []):
+        grown = protocol.with_features(
+            snap.protocol, {"variantType", "variantShredding"})
+        if grown is None:
             return snap.version
-        r, w = _legacy_features(proto)
         actions = [
             {"commitInfo": _commit_info(
                 "SET TBLPROPERTIES", {"feature": "variantShredding"})},
-            {"protocol": {
-                "minReaderVersion": 3, "minWriterVersion": 7,
-                "readerFeatures": sorted(r | {"variantType",
-                                              "variantShredding"}),
-                "writerFeatures": sorted(w | {"variantType",
-                                              "variantShredding"}),
-            }},
+            {"protocol": grown},
         ]
         return self._commit(snap, actions)
 
@@ -3566,9 +3285,7 @@ class DeltaWriter:
         warns)."""
         snap = self._snapshot = Snapshot.build(self.log, base=self._snapshot)
         proto = snap.protocol
-        r = set(proto.get("readerFeatures") or [])
-        w = set(proto.get("writerFeatures") or [])
-        r_all, w_all = _legacy_features(proto)  # explicit + legacy-implied
+        r_all, w_all = protocol.implied_features(proto)
         if name not in (r_all | w_all):
             raise UnsupportedFeatureError(
                 f"DROP FEATURE {name!r}: table does not declare it")
@@ -3603,44 +3320,7 @@ class DeltaWriter:
                 "DROP FEATURE variantShredding: historical shredded files "
                 "may remain in the current snapshot; dropping the reader "
                 "feature would strand them")
-        if name in (r | w) or proto.get("writerFeatures") is not None:
-            # explicit feature lists: drop from them
-            new_proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": proto["minWriterVersion"],
-            }
-            if proto.get("readerFeatures") is not None:
-                new_proto["readerFeatures"] = sorted(r - {name})
-            if proto.get("writerFeatures") is not None:
-                keep = w - {name}
-                if truncate_history:
-                    keep = keep | {"checkpointProtection"}
-                new_proto["writerFeatures"] = sorted(keep)
-        elif truncate_history:
-            # legacy protocol: declaring checkpointProtection needs the
-            # features form — upgrade to (minReader, 7) with the
-            # legacy-implied writer features made explicit (delta-spark
-            # does the same protocol normalization on TRUNCATE HISTORY)
-            new_proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    (w_all - {name}) | {"checkpointProtection"}
-                ),
-            }
-        else:
-            # legacy-implied feature: downgrade the legacy writer version
-            # (delta-spark's legacy downgrade path). checkConstraints is
-            # the one droppable feature a legacy version implies — implied
-            # at minWriterVersion >= 3, so the table steps down to 2.
-            if name != "checkConstraints" or proto["minWriterVersion"] != 3:
-                raise UnsupportedFeatureError(
-                    f"DROP FEATURE {name!r}: implied by legacy protocol "
-                    f"{proto} — no supported downgrade")
-            new_proto = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 2,
-            }
+        new_proto = protocol.without(proto, name, truncate_history)
         version = snap.version + 1
         if truncate_history:
             # stamp the protection boundary in the SAME commit as the
@@ -3724,23 +3404,11 @@ class DeltaWriter:
         ]
         meta = dict(snap.metadata)
         meta["schemaString"] = T.StructType(fields).json()
-        actions: list[dict] = [
+        return self._commit(snap, [
             {"commitInfo": _commit_info(
                 "ALTER COLUMN", {"column": name, "default": sql_expr})},
-        ]
-        proto = snap.protocol
-        if "allowColumnDefaults" not in (proto.get("writerFeatures") or []):
-            r, w = _legacy_features(proto)
-            p = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(w | {"allowColumnDefaults"}),
-            }
-            if p["minReaderVersion"] >= 3:
-                p["readerFeatures"] = sorted(r)
-            actions.append({"protocol": p})
-        actions.append({"metaData": meta})
-        return self._commit(snap, actions)
+            {"metaData": meta},
+        ])
 
     def add_constraint(self, name: str, sql_expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT (delta-spark parity): stores the
@@ -3780,29 +3448,11 @@ class DeltaWriter:
         config[key] = sql_expr
         meta = dict(snap.metadata)
         meta["configuration"] = config
-        actions: list[dict] = [
+        return self._commit(snap, [
             {"commitInfo": _commit_info(
                 "ADD CONSTRAINT", {"name": name, "expr": sql_expr})},
-        ]
-        proto = snap.protocol
-        if proto["minWriterVersion"] >= 7:
-            if "checkConstraints" not in (proto.get("writerFeatures") or []):
-                r, w = _legacy_features(proto)
-                p = {
-                    "minReaderVersion": proto["minReaderVersion"],
-                    "minWriterVersion": 7,
-                    "writerFeatures": sorted(w | {"checkConstraints"}),
-                }
-                if p["minReaderVersion"] >= 3:
-                    p["readerFeatures"] = sorted(r)
-                actions.append({"protocol": p})
-        elif proto["minWriterVersion"] < 3:
-            actions.append({"protocol": {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 3,
-            }})
-        actions.append({"metaData": meta})
-        return self._commit(snap, actions)
+            {"metaData": meta},
+        ])
 
     def drop_constraint(self, name: str, if_exists: bool = False) -> int | None:
         """ALTER TABLE DROP CONSTRAINT: removes the config key; with
@@ -3854,20 +3504,10 @@ class DeltaWriter:
             {"commitInfo": _commit_info(
                 "CLUSTER BY", {"clusterBy": json.dumps(cluster_by)})},
         ]
-        proto = snap.protocol
-        have = set(proto.get("writerFeatures") or [])
-        if not {"clustering", "domainMetadata"} <= have:
-            r, w = _legacy_features(proto)
-            p = {
-                "minReaderVersion": proto["minReaderVersion"],
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(
-                    w | {"clustering", "domainMetadata"}
-                ),
-            }
-            if p["minReaderVersion"] >= 3:
-                p["readerFeatures"] = sorted(r)
-            actions.append({"protocol": p})
+        grown = protocol.with_features(
+            snap.protocol, {"clustering", "domainMetadata"})
+        if grown:
+            actions.append({"protocol": grown})
         actions.append({"domainMetadata": {
             "domain": "delta.clustering",
             "configuration": json.dumps(
@@ -4162,7 +3802,7 @@ class DeltaWriter:
         # columns named by table config — readers prefer the materialized
         # value over baseRowId + index
         try:
-            _, wfeats = _legacy_features(snap.protocol)
+            _, wfeats = protocol.implied_features(snap.protocol)
         except UnsupportedFeatureError:
             wfeats = set()
         row_tracked = "rowTracking" in wfeats
@@ -4903,12 +4543,7 @@ class DeltaWriter:
         v = snap.version
 
         rows: list[dict] = []
-        rows.append({"protocol": {
-            "minReaderVersion": int(snap.protocol.get("minReaderVersion", 1)),
-            "minWriterVersion": int(snap.protocol.get("minWriterVersion", 2)),
-            "readerFeatures": snap.protocol.get("readerFeatures"),
-            "writerFeatures": snap.protocol.get("writerFeatures"),
-        }})
+        rows.append({"protocol": protocol.normalized(snap.protocol)})
         md = snap.metadata
         rows.append({"metaData": {
             "id": md.get("id"),
@@ -5038,26 +4673,15 @@ class DeltaWriter:
         return v
 
     def _ensure_v2_checkpoint_feature(self, snap: Snapshot) -> Snapshot:
-        """Commit a (3,7) protocol upgrade adding v2Checkpoint (plus the
-        features the legacy versions implied) when the table doesn't have
-        it yet; returns the (possibly advanced) snapshot."""
-        proto = snap.protocol
-        if "v2Checkpoint" in (proto.get("readerFeatures") or []):
+        """Commit a protocol upgrade listing v2Checkpoint when the table
+        doesn't list it yet; returns the (possibly advanced) snapshot."""
+        grown = protocol.with_features(snap.protocol, {"v2Checkpoint"})
+        if grown is None:
             return snap
-        r_legacy, w_implied = _legacy_features(proto)
-        if any(isinstance(f.dataType, T.TimestampNTZType)
-               for f in snap.schema.fields):
-            r_legacy = r_legacy | {"timestampNtz"}
-            w_implied = w_implied | {"timestampNtz"}
         actions = [
             {"commitInfo": _commit_info(
                 "UPGRADE PROTOCOL", {"newFeature": "v2Checkpoint"})},
-            {"protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(r_legacy | {"v2Checkpoint"}),
-                "writerFeatures": sorted(w_implied | {"v2Checkpoint"}),
-            }},
+            {"protocol": grown},
         ]
         txn = Transaction(self.log, snap)
         txn.commit(actions)
@@ -5325,7 +4949,7 @@ def assign_row_ids(version: int, actions: list[dict], snap: Snapshot,
     reallocates past the race winner's ranges."""
     domain = DeltaWriter.ROW_TRACKING_DOMAIN
     try:
-        _, wfeats = _legacy_features(snap.protocol)
+        _, wfeats = protocol.implied_features(snap.protocol)
     except UnsupportedFeatureError:
         return
     if "rowTracking" not in wfeats:

@@ -328,7 +328,8 @@ class DeltaStreamReader(DataSourceStreamReader):
                 # version_at_timestamp = latest commit <= ts; the stream
                 # starts at the next commit unless that commit is exactly
                 # at the timestamp
-                start = at if self._commit_ts(at) >= ms else at + 1
+                start = at if self._log.commit_timestamp(at) >= ms \
+                    else at + 1
             except Exception:  # noqa: BLE001 - ts before table: start at 0
                 start = 0
         if start is None:
@@ -452,9 +453,6 @@ class DeltaStreamReader(DataSourceStreamReader):
             head, _, rest = p.column.partition(".")
             col = self._phys.get(head, head) + ("." + rest if rest else "")
         return Pred(col, p.op, p.value)
-
-    def _commit_ts(self, v: int) -> int:
-        return self._log.commit_timestamp(v)
 
     # ---- offsets ----
 
@@ -637,9 +635,11 @@ class DeltaStreamReader(DataSourceStreamReader):
         adds, removes, cdcs = self._classify_full(version)
         return adds, bool(removes)
 
-    def _classify_full(self, version: int):
+    def _classify_full(self, version: int, actions=None):
         adds, removes, cdcs = [], [], []
-        for action in self._log.read_commit(version):
+        if actions is None:
+            actions = self._log.read_commit(version)
+        for action in actions:
             if action.get("cdc"):
                 cdcs.append(action["cdc"])
             elif action.get("add") and action["add"].get("dataChange", True):
@@ -830,8 +830,12 @@ class DeltaStreamReader(DataSourceStreamReader):
         delta/changes._rows_at_big executor route)."""
         from duckdb_delta_spark.delta.snapshot import Snapshot, _dv_unique_id
 
+        # one listing and one read per commit for the whole plan, as in
+        # the batch walk (changes._walk_changes): the parsed actions feed
+        # the snapshot replay, the classification and the commit clock
+        segment = self._log.list_log_files()
         prev = (
-            Snapshot.build(self._log, start_v)
+            Snapshot.build(self._log, start_v, segment=segment)
             if start_v >= 0
             else Snapshot(self._log, -1)
         )
@@ -859,11 +863,12 @@ class DeltaStreamReader(DataSourceStreamReader):
             )
 
         for v in range(start_v + 1, end_v + 1):
-            snap = Snapshot.build(self._log, v, base=prev)
+            actions = self._log.read_commit(v)
+            snap = Snapshot.build(self._log, v, base=prev, actions=actions)
             self._check_cdf_schema(snap, v)
-            ts = self._commit_ts(v)
-            adds, removes, cdcs = self._classify_full(v)
-            common = dict(commit_version=v, commit_ts=ts)
+            adds, removes, cdcs = self._classify_full(v, actions)
+            common = dict(commit_version=v, commit_ts=self._log.commit_time(
+                v, actions, segment.commits))
             if cdcs:
                 for c in cdcs:
                     out.append(ref(c["path"], c.get("partitionValues"),
@@ -1404,12 +1409,10 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         """Writer-protocol gate at stream start (mirror of
         DeltaWriter._assert_writable): refuse tables this sink's blind
         appends would corrupt or whose features it cannot honor."""
+        from duckdb_delta_spark.delta import protocol
         from duckdb_delta_spark.delta.errors import UnsupportedFeatureError
         from duckdb_delta_spark.delta.log import DeltaLog
-        from duckdb_delta_spark.delta.snapshot import (
-            SUPPORTED_WRITER_FEATURES,
-            Snapshot,
-        )
+        from duckdb_delta_spark.delta.snapshot import Snapshot
 
         snap = Snapshot.build(DeltaLog(self.table_path))
         self.partition_columns = list(snap.partition_columns)
@@ -1482,15 +1485,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                 fields.append(T.StructField(
                     phys, physical_type(sf.dataType), True, meta))
             self._phys_schema = T.StructType(fields)
-        proto = snap.protocol
-        if int(proto.get("minWriterVersion", 2)) >= 7:
-            unsupported = (
-                set(proto.get("writerFeatures") or []) - SUPPORTED_WRITER_FEATURES
-            )
-            if unsupported:
-                raise UnsupportedFeatureError(
-                    f"writer features not supported: {sorted(unsupported)}"
-                )
+        protocol.check_writable(snap.protocol)
         conf = snap.configuration
         # CDF-enabled tables are WRITABLE by this sink: blind appends
         # never need _change_data files (the spec derives their rows as
@@ -1670,6 +1665,8 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from duckdb_delta_spark.delta.writer import _hive_escape
+
         _t0 = _time.time()
         _rows = 0
         arrow_schema = to_arrow_schema(self.schema)
@@ -1706,14 +1703,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         writers: dict[tuple, tuple] = {}  # pv_tuple -> (writer, rel, full)
 
         def _open(pv: tuple):
-            dirs = "/".join(
-                f"{c}=" + (
-                    "__HIVE_DEFAULT_PARTITION__"
-                    if v is None
-                    else urllib.parse.quote(v, safe="")
-                )
-                for c, v in pv
-            )
+            dirs = "/".join(f"{c}={_hive_escape(v)}" for c, v in pv)
             rel = (f"{dirs}/" if dirs else "") + \
                 f"part-stream-{uuid.uuid4().hex}.parquet"
             full = os.path.join(self.table_path, rel)
@@ -1849,6 +1839,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
         from duckdb_delta_spark.delta.writer import (
             _commit_info,
             _footer_stats_many,
+            _log_path,
             _txn_action,
         )
 
@@ -1913,7 +1904,7 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                         stats, separators=(",", ":"))
         for m in files:
             actions.append({"add": {
-                "path": m.rel_path,
+                "path": _log_path(m.rel_path),
                 "partitionValues": dict(m.partition_values),
                 "size": m.size,
                 "modificationTime": now_ms,

@@ -5629,7 +5629,7 @@ def test_upgrade_protocol_and_add_feature_support(spark, tdir):
     w.add_feature_support("domainMetadata")
     proto = DeltaTable(tdir).snapshot.protocol
     assert "domainMetadata" in proto["writerFeatures"]
-    assert "domainMetadata" not in (proto.get("readerFeatures") or []) or True
+    assert "domainMetadata" not in (proto.get("readerFeatures") or [])
     # reader-writer feature: both lists
     w.add_feature_support("deletionVectors")
     proto = DeltaTable(tdir).snapshot.protocol

@@ -2862,3 +2862,76 @@ def test_foreach_replace_where_exactly_once(spark, tdir):
     fn2(spark.createDataFrame([(7, 70)], schema), 0)
     assert sorted(map(tuple, DeltaTable(tdir).to_df(spark)
                       .select("day", "v").collect())) == [(7, 70)]
+
+
+def test_partitioned_sink_escapes_partition_values(spark, tmp_path):
+    """Partition values that need escaping in a path (a space, a percent
+    sign) and NULL: the sink writes them under hive-escaped directories
+    and logs the add paths url-encoded, so every row reads back."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from duckdb_delta_spark import DeltaTable, DeltaWriter
+    from duckdb_delta_spark.streaming.delta_source import DeltaPySource
+
+    spark.dataSource.register(DeltaPySource)
+    src_dir = str(tmp_path / "src")
+    dst_dir = str(tmp_path / "dst")
+    schema = T.StructType([T.StructField("i", T.LongType()),
+                           T.StructField("g", T.StringType())])
+    rows = [(0, "a b"), (1, "50%"), (2, None), (3, "a b")]
+    w = DeltaWriter.create(spark, src_dir, schema)
+    w.append(spark.createDataFrame(rows, schema))
+    DeltaWriter.create(spark, dst_dir, schema, partition_by=["g"])
+
+    q = (
+        spark.readStream.format("delta_py")
+        .option("path", src_dir)
+        .option("startingVersion", "0")
+        .load()
+        .writeStream.format("delta_py")
+        .option("path", dst_dir)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    got = DeltaTable(dst_dir).to_df(spark).select("i", "g").collect()
+    assert sorted(tuple(r) for r in got) == rows
+    dirs = {e for e in os.listdir(dst_dir) if e.startswith("g=")}
+    assert dirs == {"g=a%20b", "g=50%25", "g=__HIVE_DEFAULT_PARTITION__"}
+
+
+def test_cdf_stream_plan_reads_each_commit_once(spark, tdir, monkeypatch):
+    """Planning a change-feed batch over five commits lists the log once
+    and reads each commit once: the parsed actions feed the snapshot
+    replay, the classification and the commit clock."""
+    from pyspark.sql import types as T
+
+    from duckdb_delta_spark import DeltaWriter
+    from duckdb_delta_spark.delta.log import DeltaLog
+    from duckdb_delta_spark.streaming.delta_source import DeltaPySource
+
+    schema = T.StructType([T.StructField("i", T.LongType())])
+    w = DeltaWriter.create(spark, tdir, schema)
+    for n in range(4):
+        w.append(spark.range(n, n + 1).toDF("i"))
+    src = DeltaPySource({"path": tdir, "readChangeFeed": "true",
+                         "startingVersion": "0"})
+    reader = src.streamReader(src.schema())
+
+    calls = {"list": 0, "read": 0, "ict": 0}
+    for name, key in (("list_log_files", "list"), ("read_commit", "read"),
+                      ("read_ict", "ict")):
+        def counted(self, *a, _orig=getattr(DeltaLog, name), _key=key,
+                    **kw):
+            calls[_key] += 1
+            return _orig(self, *a, **kw)
+        monkeypatch.setattr(DeltaLog, name, counted)
+
+    parts = reader.partitions(reader.initialOffset(), {"version": 4})
+    assert calls == {"list": 1, "read": 5, "ict": 0}
+    refs = [f for p in parts for f in p.files]
+    assert sorted(f.commit_version for f in refs) == [1, 2, 3, 4]

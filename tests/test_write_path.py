@@ -115,3 +115,27 @@ def test_foreach_sink_skips_replayed_batch(spark, tdir, event):
     skips = [r for r in seen if r["event"] == event]
     assert len(skips) == 1
     assert (skips[0]["batch_id"], skips[0]["last_committed"]) == (0, 0)
+
+
+@pytest.mark.parametrize("mode", ["none", "name"])
+def test_append_not_null_nested_field(spark, tdir, mode):
+    """A NOT NULL field inside a struct (the schema ``F.struct`` gives):
+    appends work with and without column mapping, and a NULL in it is
+    refused the same way on both."""
+    from pyspark.sql import functions as F
+
+    from duckdb_delta_spark.delta.errors import ConstraintViolationError
+
+    df = spark.range(3).select(
+        "id", F.struct(F.col("id").alias("a")).alias("s"))
+    assert not df.schema["s"].dataType["a"].nullable
+    w = DeltaWriter.create(spark, tdir, df.schema, configuration={
+        "delta.columnMapping.mode": mode})
+    w.append(df)
+    got = DeltaTable(tdir).to_df(spark).select("id", "s.a").collect()
+    assert sorted(tuple(r) for r in got) == [(0, 0), (1, 1), (2, 2)]
+    bad = spark.range(1).select(
+        "id", F.struct(F.lit(None).cast("long").alias("a")).alias("s"))
+    with pytest.raises(ConstraintViolationError):
+        w.append(bad)
+    assert DeltaTable(tdir).to_df(spark).count() == 3
