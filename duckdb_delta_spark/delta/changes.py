@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from duckdb_delta_spark.delta import mapping
 from duckdb_delta_spark.delta.dv import read_dv_from_descriptor
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.scan import DeltaScanBuilder
@@ -48,7 +49,8 @@ COMMIT_TIMESTAMP = "_commit_timestamp"
 DIFF_JOIN_MAX = 5_000_000
 
 
-def _non_additive_changes(old_fields, new_fields, prefix: str = ""):
+def _non_additive_changes(old_fields, new_fields, prefix: str = "",
+                          relaxed: bool = False):
     """Rename/drop detection between two schema versions inside a CDF
     range. Matches fields by ``delta.columnMapping.id`` when present
     (renames are only expressible under column mapping) and by name
@@ -56,12 +58,16 @@ def _non_additive_changes(old_fields, new_fields, prefix: str = ""):
     newer schema is a pure widening (added columns / relaxed types),
     which CDF serves by null-filling — anything else must raise, or
     pre-change rows would silently read NULL where they have values
-    (delta-spark raises a non-additive-schema-change error here)."""
+    (delta-spark raises a non-additive-schema-change error here).
+
+    ``relaxed`` is the check behind the streaming source's
+    ``schemaTrackingDir``: after a restart acknowledged a schema
+    boundary, old eras are served under the newer schema by id/physical
+    matching, so a rename just relabels and a dropped column is projected
+    away; only a type that cannot widen remains a problem."""
     problems: list[str] = []
 
-    def fid(f):
-        return (f.metadata or {}).get("delta.columnMapping.id")
-
+    fid = mapping.field_id
     new_by_id = {fid(g): g for g in new_fields if fid(g) is not None}
     new_by_name = {g.name: g for g in new_fields}
     for f in old_fields:
@@ -73,17 +79,18 @@ def _non_additive_changes(old_fields, new_fields, prefix: str = ""):
                     fid(nf) not in (None, i):
                 nf = None  # same logical name but a DIFFERENT column
         if nf is None:
-            problems.append(f"column {prefix}{f.name!r} was dropped")
+            if not relaxed:
+                problems.append(f"column {prefix}{f.name!r} was dropped")
             continue
-        if nf.name != f.name:
+        if nf.name != f.name and not relaxed:
             problems.append(
                 f"column {prefix}{f.name!r} was renamed to {nf.name!r}")
         problems += _dtype_problems(
-            f.dataType, nf.dataType, f"{prefix}{f.name}")
+            f.dataType, nf.dataType, f"{prefix}{f.name}", relaxed)
     return problems
 
 
-def _dtype_problems(od, nd, path: str) -> list[str]:
+def _dtype_problems(od, nd, path: str, relaxed: bool = False) -> list[str]:
     """Type-pair leg of :func:`_non_additive_changes`, recursing through
     CONTAINERS: additive evolution is legal at any nesting level (Delta
     ALTER TABLE ADD COLUMNS reaches ``array<struct<...>>`` elements and
@@ -96,17 +103,17 @@ def _dtype_problems(od, nd, path: str) -> list[str]:
     if od == nd:
         return []
     if isinstance(od, T.StructType) and isinstance(nd, T.StructType):
-        return _non_additive_changes(od.fields, nd.fields, path + ".")
+        return _non_additive_changes(od.fields, nd.fields, path + ".",
+                                     relaxed)
     if isinstance(od, T.ArrayType) and isinstance(nd, T.ArrayType):
         return _dtype_problems(od.elementType, nd.elementType,
-                               path + ".element")
+                               path + ".element", relaxed)
     if isinstance(od, T.MapType) and isinstance(nd, T.MapType):
-        return (_dtype_problems(od.keyType, nd.keyType, path + ".key")
+        return (_dtype_problems(od.keyType, nd.keyType, path + ".key",
+                                relaxed)
                 + _dtype_problems(od.valueType, nd.valueType,
-                                  path + ".value"))
-    from duckdb_delta_spark.delta.writer import _is_widening
-
-    if _is_widening(od, nd):
+                                  path + ".value", relaxed))
+    if mapping.is_widening(od, nd):
         return []
     return [
         f"column {path!r} changed type {od.simpleString()} -> "
@@ -199,7 +206,7 @@ def _walk_changes(
         # an empty snapshot so even version 0's changes are included
         snap = Snapshot(log, -1)
     else:
-        snap = Snapshot.build(log, starting_version)
+        snap = Snapshot.build(log, starting_version, segment=segment)
     # every distinct schema observed in the current segment, oldest
     # first — each is validated against the segment's END schema at
     # finalize (rename/drop inside a segment must raise, not null-fill;
@@ -406,37 +413,16 @@ def _read_cdc(
     ``_change_type`` + ``_commit_version``.
 
     Column-mapped tables: cdc files mirror data files (Delta spec), so
-    columns are read under their PHYSICAL names — at EVERY nesting level
-    (a logical nested type in the read schema would name-match nothing
-    and null every nested field) — then cast back to logical names
-    (positional Catalyst struct cast, same as the batch scan);
-    cdc-action partitionValues are keyed physically too."""
-    from duckdb_delta_spark.delta.mapping import nullable_type, physical_type
-
+    they are read and renamed back to logical names like the batch scan
+    (:mod:`delta.mapping`); cdc-action partitionValues are keyed
+    physically too."""
     pcols = snap.partition_columns
     schema = snap.schema
+    mode = snap.column_mapping_mode
     ptypes = {f.name: f.dataType for f in schema.fields}
-    phys = {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in schema.fields
-    }
-    # field ids only for id mode — name mode matches by name, and an
-    # upgraded table's pre-upgrade cdc-era files carry no ids
-    ids_ok = getattr(snap, "column_mapping_mode", "none") == "id"
-    file_schema = T.StructType(
-        [
-            T.StructField(
-                phys[f.name],
-                physical_type(f.dataType, with_field_ids=ids_ok),
-                True,
-            )
-            for f in schema.fields
-            if f.name not in pcols
-        ]
-        + [T.StructField(CHANGE_TYPE, T.StringType())]
-    )
+    phys = mapping.name_map(schema)
+    data = [f for f in schema.fields if f.name not in pcols]
+    file_schema = mapping.read_schema(spark, data, mode)
 
     from duckdb_delta_spark.delta.scan import FILE_COL, pv_string_to_col
     from duckdb_delta_spark.delta.snapshot import resolve_log_path
@@ -462,19 +448,12 @@ def _read_cdc(
               for k in pcols])
     pv_rows = list(by_uri_pv.values())
 
-    df = spark.read.schema(file_schema).parquet(*paths)
-    # physical → logical rename for the data columns (nested fields
-    # rename via a positional struct cast to the logical shape)
+    df = spark.read.schema(T.StructType(
+        list(file_schema.fields)
+        + [T.StructField(CHANGE_TYPE, T.StringType())])).parquet(*paths)
     df = df.select(
-        *[
-            (
-                F.col(phys[f.name]).cast(nullable_type(f.dataType))
-                if physical_type(f.dataType) != f.dataType
-                else F.col(phys[f.name])
-            ).alias(f.name)
-            for f in schema.fields
-            if f.name not in pcols
-        ],
+        *[mapping.to_logical(p.name, f, mode)
+          for f, p in zip(data, file_schema.fields)],
         F.col(CHANGE_TYPE),
         F.col("_metadata.file_path").alias(FILE_COL),
     )

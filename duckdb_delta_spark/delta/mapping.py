@@ -1,36 +1,60 @@
-"""Column-mapping helpers shared by the scan (read) and writer (write) paths.
+"""Column mapping: the one module that knows how logical Delta columns map
+to the columns inside data and change-data files.
 
-Delta column mapping (``name`` / ``id`` modes) renames every struct field —
-top-level AND nested — to a physical name recorded in field metadata
-(``delta.columnMapping.physicalName``) and assigns a numeric field id
-(``delta.columnMapping.id``) that lands in parquet footers as
+Delta column mapping (``name`` / ``id`` modes) gives every struct field —
+top-level AND nested, map keys included — a physical name recorded in
+field metadata (``delta.columnMapping.physicalName``) and a numeric field
+id (``delta.columnMapping.id``) that lands in parquet footers as
 ``parquet.field.id``. The reference resolves physical columns from footers
 (delta_utils.hpp:300-311); nested renames are exercised by its generated
 column_mapping tests. Spark-first translation: physical schemas are plain
 StructTypes and the logical<->physical rename of nested fields is a struct
 CAST (Catalyst struct casts are positional, so a cast to the same shape
 with different field names IS the rename, executed codegen-side).
+
+Reading and writing differ on purpose:
+
+* A READ schema carries physical names at every nesting level (a logical
+  nested type would name-match nothing and null every nested field). In
+  id mode it also carries ``parquet.field.id`` at every level and turns
+  on Spark's field-id matching, so a file resolves by id whatever names
+  it uses. In name mode it carries NO ids: the spec matches name mode by
+  physical name only, and a table UPGRADED to name mode holds files
+  written before any ids existed — with
+  ``spark.sql.parquet.fieldId.read.enabled`` on (session-global, set by
+  any id-mode read), an id-carrying read schema makes Spark reject those
+  id-less files outright.
+* A WRITE schema carries the ids at every level in both modes: the spec
+  requires writers to emit field ids whenever column mapping is enabled.
+* With mapping off, both are the logical schema.
 """
 
 from __future__ import annotations
 
+import uuid
+
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 PHYS_KEY = "delta.columnMapping.physicalName"
 ID_KEY = "delta.columnMapping.id"
 
 
-def field_meta(
-    f: T.StructField, with_field_ids: bool = True
-) -> tuple[str, dict]:
-    """(physical name, parquet metadata) for one mapped field."""
-    md = f.metadata or {}
-    phys = md.get(PHYS_KEY, f.name)
-    fid = md.get(ID_KEY)
-    return phys, (
-        {"parquet.field.id": int(fid)}
-        if (fid is not None and with_field_ids) else {}
-    )
+def physical_name(f: T.StructField) -> str:
+    return (f.metadata or {}).get(PHYS_KEY, f.name)
+
+
+def field_id(f: T.StructField) -> int | None:
+    fid = (f.metadata or {}).get(ID_KEY)
+    return None if fid is None else int(fid)
+
+
+def name_map(schema: T.StructType) -> dict[str, str]:
+    """logical → physical name of every top-level field (identity for a
+    field without mapping metadata). Stats JSON, partitionValues and
+    clustering columns are keyed by PHYSICAL names on mapped tables."""
+    return {f.name: physical_name(f) for f in schema.fields}
 
 
 def physical_type(
@@ -38,23 +62,18 @@ def physical_type(
 ) -> T.DataType:
     """Recursively rename struct fields to their physical names, replacing
     the mapping metadata with ``parquet.field.id`` (what the parquet writer
-    emits and the field-id-matching reader consumes). Identity on unmapped
-    subtrees.
-
-    ``with_field_ids=False`` omits the parquet ids — REQUIRED for
-    name-mode READ schemas: the spec matches name mode by physical name
-    only, and tables UPGRADED to name mode contain files written before
-    any ids existed; with ``spark.sql.parquet.fieldId.read.enabled`` on
-    (session-global, set by any id-mode scan), an id-carrying read
-    schema makes Spark reject those id-less files outright."""
+    emits and the field-id-matching reader consumes); ``with_field_ids=
+    False`` omits the ids (the name-mode read schema). Identity on
+    unmapped subtrees."""
     if isinstance(dt, T.StructType):
         out = []
         for f in dt.fields:
-            phys, meta = field_meta(f, with_field_ids)
+            fid = field_id(f) if with_field_ids else None
             out.append(
                 T.StructField(
-                    phys, physical_type(f.dataType, with_field_ids),
-                    f.nullable, meta,
+                    physical_name(f),
+                    physical_type(f.dataType, with_field_ids), f.nullable,
+                    {} if fid is None else {"parquet.field.id": fid},
                 )
             )
         return T.StructType(out)
@@ -64,11 +83,106 @@ def physical_type(
         )
     if isinstance(dt, T.MapType):
         return T.MapType(
-            dt.keyType,
+            physical_type(dt.keyType, with_field_ids),
             physical_type(dt.valueType, with_field_ids),
             dt.valueContainsNull,
         )
     return dt
+
+
+def read_schema(
+    spark: SparkSession, fields: list[T.StructField], mode: str
+) -> T.StructType:
+    """The schema to read data or change-data files of these logical
+    ``fields`` with, under mapping ``mode`` (see the module docstring):
+    physical names, plus field ids and field-id matching in id mode only;
+    the logical names and types when mapping is off."""
+    if mode == "none":
+        return T.StructType([T.StructField(f.name, f.dataType) for f in fields])
+    if mode == "id":
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    return physical_type(T.StructType(fields), with_field_ids=mode == "id")
+
+
+def write_schema(
+    spark: SparkSession, fields: list[T.StructField]
+) -> T.StructType:
+    """The physical schema to write these logical ``fields`` under on a
+    mapped table — ids at every level, which Spark's parquet writer
+    emits once field-id writing is on (turned on here)."""
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    return physical_type(T.StructType(fields))
+
+
+def to_logical(phys: str, f: T.StructField, mode: str):
+    """Column ``phys`` of a frame read with :func:`read_schema`, renamed
+    back to logical field ``f`` — nested fields through a cast to the
+    logical shape, made all-nullable because the file read is."""
+    col = F.col(phys)
+    if mode != "none" and physical_type(f.dataType) != f.dataType:
+        col = col.cast(nullable_type(f.dataType))
+    return col.alias(f.name)
+
+
+def assign_ids(
+    schema: T.StructType, start_id: int = 0,
+    physical_names: str = "uuid",
+) -> tuple[T.StructType, int]:
+    """Assign ``delta.columnMapping.id``/``physicalName`` to every struct
+    field (nested included) that lacks them — what delta-spark does when
+    column mapping is enabled. Existing metadata is preserved, so
+    fixture-authored schemas keep their ids; ids start past ``start_id``
+    (the table's ``delta.columnMapping.maxColumnId``) and past every id
+    already in the schema. Returns (schema, new maxColumnId). With stable
+    physical names in place, RENAME/DROP COLUMN become pure metadata
+    commits.
+
+    ``physical_names="logical"`` assigns each field's LOGICAL name as its
+    physical name instead of a fresh ``col-<uuid>`` — the delta-spark
+    UPGRADE semantics (enabling name mode on an EXISTING table), where
+    the already-written files are keyed by logical names and a fresh
+    physical name would orphan every one of them."""
+    max_id = start_id
+
+    # global pre-scan FIRST: ids already present anywhere in the schema
+    # (arbitrarily deep, incl. structs inside arrays/maps) must never
+    # collide with freshly assigned parent-level ids (spec: unique)
+    def scan(dt: T.DataType) -> None:
+        nonlocal max_id
+        if isinstance(dt, T.StructType):
+            for f in dt.fields:
+                fid = field_id(f)
+                if fid is not None:
+                    max_id = max(max_id, fid)
+                scan(f.dataType)
+        elif isinstance(dt, T.ArrayType):
+            scan(dt.elementType)
+        elif isinstance(dt, T.MapType):
+            scan(dt.keyType)
+            scan(dt.valueType)
+
+    scan(schema)
+
+    def walk(struct: T.StructType) -> T.StructType:
+        nonlocal max_id
+        out = []
+        for f in struct.fields:
+            md = dict(f.metadata or {})
+            if ID_KEY not in md:
+                max_id += 1
+                md[ID_KEY] = max_id
+            md.setdefault(
+                PHYS_KEY,
+                f.name if physical_names == "logical"
+                else f"col-{uuid.uuid4()}",
+            )
+            dt = f.dataType
+            if isinstance(dt, T.StructType):
+                dt = walk(dt)
+            out.append(T.StructField(f.name, dt, f.nullable, md))
+        return T.StructType(out)
+
+    return walk(schema), max_id
 
 
 def physical_path_map(schema: T.StructType) -> dict[str, str]:
@@ -79,7 +193,7 @@ def physical_path_map(schema: T.StructType) -> dict[str, str]:
 
     def walk(fields, lpre: str, ppre: str) -> None:
         for f in fields:
-            phys, _ = field_meta(f)
+            phys = physical_name(f)
             lp = f"{lpre}.{f.name}" if lpre else f.name
             pp = f"{ppre}.{phys}" if ppre else phys
             out[lp] = pp
@@ -118,5 +232,48 @@ def nullable_type(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.ArrayType):
         return T.ArrayType(nullable_type(dt.elementType), True)
     if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, nullable_type(dt.valueType), True)
+        # the map KEY itself has no null flag, but fields INSIDE a
+        # struct-typed key do — Spark's parquet read types them nullable,
+        # so a cast target keeping them NOT NULL refuses to resolve
+        return T.MapType(
+            nullable_type(dt.keyType), nullable_type(dt.valueType), True
+        )
     return dt
+
+
+#: integer digits each integral type needs when widening into a decimal
+_INT_DECIMAL_DIGITS = {T.ByteType: 3, T.ShortType: 5,
+                       T.IntegerType: 10, T.LongType: 20}
+
+
+def is_widening(frm: T.DataType, to: T.DataType) -> bool:
+    """Spec-allowed type widenings (Delta PROTOCOL.md "Type Widening"):
+    integral up-chain, int->double, float->double, date->timestampNtz,
+    integral->decimal with enough integer digits, and decimal precision
+    growth that never loses integer digits or scale."""
+    if isinstance(frm, T.ByteType):
+        if isinstance(to, (T.ShortType, T.IntegerType, T.LongType,
+                           T.DoubleType)):
+            return True
+    elif isinstance(frm, T.ShortType):
+        if isinstance(to, (T.IntegerType, T.LongType, T.DoubleType)):
+            return True
+    elif isinstance(frm, T.IntegerType):
+        if isinstance(to, (T.LongType, T.DoubleType)):
+            return True
+    elif isinstance(frm, T.FloatType) and isinstance(to, T.DoubleType):
+        return True
+    elif isinstance(frm, T.DateType) and isinstance(to, T.TimestampNTZType):
+        return True
+    if isinstance(to, T.DecimalType):
+        need = _INT_DECIMAL_DIGITS.get(type(frm))
+        if need is not None:
+            return to.precision - to.scale >= need
+        if isinstance(frm, T.DecimalType):
+            return (
+                to.scale >= frm.scale
+                and to.precision - to.scale >= frm.precision - frm.scale
+                and (to.precision, to.scale)
+                != (frm.precision, frm.scale)
+            )
+    return False

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from duckdb_delta_spark.localrel import local_df as _local_df
+from duckdb_delta_spark.delta import mapping
 from duckdb_delta_spark.delta.snapshot import AddFile, Snapshot
 
 FILE_COL = "__delta_file_path"
@@ -759,23 +760,19 @@ class DeltaScanBuilder:
                 )
                 for p, d in pairs
             ]
-            phys = self._phys_name_map()
-            if phys:
+            if self.snapshot.column_mapping_mode != "none":
                 # stats/partitionValues are keyed by physical names on
                 # mapped tables — at EVERY nesting level, so a dotted
                 # predicate path must translate each segment (stats for
                 # logical info.score live under physInfo.physScore)
-                from duckdb_delta_spark.delta.mapping import physical_path_map
-
-                paths = physical_path_map(self.snapshot.schema)
+                paths = mapping.physical_path_map(self.snapshot.schema)
 
                 def xlate(p: Pred) -> Pred:
                     col = paths.get(p.column)
                     if col is None:
                         head, _, rest = p.column.partition(".")
-                        col = phys.get(head, head) + ("." + rest if rest else "")
-                    q = Pred(col, p.op, p.value)
-                    return q
+                        col = paths.get(head, head) + ("." + rest if rest else "")
+                    return Pred(col, p.op, p.value)
 
                 def xlate_any(p):
                     if isinstance(p, OrPred):
@@ -784,7 +781,7 @@ class DeltaScanBuilder:
                     return xlate(p)
 
                 pairs = [(xlate_any(p), d) for p, d in pairs]
-                pcols = [phys.get(c, c) for c in pcols]
+                pcols = [paths.get(c, c) for c in pcols]
 
             # Vectorized evaluation over the columnar stats manifest —
             # the 100-TB path: 1M add-files prune in well under a second
@@ -952,37 +949,6 @@ class DeltaScanBuilder:
                 return ts.replace(minute=0, second=0, microsecond=0)
         return None
 
-    def _physical_fields(self) -> tuple[list[tuple[str, str, T.DataType, int | None]], str]:
-        """[(logical, physical, type, field_id)] for data columns + mode."""
-        mode = self.snapshot.column_mapping_mode
-        pcols = set(self.snapshot.partition_columns)
-        out = []
-        for field in self.snapshot.schema.fields:
-            if field.name in pcols:
-                continue
-            phys = field.name
-            fid = None
-            if mode in ("name", "id"):
-                md = field.metadata or {}
-                phys = md.get("delta.columnMapping.physicalName", field.name)
-                fid = md.get("delta.columnMapping.id")
-            out.append((field.name, phys, field.dataType, fid))
-        return out, mode
-
-    def _phys_name_map(self) -> dict[str, str]:
-        """logical → physical top-level name (identity when unmapped).
-        Stats JSON keys and partitionValues keys use PHYSICAL names on
-        column-mapped tables (Delta spec), so pruning must translate."""
-        if self.snapshot.column_mapping_mode == "none":
-            return {}
-        out = {}
-        for field in self.snapshot.schema.fields:
-            md = field.metadata or {}
-            out[field.name] = md.get(
-                "delta.columnMapping.physicalName", field.name
-            )
-        return out
-
     def to_df(self) -> DataFrame:
         from duckdb_delta_spark.delta.logging import emit
 
@@ -994,13 +960,15 @@ class DeltaScanBuilder:
             emit("scan.plan", table_path=snap.log.table_path,
                  version=snap.version, route=route, **self._report)
 
-        fields, mode = self._physical_fields()
+        mode = snap.column_mapping_mode
+        schema = snap.schema
         pcols = snap.partition_columns
-        ptypes = {f.name: f.dataType for f in snap.schema.fields if f.name in pcols}
+        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
+        fields = [f for f in schema.fields if f.name not in ptypes]
 
         if self._projection is not None:
             needed = set(self._projection)
-            fields = [f for f in fields if f[0] in needed]
+            fields = [f for f in fields if f.name in needed]
             pcols = [p for p in pcols if p in needed]
 
         has_dv = any(f.deletion_vector for f in files)
@@ -1023,47 +991,14 @@ class DeltaScanBuilder:
                     T.StructField("_row_commit_version", T.LongType()),
                 ]
             out_schema = T.StructType(
-                [T.StructField(n, t) for n, _, t, _ in fields]
+                [T.StructField(f.name, f.dataType) for f in fields]
                 + [T.StructField(p, ptypes[p]) for p in pcols]
                 + extra
             )
             df = spark.createDataFrame([], out_schema)
             return df.select(*self._projection) if self._projection else df
 
-        from duckdb_delta_spark.delta.mapping import nullable_type, physical_type
-
-        if mode == "id":
-            # id mode resolves physical columns by parquet.field.id from
-            # the file footers (reference: delta_utils.hpp:300-311) —
-            # Spark-first: put the ids on the read schema (at EVERY
-            # nesting level — physical_type carries nested field ids) and
-            # let the parquet reader match by id, whatever the file says
-            spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            phys_schema = T.StructType(
-                [
-                    T.StructField(
-                        phys, physical_type(t), True,
-                        {"parquet.field.id": int(fid)} if fid is not None else {},
-                    )
-                    for _, phys, t, fid in fields
-                ]
-            )
-        elif mode == "name":
-            # nested struct fields are ALSO renamed under column mapping —
-            # the read schema must use physical names all the way down or
-            # name-matching returns nulls for every nested field. NO
-            # parquet field ids here: name mode matches by name per spec,
-            # and an UPGRADED table's pre-upgrade files have no ids (an
-            # id-carrying schema makes Spark reject them when
-            # fieldId.read.enabled was turned on by any id-mode scan)
-            phys_schema = T.StructType(
-                [T.StructField(phys, physical_type(t, with_field_ids=False))
-                 for _, phys, t, _ in fields]
-            )
-        else:
-            phys_schema = T.StructType(
-                [T.StructField(phys, t) for _, phys, t, _ in fields]
-            )
+        phys_schema = mapping.read_schema(spark, fields, mode)
         mat_id = mat_ver = None
         if self._row_ids:
             # preserved row ids (spec "Row Tracking"): files rewritten by
@@ -1084,15 +1019,8 @@ class DeltaScanBuilder:
             paths = [f.absolute_path(snap.log.table_path) for f in files]
             df = spark.read.schema(phys_schema).parquet(*paths)
 
-        sel = []
-        for logical, phys, t, _ in fields:
-            col = F.col(phys)
-            if mode in ("name", "id") and physical_type(t) != t:
-                # physical→logical rename of NESTED fields: Catalyst
-                # struct casts are positional, so a cast to the logical
-                # shape IS the rename, executed codegen-side (no UDF)
-                col = col.cast(nullable_type(t))
-            sel.append(col.alias(logical))
+        sel = [mapping.to_logical(p.name, f, mode)
+               for f, p in zip(fields, phys_schema.fields)]
         if local:
             # the local table already dropped DV-deleted rows; partition
             # values take the same string → type conversion as the join
@@ -1214,8 +1142,6 @@ class DeltaScanBuilder:
         an Arrow cast that fails, types that need time-zone handling, a
         date before the Gregorian cutover) or that needs file metadata goes
         there."""
-        from duckdb_delta_spark.delta.mapping import contains_type
-
         snap = self.snapshot
         left = self.LOCAL_SCAN_MAX_BYTES
         if (self._virtual or self._row_ids
@@ -1223,8 +1149,8 @@ class DeltaScanBuilder:
                 or not phys_schema.fields
                 or len(files) > self.LOCAL_SCAN_MAX_SHARE * self._report["files_total"]
                 or sum(f.size for f in files) > left
-                or contains_type(phys_schema, T.TimestampType,
-                                 T.TimestampNTZType, T.VariantType)):
+                or mapping.contains_type(phys_schema, T.TimestampType,
+                                         T.TimestampNTZType, T.VariantType)):
             return None
         table_path = snap.log.table_path
         paths = [f.absolute_path(table_path) for f in files]
@@ -1236,14 +1162,13 @@ class DeltaScanBuilder:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from duckdb_delta_spark.delta.dv import read_dv_from_descriptor
-        from duckdb_delta_spark.delta.mapping import nullable_type
 
         names = phys_schema.names
         keys = self._pv_keys(pcols)
-        dates = contains_type(phys_schema, T.DateType)
+        dates = mapping.contains_type(phys_schema, T.DateType)
         parts = []
         try:
-            target = to_arrow_schema(nullable_type(phys_schema))
+            target = to_arrow_schema(mapping.nullable_type(phys_schema))
             for f, path in zip(files, paths):
                 with pq.ParquetFile(path) as pf:
                     if (not set(names) <= set(pf.schema_arrow.names)
@@ -1275,7 +1200,8 @@ class DeltaScanBuilder:
         # one chunk: createDataFrame drops every batch after an empty one
         # (a file whose rows a DV all deletes, or a 0-row file)
         return self.spark.createDataFrame(
-            pa.concat_tables(parts).combine_chunks(), nullable_type(T.StructType(
+            pa.concat_tables(parts).combine_chunks(),
+            mapping.nullable_type(T.StructType(
                 list(phys_schema.fields)
                 + [T.StructField(f"__pv_{p}", T.StringType()) for p in pcols])))
 
@@ -1320,8 +1246,10 @@ class DeltaScanBuilder:
 
     def _pv_keys(self, pcols: list[str]) -> list[str]:
         """The log's partition-value keys of ``pcols`` (physical names)."""
-        phys = self._phys_name_map()
-        return [phys.get(p, p) for p in pcols]
+        if self.snapshot.column_mapping_mode == "none":
+            return list(pcols)
+        phys = mapping.name_map(self.snapshot.schema)
+        return [phys[p] for p in pcols]
 
     def _report_dvs(self, files: list[AddFile], route: str | None = None) -> int:
         """Emit ``scan.dv_route`` for the DV-carrying ``files`` and return

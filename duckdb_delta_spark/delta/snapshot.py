@@ -64,6 +64,7 @@ from duckdb_delta_spark.delta.log import (
     Replay,
 )
 from duckdb_delta_spark.delta.logging import emit
+from duckdb_delta_spark.delta.mapping import name_map
 
 #: reader features this engine implements; anything else in protocol.readerFeatures fails
 #: writer features this engine honors when committing; a table listing
@@ -617,10 +618,7 @@ class Snapshot:
             cols = (json.loads(raw) or {}).get("clusteringColumns") or []
         except (ValueError, AttributeError):
             return []
-        phys2log = {}
-        for f in self.schema.fields:
-            md = f.metadata or {}
-            phys2log[md.get("delta.columnMapping.physicalName", f.name)] = f.name
+        phys2log = {p: n for n, p in name_map(self.schema).items()}
         out = []
         for path in cols:
             name = path[0] if isinstance(path, (list, tuple)) else path

@@ -47,7 +47,8 @@ from duckdb_delta_spark.delta.errors import (
     UnsupportedFeatureError,
 )
 from duckdb_delta_spark.delta.log import DeltaLog
-from duckdb_delta_spark.delta.mapping import contains_type
+from duckdb_delta_spark.delta import mapping
+from duckdb_delta_spark.delta.mapping import contains_type, nullable_type
 from duckdb_delta_spark.delta.snapshot import Snapshot
 from duckdb_delta_spark.delta.transaction import (
     ReadSet,
@@ -115,65 +116,6 @@ def _plan_all_deterministic(df: DataFrame) -> bool | None:
                    for i in range(exprs.size()))
     except Exception:
         return None
-
-def _ensure_mapping_metadata(
-    schema: T.StructType, start_id: int = 0,
-    physical_names: str = "uuid",
-) -> tuple[T.StructType, int]:
-    """Assign ``delta.columnMapping.id``/``physicalName`` to every struct
-    field (nested included) that lacks them — what delta-spark does when
-    column mapping is enabled. Existing metadata is preserved, so
-    fixture-authored schemas keep their ids; returns (schema, maxColumnId).
-    With stable physical names in place, RENAME/DROP COLUMN become pure
-    metadata commits.
-
-    ``physical_names="logical"`` assigns each field's LOGICAL name as its
-    physical name instead of a fresh ``col-<uuid>`` — the delta-spark
-    UPGRADE semantics (enabling name mode on an EXISTING table), where
-    the already-written files are keyed by logical names and a fresh
-    physical name would orphan every one of them."""
-    max_id = start_id
-
-    # global pre-scan FIRST: ids already present anywhere in the schema
-    # (arbitrarily deep, incl. structs inside arrays/maps) must never
-    # collide with freshly assigned parent-level ids (spec: unique)
-    def scan(dt: T.DataType) -> None:
-        nonlocal max_id
-        if isinstance(dt, T.StructType):
-            for f in dt.fields:
-                fid = (f.metadata or {}).get("delta.columnMapping.id")
-                if fid is not None:
-                    max_id = max(max_id, int(fid))
-                scan(f.dataType)
-        elif isinstance(dt, T.ArrayType):
-            scan(dt.elementType)
-        elif isinstance(dt, T.MapType):
-            scan(dt.keyType)
-            scan(dt.valueType)
-
-    scan(schema)
-
-    def walk(struct: T.StructType) -> T.StructType:
-        nonlocal max_id
-        out = []
-        for f in struct.fields:
-            md = dict(f.metadata or {})
-            if "delta.columnMapping.id" not in md:
-                max_id += 1
-                md["delta.columnMapping.id"] = max_id
-            md.setdefault(
-                "delta.columnMapping.physicalName",
-                f.name if physical_names == "logical"
-                else f"col-{uuid.uuid4()}",
-            )
-            dt = f.dataType
-            if isinstance(dt, T.StructType):
-                dt = walk(dt)
-            out.append(T.StructField(f.name, dt, f.nullable, md))
-        return T.StructType(out)
-
-    return walk(schema), max_id
-
 
 def _json_stat_value(v):
     if isinstance(v, bytes):
@@ -309,7 +251,7 @@ class DeltaWriter:
                 if c not in schema.fieldNames():
                     raise SchemaError(f"clustering column {c!r} not in schema")
         if (configuration or {}).get("delta.columnMapping.mode", "none") != "none":
-            schema, max_id = _ensure_mapping_metadata(schema)
+            schema, max_id = mapping.assign_ids(schema)
             configuration = dict(configuration or {})
             prev_max = int(configuration.get("delta.columnMapping.maxColumnId", 0))
             configuration["delta.columnMapping.maxColumnId"] = str(
@@ -349,12 +291,7 @@ class DeltaWriter:
         ]
         if cluster_by:
             # spec: clusteringColumns are PHYSICAL-name paths
-            phys = {
-                f.name: (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-                for f in schema.fields
-            }
+            phys = mapping.name_map(schema)
             actions.append({"domainMetadata": {
                 "domain": "delta.clustering",
                 "configuration": json.dumps(
@@ -861,8 +798,8 @@ class DeltaWriter:
                     # the same type
                     for f in schema.fields:
                         ff = fresh_fields.get(f.name)
-                        if ff is not None and (_nullable_type(ff.dataType)
-                                               != _nullable_type(f.dataType)):
+                        if ff is not None and (nullable_type(ff.dataType)
+                                               != nullable_type(f.dataType)):
                             raise SchemaError(
                                 "concurrent schema change retyped column "
                                 f"{f.name!r} during commit retry")
@@ -880,7 +817,7 @@ class DeltaWriter:
                         # from the pinned schema) may be re-merged into
                         # the fresh metadata
                         new_fields = [
-                            T.StructField(f.name, _nullable_type(f.dataType),
+                            T.StructField(f.name, nullable_type(f.dataType),
                                           True)
                             for f in schema.fields
                             if f.name not in fresh_fields
@@ -1004,12 +941,7 @@ class DeltaWriter:
         ident = _identity_columns(logical_schema)
         updates: dict[str, int] = {}
         if ident:
-            phys_of = {
-                f.name: (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-                for f in logical_schema.fields
-            }
+            phys_of = mapping.name_map(logical_schema)
             for name, info in ident.items():
                 key = "maxValues" if info["step"] > 0 else "minValues"
                 vals = []
@@ -1058,7 +990,7 @@ class DeltaWriter:
         conds = [
             F.when(
                 ~F.col(name).eqNullSafe(F.expr(expr).cast(
-                    _nullable_type(schema[name].dataType))),
+                    nullable_type(schema[name].dataType))),
                 F.lit(name),
             )
             for name, expr in checks
@@ -1217,43 +1149,28 @@ class DeltaWriter:
         extra_cols: tuple[str, ...] = (),
     ):
         """Rename columns to their column-mapping physical names and attach
-        parquet field ids for the write — at EVERY nesting level: nested
-        struct fields rename via a Catalyst cast to the physical-named
-        type (struct casts are positional, so a cast to the same shape
-        with different field names IS the rename, codegen-side; the cast
-        target carries ``parquet.field.id`` metadata on every level, which
-        the parquet writer emits with fieldId.write enabled). The stats
-        footer then comes out keyed by physical names at every level, as
-        the spec requires. ``extra_cols`` pass through unrenamed (e.g. the
-        cdc ``_change_type``, which the spec keeps literal in change-data
+        parquet field ids for the write, at every nesting level
+        (:func:`delta.mapping.write_schema`: the cast target carries
+        ``parquet.field.id`` metadata on every level, which the parquet
+        writer emits with fieldId.write enabled). The stats footer then
+        comes out keyed by physical names at every level, as the spec
+        requires. ``extra_cols`` pass through unrenamed (e.g. the cdc
+        ``_change_type``, which the spec keeps literal in change-data
         files)."""
         from pyspark.sql import functions as F
 
-        from duckdb_delta_spark.delta.mapping import physical_type
-
-        phys_fields = []
+        phys_schema = mapping.write_schema(self.spark, schema.fields)
         sel = []
-        for f in schema.fields:
-            md = f.metadata or {}
-            phys = md.get("delta.columnMapping.physicalName", f.name)
-            fid = md.get("delta.columnMapping.id")
-            meta = {"parquet.field.id": int(fid)} if fid is not None else {}
-            p_dt = physical_type(f.dataType)
-            phys_fields.append(T.StructField(phys, p_dt, f.nullable, meta))
+        for f, p in zip(schema.fields, phys_schema.fields):
             col = F.col(f.name)
-            if p_dt != f.dataType:
+            if p.dataType != f.dataType:
                 # the conformed frame is all-nullable; NOT NULL is
                 # enforced before this rename, which must not re-assert it
-                col = col.cast(_nullable_type(p_dt))
-            sel.append(col.alias(phys, metadata=meta))
-        for c in extra_cols:
-            sel.append(F.col(c))
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        phys_parts = []
-        for p in parts:
-            md = next(f.metadata or {} for f in schema.fields if f.name == p)
-            phys_parts.append(md.get("delta.columnMapping.physicalName", p))
-        return T.StructType(phys_fields), phys_parts, df.select(*sel)
+                col = col.cast(nullable_type(p.dataType))
+            sel.append(col.alias(p.name, metadata=p.metadata))
+        sel += [F.col(c) for c in extra_cols]
+        phys = mapping.name_map(schema)
+        return phys_schema, [phys[p] for p in parts], df.select(*sel)
 
     def _stage(
         self, df: DataFrame, parts: list[str], schema: T.StructType | None = None,
@@ -2667,7 +2584,7 @@ class DeltaWriter:
             bare = T.StructType([
                 T.StructField(f.name, f.dataType, f.nullable)
                 for f in new_schema.fields])
-            new_schema, max_id = _ensure_mapping_metadata(bare, start)
+            new_schema, max_id = mapping.assign_ids(bare, start)
             cfg["delta.columnMapping.maxColumnId"] = str(max_id)
             meta["configuration"] = cfg
         meta["schemaString"] = new_schema.json()
@@ -2918,7 +2835,7 @@ class DeltaWriter:
                     f"unknown delta.columnMapping.mode {new_mode!r}"
                 )
             start = int(config.get("delta.columnMapping.maxColumnId", 0))
-            mapped, max_id = _ensure_mapping_metadata(
+            mapped, max_id = mapping.assign_ids(
                 snap.schema, start_id=start, physical_names="logical")
             config["delta.columnMapping.maxColumnId"] = str(max_id)
             meta["schemaString"] = mapped.json()
@@ -3074,16 +2991,8 @@ class DeltaWriter:
         md: dict = {}
         if comment:
             md["comment"] = comment
-        meta = dict(snap.metadata)
-        if snap.column_mapping_mode != "none":
-            config = dict(snap.configuration)
-            next_id = int(config.get("delta.columnMapping.maxColumnId", 0)) + 1
-            md["delta.columnMapping.id"] = next_id
-            md["delta.columnMapping.physicalName"] = f"col-{uuid.uuid4()}"
-            config["delta.columnMapping.maxColumnId"] = str(next_id)
-            meta["configuration"] = config
         new_field = T.StructField(
-            name.rpartition(".")[2], _nullable_type(dtype), True, md
+            name.rpartition(".")[2], nullable_type(dtype), True, md
         )
 
         def walk(struct: T.StructType, path: str) -> T.StructType:
@@ -3108,8 +3017,15 @@ class DeltaWriter:
                 raise SchemaError(f"no such column: {seg!r}")
             return T.StructType(out)
 
-        fields = walk(schema, name).fields
-        meta["schemaString"] = T.StructType(fields).json()
+        schema = walk(schema, name)
+        meta = dict(snap.metadata)
+        if snap.column_mapping_mode != "none":
+            config = dict(snap.configuration)
+            schema, max_id = mapping.assign_ids(
+                schema, int(config.get("delta.columnMapping.maxColumnId", 0)))
+            config["delta.columnMapping.maxColumnId"] = str(max_id)
+            meta["configuration"] = config
+        meta["schemaString"] = schema.json()
         actions = [
             {"commitInfo": _commit_info("ADD COLUMNS",
                                         {"column": name})},
@@ -3151,7 +3067,7 @@ class DeltaWriter:
                             f.name, walk(f.dataType, tail), f.nullable,
                             f.metadata))
                         continue
-                    if not _is_widening(f.dataType, new_type):
+                    if not mapping.is_widening(f.dataType, new_type):
                         raise SchemaError(
                             f"ALTER COLUMN {name!r} TYPE: "
                             f"{f.dataType.jsonValue()} -> "
@@ -3494,12 +3410,7 @@ class DeltaWriter:
         for c in cluster_by:
             if c not in schema.fieldNames():
                 raise SchemaError(f"clustering column {c!r} not in schema")
-        phys = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in schema.fields
-        }
+        phys = mapping.name_map(schema)
         actions: list[dict] = [
             {"commitInfo": _commit_info(
                 "CLUSTER BY", {"clusterBy": json.dumps(cluster_by)})},
@@ -3742,45 +3653,9 @@ class DeltaWriter:
                     zorder_by = cc
                 else:
                     sort_by = cc
-        phys_of: dict[str, str] = {}
-        if mode != "none":
-            for f in schema.fields:
-                md = f.metadata or {}
-                phys_of[f.name] = md.get(
-                    "delta.columnMapping.physicalName", f.name
-                )
-            if mode == "id":
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.read.enabled", "true")
-            self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-            from duckdb_delta_spark.delta.mapping import physical_type
-
-            # physical names at EVERY nesting level — a logical nested
-            # type here would name-match nothing in the files and the
-            # rewrite would silently NULL every nested field. Field ids
-            # in the READ schema only for id mode: name mode matches by
-            # name, and a table UPGRADED to name mode has pre-upgrade
-            # files without ids that an id-carrying schema would reject.
-            ids_ok = mode == "id"
-            phys_schema = T.StructType(
-                [
-                    T.StructField(
-                        phys_of[f.name],
-                        physical_type(f.dataType, with_field_ids=ids_ok),
-                        True,
-                        {"parquet.field.id": int((f.metadata or {})["delta.columnMapping.id"])}
-                        if ids_ok
-                        and "delta.columnMapping.id" in (f.metadata or {})
-                        else {},
-                    )
-                    for f in schema.fields
-                    if f.name not in parts
-                ]
-            )
-        else:
-            phys_schema = T.StructType(
-                [f for f in schema.fields if f.name not in parts]
-            )
+        data = [f for f in schema.fields if f.name not in parts]
+        phys_of = mapping.name_map(schema)
+        phys_schema = mapping.read_schema(self.spark, data, mode)
         if sort_by and zorder_by:
             raise ValueError("pass either sort_by or zorder_by, not both")
         sort_cols = [phys_of.get(c, c) for c in (sort_by or [])]
@@ -3937,24 +3812,12 @@ class DeltaWriter:
                 )
             else:
                 src = src.coalesce(int(n_out))
-            if mode == "name":
-                # the READ schema is id-less (pre-upgrade files have no
-                # ids and would be rejected), but the spec requires
-                # WRITERS to emit field ids whenever column mapping is
-                # enabled — re-attach the mapping metadata before the
-                # write (DataFrame.to applies nested field metadata)
-                from duckdb_delta_spark.delta.mapping import physical_type
-
-                id_schema = T.StructType([
-                    T.StructField(
-                        phys_of[f.name], physical_type(f.dataType), True,
-                        {"parquet.field.id": int(
-                            (f.metadata or {})["delta.columnMapping.id"])}
-                        if "delta.columnMapping.id" in (f.metadata or {})
-                        else {},
-                    )
-                    for f in schema.fields if f.name not in parts
-                ])
+            if mode != "none":
+                # the write schema carries the ids the name-mode read
+                # schema lacks (see delta.mapping); DataFrame.to applies
+                # nested field metadata
+                id_schema = nullable_type(
+                    mapping.write_schema(self.spark, data))
                 if row_tracked:
                     id_schema = T.StructType(
                         list(id_schema.fields)
@@ -3962,14 +3825,16 @@ class DeltaWriter:
                            T.StructField(mat_ver, T.LongType())])
                 src = src.to(id_schema)
             # new files live in the same (hive) directory as the old ones;
-            # phys_schema matches the parquet column names (logical ==
-            # physical on unmapped tables)
+            # stats follow the parquet column names — on unmapped tables
+            # the logical fields, whose NOT NULL and identity columns
+            # keep their forced stats
             moved, _, _ = self._stage(
                 src, [], prefix=os.path.dirname(
                     urllib.parse.unquote(files[0].path)))
             pvals = dict(files[0].partition_values)
             adds = self._build_add_actions(
-                [(rel, pvals) for rel, _ in moved], phys_schema, parts)
+                [(rel, pvals) for rel, _ in moved],
+                T.StructType(data) if mode == "none" else phys_schema, parts)
             for a in adds:
                 a["dataChange"] = False
             removes = [f.remove_action(now_ms, data_change=False)
@@ -4794,48 +4659,10 @@ def _apply_generated(
         *[
             (
                 F.expr(gen[f.name]) if f.name in recompute else F.col(f.name)
-            ).cast(_nullable_type(f.dataType)).alias(f.name)
+            ).cast(nullable_type(f.dataType)).alias(f.name)
             for f in schema.fields
         ]
     )
-
-
-#: integer digits each integral type needs when widening into a decimal
-_INT_DECIMAL_DIGITS = {T.ByteType: 3, T.ShortType: 5,
-                       T.IntegerType: 10, T.LongType: 20}
-
-
-def _is_widening(frm: T.DataType, to: T.DataType) -> bool:
-    """Spec-allowed type widenings (Delta PROTOCOL.md "Type Widening"):
-    integral up-chain, int->double, float->double, date->timestampNtz,
-    integral->decimal with enough integer digits, and decimal precision
-    growth that never loses integer digits or scale."""
-    if isinstance(frm, T.ByteType):
-        if isinstance(to, (T.ShortType, T.IntegerType, T.LongType,
-                           T.DoubleType)):
-            return True
-    elif isinstance(frm, T.ShortType):
-        if isinstance(to, (T.IntegerType, T.LongType, T.DoubleType)):
-            return True
-    elif isinstance(frm, T.IntegerType):
-        if isinstance(to, (T.LongType, T.DoubleType)):
-            return True
-    elif isinstance(frm, T.FloatType) and isinstance(to, T.DoubleType):
-        return True
-    elif isinstance(frm, T.DateType) and isinstance(to, T.TimestampNTZType):
-        return True
-    if isinstance(to, T.DecimalType):
-        need = _INT_DECIMAL_DIGITS.get(type(frm))
-        if need is not None:
-            return to.precision - to.scale >= need
-        if isinstance(frm, T.DecimalType):
-            return (
-                to.scale >= frm.scale
-                and to.precision - to.scale >= frm.precision - frm.scale
-                and (to.precision, to.scale)
-                != (frm.precision, frm.scale)
-            )
-    return False
 
 
 def _expr_references(expr: str, column: str) -> bool:
@@ -5012,27 +4839,6 @@ def assign_row_ids(version: int, actions: list[dict], snap: Snapshot,
         }})
 
 
-def _nullable_type(dt: T.DataType) -> T.DataType:
-    """Deep copy of a type with every nested field marked nullable."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _nullable_type(f.dataType), True, f.metadata)
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_nullable_type(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        # the map KEY itself has no null flag, but fields INSIDE a
-        # struct-typed key do — Spark's parquet read types them nullable,
-        # so a cast target keeping them NOT NULL refuses to resolve
-        return T.MapType(
-            _nullable_type(dt.keyType), _nullable_type(dt.valueType), True
-        )
-    return dt
-
-
 def _assignment_exprs(schema: T.StructType, assignments: dict, col_for):
     """UPDATE/MERGE ``SET`` targets → {top-level column: Column},
     supporting DOTTED NESTED struct paths (``{"info.a": "expr"}`` →
@@ -5117,14 +4923,14 @@ def _merged_table_schema(snapshot, in_schema: T.StructType):
     if not new_fields and not nested_widened:
         return schema, None, False
     merged = T.StructType(widened_fields + [
-        T.StructField(f.name, _nullable_type(f.dataType), True)
+        T.StructField(f.name, nullable_type(f.dataType), True)
         for f in new_fields
     ])
     cfg = None
     if snapshot.column_mapping_mode != "none":
         cfg = dict(snapshot.configuration)
         start = int(cfg.get("delta.columnMapping.maxColumnId", 0))
-        merged, new_max = _ensure_mapping_metadata(merged, start_id=start)
+        merged, new_max = mapping.assign_ids(merged, start_id=start)
         cfg["delta.columnMapping.maxColumnId"] = str(new_max)
     return merged, cfg, True
 
@@ -5145,7 +4951,7 @@ def _merge_nested_types(t_dt: T.DataType, d_dt: T.DataType) -> T.DataType:
             out.append(T.StructField(f.name, dt, f.nullable, f.metadata))
         for f in d_dt.fields:  # df-only fields, in the input's order
             if f.name in by_df:
-                out.append(T.StructField(f.name, _nullable_type(f.dataType), True))
+                out.append(T.StructField(f.name, nullable_type(f.dataType), True))
         return T.StructType(out)
     if isinstance(t_dt, T.ArrayType) and isinstance(d_dt, T.ArrayType):
         return T.ArrayType(
@@ -5224,7 +5030,7 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
 
     if isinstance(dst_dt, T.StructType) and isinstance(src_dt, T.StructType):
         if not _needs_nested_conform(src_dt, dst_dt):
-            return col.cast(_nullable_type(dst_dt))
+            return col.cast(nullable_type(dst_dt))
         s_by = {f.name: f.dataType for f in src_dt.fields}
         inner = []
         for f in dst_dt.fields:
@@ -5233,14 +5039,14 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
                     col.getField(f.name), s_by[f.name], f.dataType
                 )
             else:
-                e = F.lit(None).cast(_nullable_type(f.dataType))
+                e = F.lit(None).cast(nullable_type(f.dataType))
             inner.append(e.alias(f.name))
         return F.when(
-            col.isNull(), F.lit(None).cast(_nullable_type(dst_dt))
+            col.isNull(), F.lit(None).cast(nullable_type(dst_dt))
         ).otherwise(F.struct(*inner))
     if isinstance(dst_dt, T.ArrayType) and isinstance(src_dt, T.ArrayType):
         if not _needs_nested_conform(src_dt, dst_dt):
-            return col.cast(_nullable_type(dst_dt))
+            return col.cast(nullable_type(dst_dt))
         return F.transform(
             col,
             lambda x: _conform_nested_expr(
@@ -5249,7 +5055,7 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
         )
     if isinstance(dst_dt, T.MapType) and isinstance(src_dt, T.MapType):
         if not _needs_nested_conform(src_dt, dst_dt):
-            return col.cast(_nullable_type(dst_dt))
+            return col.cast(nullable_type(dst_dt))
         out = col
         if _needs_nested_conform(src_dt.keyType, dst_dt.keyType):
             # map KEYS conform too — but only pure struct-field REORDERS
@@ -5283,8 +5089,8 @@ def _conform_nested_expr(col, src_dt: T.DataType, dst_dt: T.DataType):
             )
         # trailing cast aligns scalar key/value types the by-name
         # conform above left untouched (e.g. int keys → long keys)
-        return out.cast(_nullable_type(dst_dt))
-    return col.cast(_nullable_type(dst_dt))
+        return out.cast(nullable_type(dst_dt))
+    return col.cast(nullable_type(dst_dt))
 
 
 def _conform_rows(df: DataFrame, schema: T.StructType, col=None,
@@ -5343,7 +5149,7 @@ def _conform_rows(df: DataFrame, schema: T.StructType, col=None,
             e = F.expr(dflt[f.name])
         else:
             e = F.lit(None)
-        sel.append(e.cast(_nullable_type(f.dataType)).alias(f.name))
+        sel.append(e.cast(nullable_type(f.dataType)).alias(f.name))
     return df.select(*sel), computed
 
 
@@ -5388,11 +5194,7 @@ def _indexed_stat_leaves(
     def walk(lprefix: str, pprefix: str, fields) -> None:
         for f in fields:
             md = f.metadata or {}
-            phys = (
-                md.get("delta.columnMapping.physicalName", f.name)
-                if mapped
-                else f.name
-            )
+            phys = mapping.physical_name(f) if mapped else f.name
             lp = f"{lprefix}.{f.name}" if lprefix else f.name
             pp = f"{pprefix}.{phys}" if pprefix else phys
             if lp in parts or pp in parts:

@@ -39,74 +39,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-
-def _tracked_era_problems(era_fields, pinned_fields, prefix: str = ""):
-    """The RELAXED era check behind ``schemaTrackingDir`` (delta-spark's
-    ``schemaTrackingLocation`` analogue): after a restart acknowledged a
-    schema boundary, every era is served UNDER THE PINNED SCHEMA via
-    columnMapping-id / physicalName matching — a rename just relabels
-    (physical identity is preserved, the executor read resolves files by
-    physical name anyway), a column dropped before the pin is projected
-    away, and a column added after the era null-fills. The ONLY
-    unservable change is an id-matched column whose type cannot widen
-    era→pinned: those rows cannot be represented in the pinned schema at
-    all. Mirrors :func:`delta.changes._non_additive_changes`' matching
-    (id first, name fallback) and type rules, minus the rename/drop
-    refusals the restart explicitly opted out of."""
-    from pyspark.sql import types as T
-
-    problems: list[str] = []
-
-    def fid(f):
-        return (f.metadata or {}).get("delta.columnMapping.id")
-
-    pin_by_id = {fid(g): g for g in pinned_fields if fid(g) is not None}
-    pin_by_name = {g.name: g for g in pinned_fields}
-    for f in era_fields:
-        i = fid(f)
-        nf = pin_by_id.get(i) if i is not None else None
-        if nf is None:
-            nf = pin_by_name.get(f.name)
-            if nf is not None and i is not None and \
-                    fid(nf) not in (None, i):
-                nf = None  # same logical name but a DIFFERENT column
-        if nf is None:
-            continue  # dropped before the pin: projected away — fine
-        problems += _tracked_dtype_problems(
-            f.dataType, nf.dataType, f"{prefix}{f.name}")
-    return problems
-
-
-def _tracked_dtype_problems(od, nd, path: str) -> list[str]:
-    """Type-pair leg of :func:`_tracked_era_problems`, recursing through
-    CONTAINERS like changes._dtype_problems: fields added/renamed/
-    dropped inside an array element or map value relabel / project /
-    null-fill through the executor's ``_to_logical_arrow`` resolution
-    exactly like top-level ones, so only a genuinely unrepresentable
-    (non-widening) scalar change anywhere in the tree refuses."""
-    from pyspark.sql import types as T
-
-    if od == nd:
-        return []
-    if isinstance(od, T.StructType) and isinstance(nd, T.StructType):
-        return _tracked_era_problems(od.fields, nd.fields, path + ".")
-    if isinstance(od, T.ArrayType) and isinstance(nd, T.ArrayType):
-        return _tracked_dtype_problems(od.elementType, nd.elementType,
-                                       path + ".element")
-    if isinstance(od, T.MapType) and isinstance(nd, T.MapType):
-        return (_tracked_dtype_problems(od.keyType, nd.keyType,
-                                        path + ".key")
-                + _tracked_dtype_problems(od.valueType, nd.valueType,
-                                          path + ".value"))
-    from duckdb_delta_spark.delta.writer import _is_widening
-
-    if _is_widening(od, nd):
-        return []
-    return [
-        f"column {path!r} changed type {od.simpleString()} -> "
-        f"{nd.simpleString()} (not a spec-allowed widening — "
-        "unrepresentable under the tracked schema)"
-    ]
+from duckdb_delta_spark.delta import mapping
 
 
 @dataclass
@@ -362,7 +295,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         #: to <dir>/boundary.json before raising; a RESTARTED reader
         #: (which naturally re-pins at HEAD) sees the record and serves
         #: pre-pin eras under the pinned schema via columnMapping-id /
-        #: physicalName matching (_tracked_era_problems) — renames
+        #: physicalName matching (_non_additive_changes, relaxed) — renames
         #: relabel, drops project away, adds null-fill — so recovery is
         #: ONE restart from the checkpointed offset instead of a manual
         #: startingVersion computation. Without the option, today's
@@ -406,14 +339,8 @@ class DeltaStreamReader(DataSourceStreamReader):
         if snap.column_mapping_mode != "none":
             from pyspark.sql import types as T
 
-            from duckdb_delta_spark.delta.mapping import physical_path_map
-
-            self._phys = {
-                f.name: (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name)
-                for f in snap.schema.fields
-            }
-            self._phys_paths = physical_path_map(snap.schema)
+            self._phys = mapping.name_map(snap.schema)
+            self._phys_paths = mapping.physical_path_map(snap.schema)
             # the schema Spark hands back may have been stripped of field
             # metadata in transit; the nested rename needs the
             # physicalName annotations, so re-source data fields from the
@@ -690,27 +617,22 @@ class DeltaStreamReader(DataSourceStreamReader):
         relaxed = (old_era and self._auto_advance
                    and self._tracked_boundary is not None
                    and v < self._tracked_boundary)
-        if relaxed:
-            # a restart acknowledged a persisted boundary: serve old
-            # eras under the PINNED schema via id/physical matching
-            # (renames relabel, drops project away, adds null-fill);
-            # only an unrepresentable type change still refuses
-            probs = _tracked_era_problems(
-                sch.fields, self._full_schema.fields)
-            if not probs:
-                from duckdb_delta_spark.delta.logging import emit
-
-                emit("stream.cdf.schema_advance",
-                     table_path=self.table_path, era_version=v,
-                     pinned_version=self._pinned_version)
-                cache.append(sch)
-                return
-        elif old_era:
+        if old_era:
+            # relaxed: a restart acknowledged a persisted boundary, so old
+            # eras are served under the PINNED schema via id/physical
+            # matching (renames relabel, drops project away, adds
+            # null-fill); only an unrepresentable type change refuses
             probs = _non_additive_changes(
-                sch.fields, self._full_schema.fields)
+                sch.fields, self._full_schema.fields, relaxed=relaxed)
         else:
             probs = _non_additive_changes(
                 self._full_schema.fields, sch.fields)
+        if relaxed and not probs:
+            from duckdb_delta_spark.delta.logging import emit
+
+            emit("stream.cdf.schema_advance",
+                 table_path=self.table_path, era_version=v,
+                 pinned_version=self._pinned_version)
         if probs:
             remedy = (
                 "restart the stream past the boundary "
@@ -1018,7 +940,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     src = table.column(self._phys.get(f.name, f.name))
                     cols.append(
                         _to_logical_arrow(src, f.dataType, af.type)
-                        if _contains_struct(f.dataType)
+                        if mapping.contains_type(f.dataType, T.StructType)
                         else src.cast(af.type)
                     )
             return pa.Table.from_arrays(cols, schema=arrow_schema)
@@ -1122,18 +1044,6 @@ class DeltaStreamReader(DataSourceStreamReader):
         return out.to_batches()
 
 
-def _contains_struct(dt) -> bool:
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.StructType):
-        return True
-    if isinstance(dt, T.ArrayType):
-        return _contains_struct(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _contains_struct(dt.keyType) or _contains_struct(dt.valueType)
-    return False
-
-
 def _to_logical_arrow(arr, dt, at):
     """Physical-named parquet Arrow column → logical-named stream column
     for column-mapped tables. Struct fields resolve by their
@@ -1152,8 +1062,6 @@ def _to_logical_arrow(arr, dt, at):
 
     from pyspark.sql import types as T
 
-    from duckdb_delta_spark.delta.mapping import field_meta
-
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if arr.type.equals(at):
@@ -1165,7 +1073,7 @@ def _to_logical_arrow(arr, dt, at):
         children = []
         for i, sf in enumerate(dt.fields):
             sub_at = at.field(i).type
-            j = by_phys.get(field_meta(sf)[0])
+            j = by_phys.get(mapping.physical_name(sf))
             children.append(
                 pa.nulls(len(arr), sub_at)
                 if j is None
@@ -1199,7 +1107,7 @@ def _to_logical_arrow(arr, dt, at):
             offs = pa.array(off_np, mask=nulls)
         out = pa.MapArray.from_arrays(
             offs,
-            arr.keys.cast(at.key_type),
+            _to_logical_arrow(arr.keys, dt.keyType, at.key_type),
             _to_logical_arrow(arr.items, dt.valueType, at.item_type),
         )
         return out if out.type.equals(at) else out.cast(at)
@@ -1299,7 +1207,7 @@ def _rename_arrow_positional(arr, at):
             offs = pa.array(off_np, mask=nulls)
         out = pa.MapArray.from_arrays(
             offs,
-            arr.keys.cast(at.key_type),
+            _rename_arrow_positional(arr.keys, at.key_type),
             _rename_arrow_positional(arr.items, at.item_type),
         )
         return out if out.type.equals(at) else out.cast(at)
@@ -1462,11 +1370,6 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
             # level) and write under the field-id'd physical schema
             from pyspark.sql import types as T
 
-            from duckdb_delta_spark.delta.mapping import (
-                field_meta,
-                physical_type,
-            )
-
             snap_by = {f.name: f for f in snap.schema.fields}
             unknown = [f.name for f in self.schema.fields
                        if f.name not in snap_by]
@@ -1475,16 +1378,13 @@ class DeltaStreamWriter(DataSourceStreamArrowWriter):
                     f"streaming sink input columns {unknown} are not in "
                     "the column-mapped table schema"
                 )
-            self._phys = {n: field_meta(f)[0] for n, f in snap_by.items()}
-            fields = []
-            for f in self.schema.fields:
-                if f.name in self.partition_columns:
-                    continue
-                sf = snap_by[f.name]
-                phys, meta = field_meta(sf)
-                fields.append(T.StructField(
-                    phys, physical_type(sf.dataType), True, meta))
-            self._phys_schema = T.StructType(fields)
+            self._phys = mapping.name_map(snap.schema)
+            data = [snap_by[f.name] for f in self.schema.fields
+                    if f.name not in self.partition_columns]
+            # the write schema, its top-level columns nullable in the file
+            self._phys_schema = mapping.physical_type(T.StructType([
+                T.StructField(f.name, f.dataType, True, f.metadata)
+                for f in data]))
         protocol.check_writable(snap.protocol)
         conf = snap.configuration
         # CDF-enabled tables are WRITABLE by this sink: blind appends

@@ -3174,7 +3174,7 @@ def test_mapping_ids_unique_with_nested_preassigned():
     must never collide with freshly assigned parent-level ids."""
     from pyspark.sql import types as T
 
-    from duckdb_delta_spark.delta.writer import _ensure_mapping_metadata
+    from duckdb_delta_spark.delta.mapping import assign_ids as _ensure_mapping_metadata
 
     inner = T.StructType([
         T.StructField("x", T.LongType(), True,
@@ -4696,7 +4696,7 @@ def test_nested_evolution_random_shapes_model_based(spark, tdir):
             # nullable-ized create schema: Catalyst marks expression
             # outputs non-nullable, and a NOT NULL info.s would
             # (correctly) reject later null-filling appends
-            from duckdb_delta_spark.delta.writer import _nullable_type
+            from duckdb_delta_spark.delta.mapping import nullable_type as _nullable_type
 
             schema0 = T.StructType([
                 T.StructField(f.name, _nullable_type(f.dataType), True)
@@ -4858,7 +4858,7 @@ def test_nested_dml_random_model_based_on_cm_table(spark, tdir):
     address array elements). Seeded — identical sequence every run."""
     import random
 
-    from duckdb_delta_spark.delta.writer import _nullable_type
+    from duckdb_delta_spark.delta.mapping import nullable_type as _nullable_type
 
     rng = random.Random(1515)
     LEAVES = ["a", "s", "deep.z", "deep.y"]

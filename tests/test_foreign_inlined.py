@@ -97,7 +97,7 @@ def test_null_constraints_structs_enforced_on_append(spark, tdir):
     """Nested NOT NULL from a foreign schema binds THIS writer: a null
     in nested_struct.value.a must reject the append (reference mirrors:
     non_nullable.test:28-57); a fully non-null row lands 11 rows."""
-    from duckdb_delta_spark.delta.writer import _nullable_type
+    from duckdb_delta_spark.delta.mapping import nullable_type as _nullable_type
 
     path = _copy("null_constraints_structs/delta_lake", tdir)
     w = DeltaWriter(path, spark)
@@ -123,7 +123,7 @@ def test_null_constraints_lists_append_refused(spark, tdir):
     stats: ANY append must refuse, matching the reference
     (non_nullable.test:84: 'null constraints in arrays is not
     supported'), and leave the table untouched."""
-    from duckdb_delta_spark.delta.writer import _nullable_type
+    from duckdb_delta_spark.delta.mapping import nullable_type as _nullable_type
 
     path = _copy("null_constraints_lists/delta_lake", tdir)
     w = DeltaWriter(path, spark)

@@ -203,6 +203,19 @@ def test_open_after_commit_replays_only_that_commit(spark, tmp_path, monkeypatch
     assert counts.n["read_commit"] == 0 and counts.n["read_checkpoint_table"] == 0
 
 
+def test_version_bounded_changes_lists_once(spark, tmp_path, monkeypatch):
+    """``changes()`` walks the range and builds its start snapshot from
+    one listing of ``_delta_log``."""
+    path = str(tmp_path / "t")
+    w = DeltaWriter.create(spark, path, SCHEMA)
+    for i in range(3):
+        w.append(spark.createDataFrame([(i, i)], SCHEMA))
+    table = DeltaTable(path)
+    counts = _Counts(monkeypatch)
+    assert table.changes(spark, 1, 3).count() == 2
+    assert counts.n["list_log_files"] == 1
+
+
 # ---------------------------------------------------------------- threads
 
 
