@@ -669,15 +669,17 @@ class DeltaLog:
             )
         return int(os.path.getmtime(path) * 1000)
 
-    def version_at_timestamp(self, ts_ms: int) -> int:
+    def version_at_timestamp(self, ts_ms: int,
+                             segment: LogSegment | None = None) -> int:
         """Timestamp → version: the LATEST commit whose timestamp is
         ≤ ``ts_ms`` (standard Delta timestamp travel). The clock is
         ``commitInfo.inCommitTimestamp`` when the table writes them
         (inCommitTimestamp feature — robust to file copies/restores),
         else the commit file's modification time, exactly as delta-spark
         resolves it; raises InvalidTableVersionError for a timestamp
-        before the table existed."""
-        commits, checkpoints = self.list_log_files()
+        before the table existed. ``segment``: a listing the caller
+        already holds, used instead of listing again."""
+        commits, _ = segment or self.list_log_files()
         # feature detection: one read of the newest commit
         use_ict = bool(commits) and self.read_ict(max(commits)) is not None
         # Partition the search at the ICT enablement version (Delta spec):

@@ -35,8 +35,8 @@ EVENTS = (
     "commit.write",        # table_path, version, operation, n_actions
     "commit.conflict",     # table_path, version
     "checkpoint.write",    # table_path, version, n_rows
-    "delete.apply",        # table_path, version, n_deleted, n_files
-    "update.apply",        # table_path, version, n_updated
+    "delete.apply",        # table_path, version, n_deleted, n_files, route (local|spark), n_files_scanned
+    "update.apply",        # table_path, version, n_updated, route (local|spark), n_files_scanned
     "merge.apply",         # table_path, version, n_matched, n_inserted
     "restore.apply",       # table_path, version, restored_to, n_readded, n_removed
     "compact.apply",       # table_path, version, n_removed, n_added

@@ -129,8 +129,9 @@ def assign_ids(
     physical_names: str = "uuid",
 ) -> tuple[T.StructType, int]:
     """Assign ``delta.columnMapping.id``/``physicalName`` to every struct
-    field (nested included) that lacks them — what delta-spark does when
-    column mapping is enabled. Existing metadata is preserved, so
+    field (nested included, inside array elements and map keys and
+    values too) that lacks them — what delta-spark does when column
+    mapping is enabled. Existing metadata is preserved, so
     fixture-authored schemas keep their ids; ids start past ``start_id``
     (the table's ``delta.columnMapping.maxColumnId``) and past every id
     already in the schema. Returns (schema, new maxColumnId). With stable
@@ -163,26 +164,50 @@ def assign_ids(
 
     scan(schema)
 
-    def walk(struct: T.StructType) -> T.StructType:
+    def walk(dt: T.DataType, fresh: bool) -> T.DataType:
+        # ``fresh``: the field holding ``dt`` got its id in this call
         nonlocal max_id
-        out = []
-        for f in struct.fields:
-            md = dict(f.metadata or {})
-            if ID_KEY not in md:
-                max_id += 1
-                md[ID_KEY] = max_id
-            md.setdefault(
-                PHYS_KEY,
-                f.name if physical_names == "logical"
-                else f"col-{uuid.uuid4()}",
-            )
-            dt = f.dataType
-            if isinstance(dt, T.StructType):
-                dt = walk(dt)
-            out.append(T.StructField(f.name, dt, f.nullable, md))
-        return T.StructType(out)
+        if isinstance(dt, T.StructType):
+            out = []
+            for f in dt.fields:
+                md = dict(f.metadata or {})
+                new = ID_KEY not in md
+                if new:
+                    max_id += 1
+                    md[ID_KEY] = max_id
+                md.setdefault(
+                    PHYS_KEY,
+                    f.name if physical_names == "logical"
+                    else f"col-{uuid.uuid4()}",
+                )
+                out.append(T.StructField(
+                    f.name, walk(f.dataType, new), f.nullable, md))
+            return T.StructType(out)
+        if (isinstance(dt, (T.ArrayType, T.MapType)) and not fresh
+                and not has_ids(dt)):
+            # a mapped column whose array/map structs carry no mapping
+            # at all was written before they were mapped: its files hold
+            # those fields under their logical names and no field ids,
+            # which only an unmapped subtree keeps reading
+            return dt
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(walk(dt.elementType, fresh), dt.containsNull)
+        if isinstance(dt, T.MapType):
+            return T.MapType(walk(dt.keyType, fresh),
+                             walk(dt.valueType, fresh), dt.valueContainsNull)
+        return dt
 
-    return walk(schema), max_id
+    def has_ids(dt: T.DataType) -> bool:
+        if isinstance(dt, T.StructType):
+            return any(field_id(f) is not None or has_ids(f.dataType)
+                       for f in dt.fields)
+        if isinstance(dt, T.ArrayType):
+            return has_ids(dt.elementType)
+        if isinstance(dt, T.MapType):
+            return has_ids(dt.keyType) or has_ids(dt.valueType)
+        return False
+
+    return walk(schema, True), max_id
 
 
 def physical_path_map(schema: T.StructType) -> dict[str, str]:

@@ -482,12 +482,15 @@ class DeltaScanBuilder:
         self.spark = spark
         self.pushdown = pushdown
         self._preds: list[Pred] = []
+        self._skip_preds: list[Pred] = []
         self._dyn_preds: list[Pred] = []
         self._projection: list[str] | None = None
         self._virtual: bool = False
         self._row_ids: bool = False
         self._report: dict | None = None
         self._only_paths: set[str] | None = None
+        #: the route ``to_df`` took: "local" (a driver-side read) or "spark"
+        self.route: str | None = None
 
     # ---------- fluent config ----------
 
@@ -518,6 +521,16 @@ class DeltaScanBuilder:
         from duckdb_delta_spark.delta.predicates import parse_where
 
         self._preds.extend(parse_where(where))
+        return self
+
+    def skip_files_sql(self, where: str) -> "DeltaScanBuilder":
+        """Skip the files :meth:`filter_sql`'s parse of ``where`` rules
+        out, without filtering rows: the caller selects its rows by its
+        own condition as written (a DML masks exactly what its condition
+        matches). Raises ``ValueError`` outside the grammar."""
+        from duckdb_delta_spark.delta.predicates import parse_where
+
+        self._skip_preds.extend(parse_where(where))
         return self
 
     def dynamic_filter(
@@ -725,8 +738,8 @@ class DeltaScanBuilder:
         total = len(files)
         skipped_partition = skipped_stats = skipped_dynamic = 0
         pairs: list[tuple[Pred, bool]] = []
-        if self._preds and self.pushdown in ("all", "constant_only"):
-            pairs += [(p, False) for p in self._preds]
+        if self.pushdown in ("all", "constant_only"):
+            pairs += [(p, False) for p in self._preds + self._skip_preds]
         if self._dyn_preds and self.pushdown in ("all", "dynamic_only"):
             pairs += [(p, True) for p in self._dyn_preds]
         if pairs:
@@ -848,7 +861,7 @@ class DeltaScanBuilder:
             "files_skipped_by_partition": skipped_partition,
             "files_skipped_by_stats": skipped_stats,
             "files_skipped_by_dynamic": skipped_dynamic,
-            "filters": [repr(p) for p in self._preds],
+            "filters": [repr(p) for p in self._preds + self._skip_preds],
             "filters_dynamic": [repr(p) for p in self._dyn_preds],
         }
         return files
@@ -957,6 +970,7 @@ class DeltaScanBuilder:
         files = self._prune()
 
         def plan(route: str) -> None:
+            self.route = route
             emit("scan.plan", table_path=snap.log.table_path,
                  version=snap.version, route=route, **self._report)
 
@@ -972,7 +986,6 @@ class DeltaScanBuilder:
             pcols = [p for p in pcols if p in needed]
 
         has_dv = any(f.deletion_vector for f in files)
-        need_file_col = bool(pcols) or has_dv or self._virtual or self._row_ids
 
         if not files:
             plan("spark")
@@ -1022,15 +1035,19 @@ class DeltaScanBuilder:
         sel = [mapping.to_logical(p.name, f, mode)
                for f, p in zip(fields, phys_schema.fields)]
         if local:
-            # the local table already dropped DV-deleted rows; partition
-            # values take the same string → type conversion as the join
+            # the local table already dropped DV-deleted rows and holds
+            # the virtual columns; partition values take the same
+            # string → type conversion as the join
             sel += [pv_string_to_col(F.col(f"__pv_{p}"), ptypes[p]).alias(p)
                     for p in pcols]
-            pcols, has_dv, need_file_col = [], False, False
-        if need_file_col:
-            sel.append(F.col("_metadata.file_path").alias(FILE_COL))
-        if has_dv or self._virtual or self._row_ids:
-            sel.append(F.col("_metadata.row_index").alias(ROW_COL))
+            if self._virtual:
+                sel += [FILE_COL, ROW_COL, "delta_file_number"]
+            pcols, has_dv = [], False
+        else:
+            if pcols or has_dv or self._virtual or self._row_ids:
+                sel.append(F.col("_metadata.file_path").alias(FILE_COL))
+            if has_dv or self._virtual or self._row_ids:
+                sel.append(F.col("_metadata.row_index").alias(ROW_COL))
         if mat_id:
             sel.append(F.col(f"`{mat_id}`").alias("__mat_row_id"))
         if mat_ver:
@@ -1082,16 +1099,15 @@ class DeltaScanBuilder:
                 )
             df = df.drop("_base_row_id", "__mat_row_id", "__mat_rcv")
         if self._virtual:
+            df = (df.withColumn("filename", F.col(FILE_COL))
+                  .withColumn("file_row_number", F.col(ROW_COL)))
+        if self._virtual and not local:
             # file→number is known driver-side (same ordering dense_rank
             # would produce) — a broadcast map join keeps the scan fully
             # partitioned; a global Window.orderBy(file) would funnel the
             # whole table through ONE partition at 100 TB.
-            uris = sorted(
-                self._spark_file_uri(f.absolute_path(snap.log.table_path))
-                for f in files
-            )
-            fmap = _local_df(self.spark, 
-                [(u, i + 1) for i, u in enumerate(uris)],
+            fmap = _local_df(self.spark,
+                [(u, i + 1) for i, u in enumerate(self._file_uris(files))],
                 T.StructType(
                     [
                         T.StructField(FILE_COL, T.StringType()),
@@ -1099,11 +1115,7 @@ class DeltaScanBuilder:
                     ]
                 ),
             )
-            df = (
-                df.withColumn("filename", F.col(FILE_COL))
-                .withColumn("file_row_number", F.col(ROW_COL))
-                .join(F.broadcast(fmap), on=FILE_COL, how="left")
-            )
+            df = df.join(F.broadcast(fmap), on=FILE_COL, how="left")
 
         keep_row_col = self._virtual
         drop = [c for c in (FILE_COL, ROW_COL) if c in df.columns and not keep_row_col]
@@ -1133,18 +1145,21 @@ class DeltaScanBuilder:
         The relation holds ``phys_schema``'s columns without the rows the
         files' deletion vectors delete, plus one ``__pv_<col>`` string
         column per partition column from the log; ``to_df`` applies the
-        same renames, casts and filters to it as to the Spark scan.
+        same renames, casts and filters to it as to the Spark scan. With
+        virtual columns requested it also holds each row's file URI, its
+        physical row index (taken before DV-deleted rows drop) and the
+        file's ``delta_file_number``, so ``to_df`` adds no join.
         ``LOCAL_SCAN_MAX_BYTES`` bounds both the kept add-file bytes and
         the decoded Arrow bytes (checked batch by batch, so a small but
         highly compressed file cannot fill the driver).
         Spark's parquet reader stays the reference: anything whose reading
         could differ (a column missing from a file under its exact name,
         an Arrow cast that fails, types that need time-zone handling, a
-        date before the Gregorian cutover) or that needs file metadata goes
+        date before the Gregorian cutover), id mapping and row ids go
         there."""
         snap = self.snapshot
         left = self.LOCAL_SCAN_MAX_BYTES
-        if (self._virtual or self._row_ids
+        if (self._row_ids
                 or snap.column_mapping_mode == "id"
                 or not phys_schema.fields
                 or len(files) > self.LOCAL_SCAN_MAX_SHARE * self._report["files_total"]
@@ -1166,6 +1181,12 @@ class DeltaScanBuilder:
         names = phys_schema.names
         keys = self._pv_keys(pcols)
         dates = mapping.contains_type(phys_schema, T.DateType)
+        extra = [T.StructField(f"__pv_{p}", T.StringType()) for p in pcols]
+        if self._virtual:
+            rank = {u: i + 1 for i, u in enumerate(self._file_uris(files))}
+            extra += [T.StructField(FILE_COL, T.StringType()),
+                      T.StructField(ROW_COL, T.LongType()),
+                      T.StructField("delta_file_number", T.IntegerType())]
         parts = []
         try:
             target = to_arrow_schema(mapping.nullable_type(phys_schema))
@@ -1182,16 +1203,25 @@ class DeltaScanBuilder:
                         batches.append(b)
                     t = (pa.Table.from_batches(batches) if batches
                          else pf.schema_arrow.empty_table()).select(names)
+                t = t.cast(target)
+                if self._virtual:
+                    # the physical row index, taken before DV-deleted
+                    # rows drop (what ``_metadata.row_index`` gives)
+                    uri = self._spark_file_uri(path)
+                    n = t.num_rows
+                    t = (t.append_column(FILE_COL, pa.array([uri] * n, pa.string()))
+                         .append_column(ROW_COL, pa.array(np.arange(n, dtype=np.int64)))
+                         .append_column("delta_file_number",
+                                        pa.array([rank[uri]] * n, pa.int32())))
                 if f.deletion_vector:
                     keep = np.ones(t.num_rows, dtype=bool)
                     keep[read_dv_from_descriptor(
                         f.deletion_vector, table_path).astype(np.int64)] = False
                     t = t.filter(pa.array(keep))
-                t = t.cast(target)
                 for p, v in zip(pcols, _pv_strings(f, keys)):
                     t = t.append_column(
                         f"__pv_{p}", pa.array([v] * t.num_rows, pa.string()))
-                parts.append(t)
+                parts.append(t.select(names + [x.name for x in extra]))
         except (pa.ArrowException, OSError, ValueError, TypeError,
                 IndexError):
             # the Spark scan reads it instead, or raises the same error
@@ -1201,9 +1231,14 @@ class DeltaScanBuilder:
         # (a file whose rows a DV all deletes, or a 0-row file)
         return self.spark.createDataFrame(
             pa.concat_tables(parts).combine_chunks(),
-            mapping.nullable_type(T.StructType(
-                list(phys_schema.fields)
-                + [T.StructField(f"__pv_{p}", T.StringType()) for p in pcols])))
+            mapping.nullable_type(T.StructType(list(phys_schema.fields) + extra)))
+
+    def _file_uris(self, files: list[AddFile]) -> list[str]:
+        """The ``_metadata.file_path`` URIs of ``files``, sorted: a kept
+        file's ``delta_file_number`` is its rank here, from 1."""
+        table_path = self.snapshot.log.table_path
+        return sorted(self._spark_file_uri(f.absolute_path(table_path))
+                      for f in files)
 
     @staticmethod
     def _spark_file_uri(path: str) -> str:

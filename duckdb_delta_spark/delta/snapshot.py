@@ -239,6 +239,8 @@ class Snapshot:
         self._replay: Replay | None = None
         self._last: tuple | None = None
         self._sidecars: tuple[tuple | None, ...] = ()
+        #: (schemaString, its parsed StructType): parsed once per text
+        self._schema: tuple[str, StructType] | None = None
 
     def __copy__(self) -> "Snapshot":
         """A shallow copy a caller may alter (e.g. a metadata overlay to
@@ -341,6 +343,7 @@ class Snapshot:
         snap.domain_metadata = dict(self.domain_metadata)
         snap.checkpoint_version = self.checkpoint_version
         snap._sidecars = self._sidecars
+        snap._schema = self._schema
         return snap
 
     def _built(self, replay_start: int, incremental: bool,
@@ -571,13 +574,21 @@ class Snapshot:
 
     @property
     def schema(self) -> StructType:
+        """The parsed ``schemaString``, memoized on its text: the same
+        object while the text stays, so identity checks hold across
+        successor snapshots, and a copy given other metadata (MERGE's
+        widened overlay) parses its own. Treat it as read-only."""
         raw = self.metadata.get("schemaString")
         if not raw:
             raise SchemaError(f"metaData.schemaString missing at {self.log.table_path}")
+        if self._schema is not None and self._schema[0] == raw:
+            return self._schema[1]
         try:
-            return StructType.fromJson(json.loads(raw))
+            parsed = StructType.fromJson(json.loads(raw))
         except Exception as e:  # noqa: BLE001 - surface as taxonomy error
             raise SchemaError(f"unparseable schemaString: {e}") from None
+        self._schema = (raw, parsed)
+        return parsed
 
     @property
     def partition_columns(self) -> list[str]:

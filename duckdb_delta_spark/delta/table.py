@@ -51,12 +51,17 @@ class DeltaTable:
         ``version``."""
         self.log = DeltaLog(path, log_tail=log_tail)
         self.path = self.log.table_path
+        segment = None
         if timestamp is not None:
             if version is not None:
                 raise ValueError("pass either version or timestamp, not both")
-            version = self.log.version_at_timestamp(_to_epoch_ms(timestamp))
+            # one listing resolves the timestamp and builds the snapshot
+            segment = self.log.list_log_files()
+            version = self.log.version_at_timestamp(
+                _to_epoch_ms(timestamp), segment)
         # ``snapshot`` serves as a base: reused or replayed forward
-        self.snapshot = Snapshot.build(self.log, version, base=snapshot)
+        self.snapshot = Snapshot.build(self.log, version, base=snapshot,
+                                       segment=segment)
         self.version = self.snapshot.version
 
     # ---------- read ----------

@@ -161,6 +161,55 @@ def _truncate_max(s: str) -> str | None:
     return None  # cannot bound — omit
 
 
+def _scan_fields(scan) -> dict:
+    """The ``route`` and ``n_files_scanned`` a DML's ``*.apply`` event
+    reports of the scan it read its matches from."""
+    return {"route": scan.route,
+            "n_files_scanned": scan.skip_report()["files_scanned"]}
+
+
+def _build_dv(pdf, ctx: dict, table_path: str) -> dict:
+    """One touched file's DV result from its ``(f, r[, _live])`` rows
+    ``pdf``: f, n_src (input rows BEFORE dedup), n_fan (raw rows minus
+    distinct raw rows — >0 means the caller's join fanned out, e.g.
+    MERGE multi-match), n_new (distinct live rows), full, desc (JSON).
+    ``ctx`` maps a file uri to its (prior DV descriptor, numRecords).
+    Writes the merged bitmap unless every row of the file is deleted;
+    a group with no live rows returns n_new=0 and no descriptor."""
+    import numpy as np
+
+    from duckdb_delta_spark.delta import dv as dvmod
+
+    uri = pdf["f"].iloc[0]
+    n_src = len(pdf)
+    raw = pdf["r"].to_numpy(dtype="uint64")
+    n_fan = n_src - len(np.unique(raw))
+    live = pdf[pdf["_live"].astype(bool)] if "_live" in pdf.columns else pdf
+    rows = np.unique(live["r"].to_numpy(dtype="uint64"))
+    n_new = len(rows)
+    if n_new == 0:
+        # fan-out-only group (every match failed the clause condition):
+        # nothing to delete, no DV bin to orphan
+        return {"f": uri, "n_src": n_src, "n_fan": n_fan, "n_new": 0,
+                "full": False, "desc": None}
+    prior_desc, num_records = ctx.get(uri, (None, None))
+    if prior_desc:
+        prior = dvmod.read_dv_from_descriptor(prior_desc, table_path)
+        rows = np.union1d(rows, prior)
+    # numRecords == 0 with matched rows means the stat is wrong — never
+    # treat that as a full-file delete
+    full = bool(
+        num_records is not None and num_records > 0
+        and len(rows) >= num_records
+    )
+    desc = None
+    if not full:
+        desc = dvmod.write_dv_file(
+            table_path, [rows], seed=uuid.uuid4().hex)[0]
+    return {"f": uri, "n_src": n_src, "n_fan": n_fan, "n_new": n_new,
+            "full": full, "desc": None if desc is None else json.dumps(desc)}
+
+
 class DeltaWriter:
     """Writer for one table: create, append, DML, schema/property changes
     and maintenance. Each call plans its actions on the pinned snapshot
@@ -1453,15 +1502,20 @@ class DeltaWriter:
         bitmaps, the same mechanism delta-spark uses under
         ``delta.enableDeletionVectors``.
 
-        Scale shape: ONE distributed job finds matching rows (scanning
-        only stats-surviving files, predicate pushed to parquet row
-        groups), then ``groupBy(file).applyInPandas`` builds, merges
+        Scale shape: a SQL-string condition in the pushable grammar
+        first skips files on partition values and stats
+        (:meth:`_dml_scan`). When the kept files are few and small (the
+        scan's local-route gate), they are read on the driver and each
+        file's bitmap is built there, with no Spark job. Otherwise ONE
+        distributed job finds matching rows (predicate pushed to parquet
+        row groups), then ``groupBy(file).applyInPandas`` builds, merges
         (with any prior DV, decoded executor-side) and WRITES each
         file's roaring bitmap on the executor that owns the group. Only
         O(#touched-files) descriptor rows ever reach the driver, which
         turns them into the commit — deleting 10% of a 100 TB table
-        ships kilobytes, not billions of row indexes. Files whose every
-        live row matched are dropped outright (remove, no re-add).
+        ships kilobytes, not billions of row indexes. Either way the
+        bitmap comes from :func:`_build_dv`. Files whose every live row
+        matched are dropped outright (remove, no re-add).
 
         Spec compliance: the first DV write upgrades the protocol to
         (3, 7) + ``deletionVectors`` feature, and every remove carries
@@ -1473,16 +1527,14 @@ class DeltaWriter:
         """
         from pyspark.sql import functions as F
 
-        from duckdb_delta_spark.delta.scan import DeltaScanBuilder
-
         snap = self._snapshot
         self._assert_writable("DELETE", removes_rows=True)
         if _replayed(snap, txn_app_id, txn_version):
             return None
+        scan = self._dml_scan(snap, condition)
         if isinstance(condition, str):
             condition = F.expr(condition)
 
-        scan = DeltaScanBuilder(snap, self.spark).with_virtual_columns()
         cdf = self._cdf_enabled(snap)
         rows = scan.to_df().where(condition)
         cdc_moved: list[tuple[str, dict]] = []
@@ -1493,7 +1545,7 @@ class DeltaWriter:
             F.col("filename").alias("f"),
             F.col("file_row_number").alias("r"),
         )
-        results = self._dv_results(snap, matched)
+        results = self._dv_results(snap, matched, scan.route == "local")
         if not results:
             return None
         if cdf and not all(r["full"] for r in results):
@@ -1542,8 +1594,26 @@ class DeltaWriter:
             version=version,
             n_deleted=n_deleted,
             n_files=len(results),
+            **_scan_fields(scan),
         )
         return version, n_deleted
+
+    def _dml_scan(self, snap: Snapshot, condition):
+        """The scan a DV-masking DML (DELETE, UPDATE, replaceWhere) reads
+        its matches from, with virtual columns. A SQL-string
+        ``condition`` in the pushable grammar skips files on partition
+        values and stats; the rows are still chosen by ``condition`` as
+        written. A Column, or a string outside the grammar, scans every
+        file."""
+        from duckdb_delta_spark.delta.scan import DeltaScanBuilder
+
+        scan = DeltaScanBuilder(snap, self.spark).with_virtual_columns()
+        if isinstance(condition, str):
+            try:
+                scan.skip_files_sql(condition)
+            except ValueError:
+                pass
+        return scan
 
     def _by_uri(self, snap: Snapshot) -> dict:
         from duckdb_delta_spark.delta.scan import DeltaScanBuilder
@@ -1555,82 +1625,42 @@ class DeltaWriter:
             for f in snap.add_files()
         }
 
-    def _dv_results(self, snap: Snapshot, matched: DataFrame) -> list:
-        """Distributed DV construction: ``matched`` is (f: file uri, r: row
-        index) plus an optional ``_live`` boolean — rows with
-        ``_live=false`` are counted for fan-out detection but NOT deleted
-        (MERGE ships its raw ON-join here so the multi-match probe rides
-        the same job instead of a second target×source join). Each file
-        group builds, merges (with any prior DV) and WRITES its roaring
-        bitmap executor-side; only descriptor rows return. Columns: f,
-        n_src (input rows BEFORE dedup), n_fan (raw rows minus distinct
-        raw rows — >0 means the caller's join fanned out, e.g. MERGE
-        multi-match), n_new (distinct live rows), full, desc(JSON).
-        Groups with no live rows return n_new=0 and no descriptor —
-        callers drop them before building remove/add actions."""
+    def _dv_results(self, snap: Snapshot, matched: DataFrame,
+                    local: bool = False) -> list:
+        """DV construction: ``matched`` is (f: file uri, r: row index)
+        plus an optional ``_live`` boolean — rows with ``_live=false`` are
+        counted for fan-out detection but NOT deleted (MERGE ships its raw
+        ON-join here so the multi-match probe rides the same job instead
+        of a second target×source join). Each file group goes through
+        :func:`_build_dv`, which builds, merges (with any prior DV) and
+        WRITES its roaring bitmap; only descriptor rows return.
+
+        Distributed by default: ``groupBy(f).applyInPandas`` runs the
+        groups executor-side. ``local``: ``matched`` reads a driver-side
+        scan (``DeltaScanBuilder.route == "local"``), so its rows are
+        collected without a Spark job and the groups are built on the
+        driver."""
         import pandas as pd
 
         by_uri = self._by_uri(snap)
-        # small per-file context shipped to executors: prior DV + row count
+        # small per-file context: prior DV + row count
         ctx = {
             uri: (f.deletion_vector, f.num_records) for uri, f in by_uri.items()
         }
         table_path = self.table_path
+        if local:
+            pdf = pd.DataFrame(matched.collect(), columns=matched.columns)
+            return [_build_dv(g, ctx, table_path)
+                    for _, g in pdf.groupby("f", sort=False)]
         ctx_bc = self.spark.sparkContext.broadcast(ctx)
 
-        def _build_dv(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            from duckdb_delta_spark.delta import dv as dvmod
-
-            uri = pdf["f"].iloc[0]
-            n_src = len(pdf)
-            raw = pdf["r"].to_numpy(dtype="uint64")
-            n_fan = n_src - len(np.unique(raw))
-            live = (
-                pdf[pdf["_live"].astype(bool)] if "_live" in pdf.columns
-                else pdf
-            )
-            rows = np.unique(live["r"].to_numpy(dtype="uint64"))
-            n_new = len(rows)
-            if n_new == 0:
-                # fan-out-only group (every match failed the clause
-                # condition): nothing to delete, no DV bin to orphan
-                return pd.DataFrame(
-                    {"f": [uri], "n_src": [n_src], "n_fan": [n_fan],
-                     "n_new": [0], "full": [False], "desc": [None]}
-                )
-            prior_desc, num_records = ctx_bc.value.get(uri, (None, None))
-            if prior_desc:
-                prior = dvmod.read_dv_from_descriptor(prior_desc, table_path)
-                rows = np.union1d(rows, prior)
-            # numRecords == 0 with matched rows means the stat is wrong —
-            # never treat that as a full-file delete
-            full = bool(
-                num_records is not None
-                and num_records > 0
-                and len(rows) >= num_records
-            )
-            desc = None
-            if not full:
-                desc = dvmod.write_dv_file(
-                    table_path, [rows], seed=uuid.uuid4().hex
-                )[0]
-            return pd.DataFrame(
-                {
-                    "f": [uri],
-                    "n_src": [n_src],
-                    "n_fan": [n_fan],
-                    "n_new": [n_new],
-                    "full": [full],
-                    "desc": [None if desc is None else json.dumps(desc)],
-                }
-            )
+        def _group(pdf: pd.DataFrame) -> pd.DataFrame:
+            return pd.DataFrame([_build_dv(pdf, ctx_bc.value, table_path)])
 
         return (
             matched.groupBy("f")
             .applyInPandas(
-                _build_dv,
+                _group,
                 "f string, n_src long, n_fan long, n_new long, "
                 "full boolean, desc string",
             )
@@ -1789,18 +1819,19 @@ class DeltaWriter:
         Column) evaluated against the pre-update row. Returns
         ``(version, rows_updated)`` or None when nothing matched.
 
-        Scale shape: the matched set streams through the same distributed
-        DV build as DELETE, and the updated images are one distributed
-        write job — driver handles only descriptors + the commit.
+        Scale shape: the matched set goes through the same file skipping
+        and DV build as DELETE — on the driver when the kept files are
+        few and small, else distributed — and the updated images are one
+        distributed write job; the driver handles only descriptors + the
+        commit.
         """
         from pyspark.sql import functions as F
-
-        from duckdb_delta_spark.delta.scan import DeltaScanBuilder
 
         snap = self._snapshot
         self._assert_writable("UPDATE", removes_rows=True)
         if _replayed(snap, txn_app_id, txn_version):
             return None
+        scan = self._dml_scan(snap, condition)
         if isinstance(condition, str):
             condition = F.expr(condition)
         schema = snap.schema
@@ -1808,11 +1839,15 @@ class DeltaWriter:
         assigned_exprs = _assignment_exprs(schema, assignments, F.col)
         assigned_tops = set(assigned_exprs)
 
-        scan = DeltaScanBuilder(snap, self.spark).with_virtual_columns()
         full = scan.to_df()
+        local = scan.route == "local"
+        matched = full.where(condition)
         # matched feeds two jobs (DV build + new-image write) — persist so
-        # the scan/filter runs once, spilling to disk if it doesn't fit
-        matched = full.where(condition).persist()
+        # the scan/filter runs once, spilling to disk if it doesn't fit.
+        # A deterministic filter over the driver-side relation evaluates
+        # alike twice, without the job a persist would cost
+        if not (local and _plan_all_deterministic(matched)):
+            matched = matched.persist()
         pinned: list = []
         try:
             results = self._dv_results(
@@ -1820,16 +1855,20 @@ class DeltaWriter:
                 matched.select(
                     F.col("filename").alias("f"), F.col("file_row_number").alias("r")
                 ),
+                local,
             )
             if not results:
                 return None
             n_updated = sum(r["n_new"] for r in results)
+            # a local relation splits over every core; a file scan of
+            # this little data reads as one partition, so one file
+            images = matched.coalesce(1) if local else matched
 
             def _assigned(name):
                 return assigned_exprs.get(name, F.col(name))
 
             # a whole-struct assignment conforms by name, like an insert
-            new_rows, _ = _conform_rows(matched.select(
+            new_rows, _ = _conform_rows(images.select(
                 *[_assigned(f.name).alias(f.name) for f in schema.fields]
             ), schema)
             # generated columns not explicitly assigned are RE-COMPUTED
@@ -1861,7 +1900,7 @@ class DeltaWriter:
             cdc_actions: list[dict] = []
             if self._cdf_enabled(snap):
                 data_cols = [F.col(f.name) for f in schema.fields]
-                cdc = matched.select(
+                cdc = images.select(
                     *data_cols, F.lit("update_preimage").alias("_change_type")
                 ).unionByName(
                     new_rows.select(
@@ -1898,6 +1937,7 @@ class DeltaWriter:
             table_path=self.table_path,
             version=version,
             n_updated=n_updated,
+            **_scan_fields(scan),
         )
         return version, n_updated
 
@@ -2350,8 +2390,6 @@ class DeltaWriter:
         """
         from pyspark.sql import functions as F
 
-        from duckdb_delta_spark.delta.scan import DeltaScanBuilder
-
         snap = self._snapshot
         self._assert_writable("OVERWRITE", removes_rows=True)
         # observability for foreachBatch sinks: callable predicates
@@ -2451,8 +2489,7 @@ class DeltaWriter:
                 # removes + adds, which readers derive CDF from directly
                 # (see below)
             else:
-                scan = DeltaScanBuilder(
-                    snap, self.spark).with_virtual_columns()
+                scan = self._dml_scan(snap, pred_str)
                 rows = scan.to_df().where(where)
 
             cdc_moved: list[tuple[str, dict]] = []
@@ -2464,7 +2501,8 @@ class DeltaWriter:
                     F.col("filename").alias("f"),
                     F.col("file_row_number").alias("r"),
                 )
-                results = self._dv_results(snap, matched)
+                results = self._dv_results(
+                    snap, matched, scan.route == "local")
             # Delta spec: with NO cdc actions in the commit, readers
             # derive CDF from add/remove (adds → 'insert', a dropped
             # path's live rows → 'delete') — exactly OVERWRITE's change

@@ -133,3 +133,113 @@ def test_foreign_struct_map_key_with_physical_names(spark, tdir):
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
     assert rows(spark.table("map_key_stream")) == want
+
+
+ELEM = T.StructType([T.StructField("x", T.LongType())])
+VAL = T.StructType([T.StructField("y", T.LongType())])
+NESTED = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("arr", T.ArrayType(ELEM)),
+    T.StructField("m", T.MapType(T.StringType(), VAL)),
+])
+
+
+def _ids(dt):
+    """(name, id, physical name) of every struct field under ``dt``."""
+    if isinstance(dt, T.StructType):
+        return [(f.name, f.metadata.get("delta.columnMapping.id"),
+                 f.metadata.get("delta.columnMapping.physicalName"))
+                for f in dt.fields] + [
+                    x for f in dt.fields for x in _ids(f.dataType)]
+    if isinstance(dt, T.ArrayType):
+        return _ids(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _ids(dt.keyType) + _ids(dt.valueType)
+    return []
+
+
+def test_assign_ids_maps_structs_in_arrays_and_maps():
+    """Fields of structs inside array elements and map values get ids and
+    physical names like every other nested field; an already-mapped column
+    whose array structs carry no mapping at all (written before they were
+    mapped, so its files hold them under logical names) keeps them so."""
+    from duckdb_delta_spark.delta.mapping import assign_ids
+
+    out, max_id = assign_ids(T.StructType(NESTED.fields[1:]))
+    assert max_id == 4
+    got = {name: (fid, phys) for name, fid, phys in _ids(out)}
+    assert sorted(fid for fid, _ in got.values()) == [1, 2, 3, 4]
+    assert all(phys.startswith("col-") for _, phys in got.values())
+
+    legacy = T.StructType([T.StructField(
+        "arr", T.ArrayType(ELEM), True,
+        {"delta.columnMapping.id": 1,
+         "delta.columnMapping.physicalName": "col-arr"})])
+    again, max_id = assign_ids(legacy, start_id=1)
+    assert max_id == 1
+    assert again == legacy
+
+
+@pytest.mark.parametrize("mode", ["name", "id"])
+def test_structs_in_arrays_and_maps_round_trip(spark, tdir, monkeypatch,
+                                               mode):
+    """A mapped table with structs inside an array and a map writes those
+    fields under their physical names and reads them back through the
+    Spark scan, the driver-side scan (name mode) and the change feed."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from duckdb_delta_spark.delta.scan import DeltaScanBuilder
+
+    w = DeltaWriter.create(spark, tdir, NESTED,
+                           configuration={"delta.columnMapping.mode": mode})
+    snap = DeltaTable(tdir).snapshot
+    assert snap.configuration["delta.columnMapping.maxColumnId"] == "5"
+    x = snap.schema["arr"].dataType.elementType["x"]
+    y = snap.schema["m"].dataType.valueType["y"]
+    for i in (1, 2):
+        w.append(spark.createDataFrame(
+            [(i, [(10 * i,)], {"k": (100 * i,)})], NESTED))
+    want = [(1, [10], {"k": 100}), (2, [20], {"k": 200})]
+
+    def rows(df):
+        return sorted((r["id"], [e["x"] for e in r["arr"]],
+                       {k: v["y"] for k, v in r["m"].items()})
+                      for r in df.collect())
+
+    assert rows(DeltaTable(tdir).to_df(spark)) == want
+    monkeypatch.setattr(DeltaScanBuilder, "LOCAL_SCAN_MAX_SHARE", 1.0)
+    sb = DeltaTable(tdir).scan(spark).filter_sql("id = 2")
+    assert rows(sb.to_df()) == want[1:]
+    assert sb.route == ("local" if mode == "name" else "spark")
+    assert rows(DeltaTable(tdir).changes(spark, 0, 2)) == want
+
+    f = pq.read_schema(glob.glob(f"{tdir}/*.parquet")[0])
+    phys = _arrow_names(f)
+    assert x.metadata["delta.columnMapping.physicalName"] in phys
+    assert y.metadata["delta.columnMapping.physicalName"] in phys
+    assert "x" not in phys and "y" not in phys
+
+
+def _arrow_names(schema):
+    """Every field name at every level of a pyarrow schema."""
+    import pyarrow as pa
+
+    out = []
+
+    def walk(t):
+        if pa.types.is_struct(t):
+            for i in range(t.num_fields):
+                out.append(t.field(i).name)
+                walk(t.field(i).type)
+        elif pa.types.is_list(t):
+            walk(t.value_type)
+        elif pa.types.is_map(t):
+            walk(t.key_type)
+            walk(t.item_type)
+
+    for fld in schema:
+        out.append(fld.name)
+        walk(fld.type)
+    return out

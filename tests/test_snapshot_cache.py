@@ -216,6 +216,52 @@ def test_version_bounded_changes_lists_once(spark, tmp_path, monkeypatch):
     assert counts.n["list_log_files"] == 1
 
 
+def test_timestamp_open_lists_once(tmp_path, monkeypatch):
+    """``DeltaTable(timestamp=...)`` resolves the timestamp and builds the
+    snapshot from one listing of ``_delta_log``."""
+    path = str(tmp_path / "t")
+    _raw_table(path, 4)
+    for v in range(4):
+        t = 1_000_000 + 1000 * v
+        os.utime(os.path.join(path, "_delta_log", f"{v:020d}.json"), (t, t))
+    counts = _Counts(monkeypatch)
+    for ms, version in ((1_002_000_500, 2), (2_000_000_000, 3)):
+        counts.reset()
+        assert DeltaTable(path, timestamp=ms).version == version
+        assert counts.n["list_log_files"] == 1
+
+
+def test_schema_parsed_once_per_schema_string(spark, tmp_path, monkeypatch):
+    """``Snapshot.schema`` parses ``schemaString`` once: the same object on
+    every access and across successor snapshots while the text stays, so
+    ``changes()``' schema-era walk takes its identity shortcut; a copy
+    given other metadata (MERGE's widened overlay) gets its own."""
+    path = str(tmp_path / "t")
+    w = DeltaWriter.create(spark, path, SCHEMA)
+    for i in range(3):
+        w.append(spark.createDataFrame([(i, i)], SCHEMA))
+    clear_snapshot_cache()
+    log = DeltaLog(path)
+    s1 = Snapshot.build(log, 1)
+    assert s1.schema is s1.schema
+    s2 = Snapshot.build(log, 2, base=s1, actions=log.read_commit(2))
+    assert s2.schema is s1.schema
+
+    overlay = copy.copy(s2)
+    wide = T.StructType(list(s2.schema.fields)
+                        + [T.StructField("j", T.LongType())])
+    overlay.metadata = dict(s2.metadata, schemaString=wide.json())
+    assert overlay.schema == wide and overlay.schema is overlay.schema
+    assert s2.schema.fieldNames() == ["k", "v"]
+
+    seen = []
+    real = Snapshot.schema.fget
+    monkeypatch.setattr(Snapshot, "schema", property(
+        lambda snap: seen.append(real(snap)) or seen[-1]))
+    assert DeltaTable(path).changes(spark, 0, 3).count() == 3
+    assert len(seen) > 3 and all(x is seen[0] for x in seen)
+
+
 # ---------------------------------------------------------------- threads
 
 
