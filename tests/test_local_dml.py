@@ -5,11 +5,14 @@ the deletion vectors are built there. Every case here runs the same op on
 two fresh copies of one table, once as the gate decides and once with the
 local route closed (``LOCAL_SCAN_MAX_BYTES = 0``). The two must leave the
 same rows, the same per-file DV cardinalities and the same commit shape
-(remove / add-with-DV / add / cdc), and return the same result."""
+(remove / add-with-DV / add / cdc), and return the same result. Each
+table is built once per module and copied for every run, so both runs of
+a case start from the same files."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,8 +128,23 @@ def _file_dvs(path):
     return sorted(out, key=repr)
 
 
-def _run(spark, path, build, op):
-    build(spark, path)
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory):
+    """``base(build)``: the table ``build`` makes, built on first use;
+    callers copy it, never write it."""
+    root = tmp_path_factory.mktemp("local_dml_base")
+    built = {}
+
+    def get(build):
+        if build not in built:
+            built[build] = build(spark, str(root / build.__name__.strip("_")))
+        return built[build]
+
+    return get
+
+
+def _run(spark, path, table, op):
+    shutil.copytree(table, path)
     events = []
     dlog.add_sink(events.append)
     try:
@@ -153,13 +171,14 @@ def _routes(events, name="scan.plan"):
 
 @pytest.mark.parametrize("name,build,op,route", CASES,
                          ids=[c[0] for c in CASES])
-def test_local_dml_matches_spark_route(spark, tmp_path, monkeypatch,
+def test_local_dml_matches_spark_route(spark, tmp_path, monkeypatch, base,
                                        name, build, op, route):
-    got, ev_gate = _run(spark, str(tmp_path / f"{name}_gate"), build, op)
+    got, ev_gate = _run(spark, str(tmp_path / f"{name}_gate"), base(build),
+                        op)
     with monkeypatch.context() as m:
         m.setattr(DeltaScanBuilder, "LOCAL_SCAN_MAX_BYTES", 0)
         ref, ev_spark = _run(spark, str(tmp_path / f"{name}_spark"),
-                             build, op)
+                             base(build), op)
     assert _routes(ev_gate)[0] == route  # the DML's own scan
     assert set(_routes(ev_spark)) == {"spark"}
     assert got == ref
@@ -171,11 +190,12 @@ def test_local_dml_matches_spark_route(spark, tmp_path, monkeypatch,
         assert got["shape"] == [("add", 5), ("remove", 2)]  # 11, 12 + 10..14
 
 
-def test_local_delete_runs_no_spark_job(spark, tmp_path):
+def test_local_delete_runs_no_spark_job(spark, tmp_path, base):
     """A DELETE whose condition keeps one small file plans the local route,
     skips the other files and starts no Spark job; ``delete.apply``
     carries the route and the files scanned."""
-    path = _plain(spark, str(tmp_path / "t"))
+    path = str(tmp_path / "t")
+    shutil.copytree(base(_plain), path)
     w = DeltaWriter(path, spark)
     sc = spark.sparkContext
     events = []
@@ -197,10 +217,11 @@ def test_local_delete_runs_no_spark_job(spark, tmp_path):
             for a in apply] == [("local", 1, 1)]
 
 
-def test_apply_events_name_the_route(spark, tmp_path):
+def test_apply_events_name_the_route(spark, tmp_path, base):
     """``update.apply`` and ``delete.apply`` report ``route`` and
     ``n_files_scanned``: a Column condition scans every file on Spark."""
-    path = _plain(spark, str(tmp_path / "t"))
+    path = str(tmp_path / "t")
+    shutil.copytree(base(_plain), path)
     w = DeltaWriter(path, spark)
     events = []
     dlog.add_sink(events.append)
