@@ -463,6 +463,54 @@ def _cmp(arr, op: str, value):
     }[op](arr, value)
 
 
+def _kind(v) -> str | None:
+    """The SQL type family of a predicate literal."""
+    if isinstance(v, bool):
+        return "boolean"
+    if isinstance(v, (int, float, Decimal)):
+        return "number"
+    if isinstance(v, _dt.datetime):
+        return "timestamp"
+    if isinstance(v, _dt.date):
+        return "date"
+    return "string" if isinstance(v, str) else None
+
+
+_TYPE_KINDS = ((T.BooleanType, "boolean"), (T.NumericType, "number"),
+               ((T.TimestampType, T.TimestampNTZType), "timestamp"),
+               (T.DateType, "date"), (T.StringType, "string"))
+
+
+def _literal_fits(p: Pred, schema: T.StructType) -> bool:
+    """Whether ``p`` may prune files: its literals are of the column's own
+    type family. Spark casts a literal of another family to the column's
+    type before it compares (``v = '10'`` on a long column matches 10),
+    while the stats and partition values would be compared in the
+    literal's family (as text there, where '9' > '10'), so such a
+    conjunct only filters rows."""
+    if p.op in ("is null", "is not null"):
+        return True
+    t: Any = schema
+    for name in p.column.split("."):
+        if not isinstance(t, T.StructType) or name not in t.names:
+            return False
+        t = t[name].dataType
+    kind = next((k for types, k in _TYPE_KINDS if isinstance(t, types)), None)
+    vals = p.value if p.op == "in" else [p.value]
+    return kind is not None and all(v is None or _kind(v) == kind
+                                    for v in vals)
+
+
+def _prunable(p, schema: T.StructType):
+    """``p`` without the conjuncts :func:`_literal_fits` rules out, or
+    None when none of it may prune."""
+    if isinstance(p, OrPred):
+        branches = [[q for q in br if _literal_fits(q, schema)]
+                    for br in p.branches]
+        return OrPred(branches) if all(branches) else None
+    return p if _literal_fits(p, schema) else None
+
+
 class DeltaScanBuilder:
     """Fluent scan over one snapshot. ``to_df()`` materializes the plan."""
 
@@ -482,7 +530,6 @@ class DeltaScanBuilder:
         self.spark = spark
         self.pushdown = pushdown
         self._preds: list[Pred] = []
-        self._skip_preds: list[Pred] = []
         self._dyn_preds: list[Pred] = []
         self._projection: list[str] | None = None
         self._virtual: bool = False
@@ -521,16 +568,6 @@ class DeltaScanBuilder:
         from duckdb_delta_spark.delta.predicates import parse_where
 
         self._preds.extend(parse_where(where))
-        return self
-
-    def skip_files_sql(self, where: str) -> "DeltaScanBuilder":
-        """Skip the files :meth:`filter_sql`'s parse of ``where`` rules
-        out, without filtering rows: the caller selects its rows by its
-        own condition as written (a DML masks exactly what its condition
-        matches). Raises ``ValueError`` outside the grammar."""
-        from duckdb_delta_spark.delta.predicates import parse_where
-
-        self._skip_preds.extend(parse_where(where))
         return self
 
     def dynamic_filter(
@@ -739,10 +776,13 @@ class DeltaScanBuilder:
         skipped_partition = skipped_stats = skipped_dynamic = 0
         pairs: list[tuple[Pred, bool]] = []
         if self.pushdown in ("all", "constant_only"):
-            pairs += [(p, False) for p in self._preds + self._skip_preds]
+            pairs += [(p, False) for p in self._preds]
         if self._dyn_preds and self.pushdown in ("all", "dynamic_only"):
             pairs += [(p, True) for p in self._dyn_preds]
         if pairs:
+            schema = self.snapshot.schema
+            pairs = [(q, d) for p, d in pairs
+                     if (q := _prunable(p, schema)) is not None]
             pcols = self.snapshot.partition_columns
             # generated-column partition pruning (delta-spark parity): a
             # partition column generated by a monotonic expression over a
@@ -861,7 +901,7 @@ class DeltaScanBuilder:
             "files_skipped_by_partition": skipped_partition,
             "files_skipped_by_stats": skipped_stats,
             "files_skipped_by_dynamic": skipped_dynamic,
-            "filters": [repr(p) for p in self._preds + self._skip_preds],
+            "filters": [repr(p) for p in self._preds],
             "filters_dynamic": [repr(p) for p in self._dyn_preds],
         }
         return files
@@ -1117,10 +1157,16 @@ class DeltaScanBuilder:
             )
             df = df.join(F.broadcast(fmap), on=FILE_COL, how="left")
 
-        keep_row_col = self._virtual
-        drop = [c for c in (FILE_COL, ROW_COL) if c in df.columns and not keep_row_col]
-        if drop:
-            df = df.drop(*drop)
+        if self._virtual:
+            # one column order on both routes (the Spark route's joins
+            # put their key first)
+            virtual = [FILE_COL, ROW_COL, "filename", "file_row_number",
+                       "delta_file_number"]
+            df = df.select(*[F.col("`" + c.replace("`", "``") + "`")
+                             for c in df.columns if c not in virtual],
+                           *virtual)
+        else:
+            df = df.drop(*[c for c in (FILE_COL, ROW_COL) if c in df.columns])
 
         # exact row-level filtering on top of file pruning (pruning is only
         # conservative); Catalyst pushes these to parquet row groups.

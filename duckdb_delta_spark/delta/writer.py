@@ -1602,15 +1602,15 @@ class DeltaWriter:
         """The scan a DV-masking DML (DELETE, UPDATE, replaceWhere) reads
         its matches from, with virtual columns. A SQL-string
         ``condition`` in the pushable grammar skips files on partition
-        values and stats; the rows are still chosen by ``condition`` as
-        written. A Column, or a string outside the grammar, scans every
-        file."""
+        values and stats (:meth:`DeltaScanBuilder.filter_sql`); the
+        caller still filters the rows by ``condition`` as written. A
+        Column, or a string outside the grammar, scans every file."""
         from duckdb_delta_spark.delta.scan import DeltaScanBuilder
 
         scan = DeltaScanBuilder(snap, self.spark).with_virtual_columns()
         if isinstance(condition, str):
             try:
-                scan.skip_files_sql(condition)
+                scan.filter_sql(condition)
             except ValueError:
                 pass
         return scan

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 
 import pytest
@@ -12,12 +11,9 @@ sys.path.insert(0, "/root/repo")
 def spark():
     from duckdb_delta_spark.session import get_spark
 
-    # one Spark thread per core the run is given (SPARK_GRAFT_CPUS, else
-    # the host's), kept within 4..8: the tests' file layouts follow the
-    # default parallelism (an unpartitioned append writes one file per
-    # partition), and more threads than cores only queue tiny tasks
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count() or 8
-    s = get_spark("pytest", cpus=min(8, max(4, cpus)))
+    # a fixed thread count keeps the tests' file layouts the same on
+    # every host (an unpartitioned append writes one file per partition)
+    s = get_spark("pytest", cpus=4)
     yield s
 
 

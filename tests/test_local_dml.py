@@ -21,7 +21,7 @@ from duckdb_delta_spark import DeltaTable, DeltaWriter
 from duckdb_delta_spark.delta import logging as dlog
 from duckdb_delta_spark.delta.log import DeltaLog
 from duckdb_delta_spark.delta.mapping import nullable_type
-from duckdb_delta_spark.delta.scan import DeltaScanBuilder
+from duckdb_delta_spark.delta.scan import FILE_COL, ROW_COL, DeltaScanBuilder
 
 ROWS = 320
 FILES = 32  # ten rows a file: a key-range condition keeps 1-2 files
@@ -188,6 +188,87 @@ def test_local_dml_matches_spark_route(spark, tmp_path, monkeypatch, base,
         assert got["shape"] == [("remove", None)]
     if name == "prior_dv":
         assert got["shape"] == [("add", 5), ("remove", 2)]  # 11, 12 + 10..14
+
+
+def _mixed(spark, path):
+    """Twelve files, one for each ``g`` in 0..11, holding the ids g and
+    g + 12: ``v`` (twice the id) spans one- and two-digit values in most
+    of them, and ``ts`` is the id in hours past 2024-01-01 00:00 UTC."""
+    i = F.col("id")
+    df = spark.range(0, 24, 1, 1).select(
+        i, (i * 2).alias("v"), (i % 12).cast("int").alias("g"),
+        F.timestamp_seconds(F.lit(1704067200) + i * 3600).alias("ts"))
+    DeltaWriter.create(spark, path, nullable_type(df.schema),
+                       partition_by=["g"])
+    DeltaWriter(path, spark).append(df)
+    return path
+
+
+def _replace_g(spark, w):
+    df = spark.createDataFrame([(100 + g, 0, g) for g in (9, 10, 11)],
+                               "id long, v long, g int")
+    return w.overwrite(df.withColumn("ts", F.timestamp_seconds(F.lit(0))),
+                       where="g >= '9'")
+
+
+#: conditions whose literal is not of the column's type: Spark casts the
+#: literal to the column's type, so as text the stats would rule out
+#: files that hold matches ('8' > '32', '10' < '9', 'T' > ' ')
+MIXED = [
+    ("delete_long", _delete("v = '8'")),
+    ("delete_int_partition", _delete("g >= '9'")),
+    ("delete_timestamp", _delete("ts < '2024-01-01 05:00:00'")),
+    ("update_long",
+     lambda spark, w: w.update("v = '8'", {"v": "v + 1"})),
+    ("replace_where_int_partition", _replace_g),
+]
+
+
+@pytest.mark.parametrize("name,op", MIXED, ids=[c[0] for c in MIXED])
+def test_mixed_type_literal_matches_unpruned_run(spark, tmp_path,
+                                                 monkeypatch, base, name,
+                                                 op):
+    """A literal of another type than its column skips no file: the DML
+    leaves the rows a run that scans every file leaves."""
+    got, _ = _run(spark, str(tmp_path / "pruned"), base(_mixed), op)
+    with monkeypatch.context() as m:
+        m.setattr(DeltaScanBuilder, "filter_sql", lambda self, where: self)
+        ref, _ = _run(spark, str(tmp_path / "unpruned"), base(_mixed), op)
+    assert got == ref
+    assert got["result"] is not None
+    if name.startswith(("delete", "update")):
+        assert got["result"][1] > 0
+
+
+@pytest.mark.parametrize("cond", ["v = '8'", "g >= '9'",
+                                  "ts < '2024-01-01 05:00:00'"])
+def test_mixed_type_literal_scan_keeps_matches(spark, base, cond):
+    """A read through ``filter_sql`` returns the rows Spark's filter does."""
+    path = base(_mixed)
+    got = DeltaTable(path).scan(spark).filter_sql(cond).to_df().collect()
+    ref = DeltaTable(path).to_df(spark).where(cond).collect()
+    assert ref and sorted(got, key=repr) == sorted(ref, key=repr)
+
+
+@pytest.mark.parametrize("build", [_prior_dv, _partitioned])
+def test_virtual_columns_same_order_on_both_routes(spark, monkeypatch, base,
+                                                   build):
+    """A virtual-column scan gives the same columns, in the same order, and
+    the same rows on the local route as on the Spark route."""
+    def scan():
+        sb = DeltaScanBuilder(DeltaTable(base(build)).snapshot, spark)
+        sb = sb.with_virtual_columns().filter_sql("id >= 10 AND id < 15")
+        df = sb.to_df()
+        return sb.route, df.columns, sorted(df.collect(), key=repr)
+
+    local = scan()
+    with monkeypatch.context() as m:
+        m.setattr(DeltaScanBuilder, "LOCAL_SCAN_MAX_BYTES", 0)
+        ref = scan()
+    assert (local[0], ref[0]) == ("local", "spark")
+    assert local[1:] == ref[1:]
+    assert local[1][-5:] == [FILE_COL, ROW_COL, "filename",
+                             "file_row_number", "delta_file_number"]
 
 
 def test_local_delete_runs_no_spark_job(spark, tmp_path, base):
